@@ -261,8 +261,8 @@ def main() -> None:
 
     # best-of-5, matching the headline/sf1 sections (round-6 verdict
     # task 2: the r6 artifact recorded q123 at 2.55 s off one contended
-    # draw when idle draws measure 0.91 s — model-fit queries are
-    # _NO_PLAN_CACHE and have the highest variance, so they need the
+    # draw when idle draws measure 0.91 s — model-fit queries refit on
+    # every build and have the highest variance, so they need the
     # most samples, not the fewest)
     pipeline_total_median = 0.0
     for name in PIPELINE:

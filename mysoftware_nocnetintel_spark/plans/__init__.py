@@ -135,102 +135,3 @@ ORACLES = {
     **_O_CORE, **_O_EXT, **_O_ML, **_O_EXTRA, **_O_R4, **_O_R5,
     **_O_R6, **_O_R7, **_O_R8, **_O_R9, **_O_R10, **_O_R11,
 }
-
-
-# Opt-in SERVING-MODE plan cache (the DataFrame analogue of a prepared
-# statement): repeated invocations of the same (query, sf_dir) on one
-# session reuse the built DataFrame instead of re-running plan
-# construction through py4j (~40 ms/query, GIL-serialized in a concurrent
-# batch — measured ~0.1 s of bench's 10-query batch wall). DataFrames are
-# immutable, so reuse is thread-safe; the cache is keyed by session like
-# the table cache and is OFF by default (the driver's correctness path
-# always builds fresh plans). Only zero-kwarg invocations are cached.
-_PLAN_CACHE_ENABLED = False
-_PLAN_CACHE: dict = {}
-
-# Builds that materialize state at construction time (iterative
-# localCheckpoint chains, driver-side k-means/model fits, collected Bloom
-# bitmaps): excluded from the plan cache so every invocation is an honest
-# end-to-end recompute (see the wrapper comment below).
-_NO_PLAN_CACHE = {
-    "q37_minhash_neardup",
-    "q38_simhash_neardup",  # r12: hamming_band_pairs checkpoints signatures
-    "q48_ann_ivf",
-    "q49_forecast_score",
-    "q51_dispatch_plan",
-    "q76_ann_pq",
-    "q90_ann_ivfpq",
-    "q91_dedup_clusters",
-    "q92_ann_opq",
-    "q93_dedup_keep_one",
-    "q99_neardup_clusters",
-    "q103_bloom_prune",
-    "q107_decontamination",
-    "q110_pagerank",
-    "q123_semdedup",
-    "q125_mllib_pipeline",
-    "q146_bpe_pipeline",  # trains the BPE merge loop at build time
-    # round-8 media/index tiers: localCheckpoint'd base media (result
-    # state, not a plan) and/or index builds + driver-collected probe
-    # rows at build time — caching the DataFrame would pin stale state
-    "q147_image_neardup",
-    "q149_audio_neardup",
-    "q151_video_neardup",
-    "q152_incremental_neardup",  # rebuilds the signature index per call
-    "q153_ann_index",
-    "q154_text_semantic_search",
-    "q156_media_index",  # rebuilds the hamming index per call
-    "q157_partition_drop",  # lands + drops a scratch Delta table per call
-    "q158_partition_drop_iceberg",  # same lifecycle, Iceberg format
-    "q159_dv_read",  # lands + MOR-deletes + v3-converts a scratch table
-    "q160_dv_write",  # lands + v3-converts + DV-deletes a scratch table
-}
-
-
-def enable_plan_cache(on: bool = True) -> None:
-    """Caveats (cache is OFF by default): a cached DataFrame pins the file
-    listing captured when the plan was built — if the parquet under sf_dir
-    is REGENERATED mid-session, call ``clear_plan_cache()`` (or toggle off/
-    on) or cached plans will read the stale index. Entries for other
-    (stopped) sessions are evicted lazily on the next cache insert."""
-    global _PLAN_CACHE_ENABLED
-    _PLAN_CACHE_ENABLED = on
-    if not on:
-        _PLAN_CACHE.clear()
-
-
-def clear_plan_cache() -> None:
-    _PLAN_CACHE.clear()
-
-
-def _plan_cached(name, fn):
-    import functools
-
-    @functools.wraps(fn)
-    def wrapper(spark, sf_dir, **kwargs):
-        # Queries whose BUILD embeds materializable state (localCheckpoint
-        # of an iteration/intermediate, a driver-side centroid fit / model
-        # fit / collected bitmap) are excluded: reusing their built
-        # DataFrame would short-circuit recompute into a result-cache read
-        # — benchmarks over them would silently measure block reads, not
-        # query execution.
-        if not _PLAN_CACHE_ENABLED or kwargs or name in _NO_PLAN_CACHE:
-            return fn(spark, sf_dir, **kwargs)
-        from ..sources.registry import _session_key
-
-        sk = _session_key(spark)
-        key = (sk, sf_dir, name)
-        if key not in _PLAN_CACHE:
-            # Lazy cross-session eviction: plans built on a stopped session
-            # are unusable (their py4j refs are dead), so drop every entry
-            # keyed to a different session before inserting. Bounds the
-            # cache at one session x registry size.
-            for k in [k for k in _PLAN_CACHE if k[0] != sk]:
-                del _PLAN_CACHE[k]
-            _PLAN_CACHE[key] = fn(spark, sf_dir)
-        return _PLAN_CACHE[key]
-
-    return wrapper
-
-
-QUERIES = {k: _plan_cached(k, v) for k, v in QUERIES.items()}

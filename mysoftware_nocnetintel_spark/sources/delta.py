@@ -36,6 +36,8 @@ from glob import glob
 
 from pyspark.sql import DataFrame
 
+from .commit_retry import CommitConflict, discard, recompute, retry
+
 _WRITER_TAG = "mysoftware-nocnetintel-spark-minimal"
 
 
@@ -240,7 +242,7 @@ def _schema_sig(schema_json: str) -> list[tuple[str, object]]:
     return sorted((f["name"], json.dumps(f["type"])) for f in s["fields"])
 
 
-class DeltaCommitConflict(RuntimeError):
+class DeltaCommitConflict(CommitConflict):
     """Another writer committed this log version first. Appends retry
     internally (new data files have unique names and adds commute, as
     long as the schema/partition layout didn't change underneath), and
@@ -259,53 +261,13 @@ def _layout_sig(state: dict):
     )
 
 
-def _retry_recompute(fn):
-    """Auto-retry (3 attempts, jittered growing backoff) for
-    RECOMPUTABLE Delta commits — maintenance verbs that reload the table
-    head on entry and re-derive their whole action list, so re-running
-    against the winner's state is semantically a fresh invocation (the
-    Delta twin of iceberg's ``_retry_on_conflict``). The verb itself
-    must clean its staged files before re-raising the conflict."""
-    import functools
-    import random
-
-    @functools.wraps(fn)
-    def wrapper(*args, **kwargs):
-        last: DeltaCommitConflict | None = None
-        for attempt in range(3):
-            if attempt:
-                time.sleep(random.uniform(0, 0.05 * (2**attempt)))
-            try:
-                return fn(*args, **kwargs)
-            except DeltaCommitConflict as e:
-                last = e
-        raise last
-
-    return wrapper
-
-
-def _rescan_retry(fn, attempts: int = 3):
-    """SNAPSHOT-ISOLATION RE-SCAN RETRY (round 8, opt-in via the verbs'
-    ``on_conflict="rescan"``; the Delta twin of iceberg._rescan_retry):
-    when a data-semantic verb surfaces a conflict that validated retry
-    could not absorb, re-run the WHOLE verb against the winner's head —
-    a fresh invocation replays the log, re-derives every decision
-    (matched keys, touched files, DV coordinates), and commits against
-    the new state: the serial order "winner first, then this verb".
-    Jittered growing backoff; losing attempts already cleaned their
-    staged files/DV bins. The caller's source/predicate re-evaluates
-    per attempt, so it must be deterministic."""
-    import random
-
-    last: DeltaCommitConflict | None = None
-    for attempt in range(attempts):
-        if attempt:
-            time.sleep(random.uniform(0, 0.05 * (2**attempt)))
-        try:
-            return fn()
-        except DeltaCommitConflict as e:
-            last = e
-    raise last
+def _discard_adds(root: str, actions: list[dict]) -> None:
+    """Remove the data files a lost commit's add actions staged."""
+    discard(
+        os.path.join(root, a["add"]["path"])
+        for a in actions
+        if (a.get("add") or {}).get("path")
+    )
 
 
 def _commit_data_version(
@@ -325,65 +287,48 @@ def _commit_data_version(
     any touched file fails validation, this verb's NEWLY staged data
     files are removed (re-adds of pre-existing files are left alone),
     and the conflict surfaces for the caller to re-decide."""
-    import random
 
-    last: DeltaCommitConflict | None = None
-    for attempt in range(3):
-        if attempt:
-            time.sleep(random.uniform(0, 0.05 * (2**attempt)))
-        try:
-            _commit_version(log_dir, version, actions)
-            return version
-        except DeltaCommitConflict as e:
-            last = e
-            state = _replay_state(log_dir)
-            meta = state.get("meta") or {}
-            ok = (
-                (meta.get("configuration") or {}).get("writer")
-                == _WRITER_TAG
-                and _layout_sig(state) == _layout_sig(base_state)
-                and all(
-                    state["live"].get(rel) == base_state["live"].get(rel)
-                    for rel in touched
-                )
+    def attempt() -> int:
+        _commit_version(log_dir, version, actions)
+        return version
+
+    def revalidate(conflict: CommitConflict) -> None:
+        nonlocal version
+        state = _replay_state(log_dir)
+        meta = state.get("meta") or {}
+        ok = (
+            (meta.get("configuration") or {}).get("writer") == _WRITER_TAG
+            and _layout_sig(state) == _layout_sig(base_state)
+            and all(
+                state["live"].get(rel) == base_state["live"].get(rel)
+                for rel in touched
             )
-            if not ok:
-                root = os.path.dirname(log_dir)
-                dv_bins: set[str] = set()
-                for a in actions:
-                    add = a.get("add") or {}
-                    rel = add.get("path")
-                    if rel and rel not in base_state["live"]:
-                        try:
-                            os.remove(os.path.join(root, rel))
-                        except OSError:
-                            pass
-                    # a MOR re-add whose DV descriptor is NEW relative to
-                    # base_state references a bin file this failed attempt
-                    # wrote (every MOR commit mints a fresh UUID file, so
-                    # no base entry can share it) — delete it too, or the
-                    # bin strands as an orphan (round-7 advisor). Several
-                    # re-adds span one file; the set dedups.
-                    dv = add.get("deletionVector")
-                    if (
-                        rel
-                        and dv
-                        and dv
-                        != (base_state["live"].get(rel) or {}).get(
-                            "deletionVector"
-                        )
-                    ):
-                        p = _dv_rel_path(dv)
-                        if p:
-                            dv_bins.add(os.path.join(root, p))
-                for p in dv_bins:
-                    try:
-                        os.remove(p)
-                    except OSError:
-                        pass
-                raise
-            version = state["version"] + 1
-    raise last
+        )
+        if not ok:
+            base_live = base_state["live"]
+            adds = [
+                a["add"] for a in actions if (a.get("add") or {}).get("path")
+            ]
+            staged = {a["path"] for a in adds if a["path"] not in base_live}
+            # a MOR re-add whose DV descriptor is NEW relative to
+            # base_state references a bin file this failed attempt wrote
+            # (every MOR commit mints a fresh UUID file, so no base entry
+            # can share it) — delete it too, or the bin strands as an
+            # orphan (round-7 advisor). Several re-adds span one file;
+            # the set dedups.
+            for add in adds:
+                dv = add.get("deletionVector")
+                base_dv = (base_live.get(add["path"]) or {}).get(
+                    "deletionVector"
+                )
+                if dv and dv != base_dv and (p := _dv_rel_path(dv)):
+                    staged.add(p)
+            root = os.path.dirname(log_dir)
+            discard(os.path.join(root, rel) for rel in staged)
+            raise conflict
+        version = state["version"] + 1
+
+    return retry(attempt, revalidate)
 
 
 def _physical_names(meta: dict | None) -> dict[str, str]:
@@ -767,14 +712,9 @@ def write_delta_append(
         if done is not None and done >= tv:
             return _replay_state(log_dir)["version"]
 
-    def _sig(state: dict):
-        m = state.get("meta") or {}
-        return (
-            m.get("schemaString"),
-            tuple(m.get("partitionColumns") or ()),
-        )
-
-    staged_sig = _sig(_replay_state(log_dir)) if os.path.isdir(log_dir) else None
+    staged_sig = (
+        _layout_sig(_replay_state(log_dir)) if os.path.isdir(log_dir) else None
+    )
     version, actions = _stage_append(
         df, path, partition_by, sort_by=sort_by, zorder=zorder
     )
@@ -788,43 +728,35 @@ def write_delta_append(
                 }
             }
         ] + actions
-    last_err: DeltaCommitConflict | None = None
-    for _attempt in range(5):
-        if _attempt:
-            # jittered growing backoff (r13, mirrors _retry_on_conflict):
-            # back-to-back CAS retries under burst contention lose every
-            # race in the same wave; 5 attempts absorb a maintainer +
-            # injected-fault storm on a loaded box. The retry
-            # re-validates writer/schema/txn per attempt, so more tries
-            # never change what lands.
-            import random as _random
 
-            time.sleep(_random.uniform(0, 0.05 * (2 ** _attempt)))
-        try:
-            _commit_version(log_dir, version, actions)
-            return version
-        except DeltaCommitConflict as e:
-            last_err = e
-            # CAS lost. Plain appends COMMUTE (the staged files carry
-            # unique names and are already in the table root), so retry
-            # on top of the winner — but only if this commit carries no
-            # metaData/protocol action (create / schema evolution don't
-            # commute) and the winner didn't change the schema or
-            # partition layout underneath us.
-            if any("metaData" in a or "protocol" in a for a in actions):
-                raise
-            new_state = _replay_state(log_dir)
-            meta = new_state.get("meta") or {}
-            if (meta.get("configuration") or {}).get(
-                "writer"
-            ) != _WRITER_TAG or _sig(new_state) != staged_sig:
-                raise
-            if txn is not None:
-                done = new_state["txns"].get(txn[0])
-                if done is not None and done >= int(txn[1]):
-                    return new_state["version"]  # winner was our batch
-            version = new_state["version"] + 1
-    raise last_err
+    def attempt() -> int:
+        _commit_version(log_dir, version, actions)
+        return version
+
+    def rebase(conflict: CommitConflict) -> int | None:
+        # CAS lost. Plain appends COMMUTE (the staged files carry unique
+        # names and are already in the table root), so retry on top of
+        # the winner — but only if this commit carries no
+        # metaData/protocol action (create / schema evolution don't
+        # commute) and the winner didn't change the schema or partition
+        # layout underneath us. The check runs per attempt, so the
+        # larger append budget never changes what lands.
+        nonlocal version
+        if any("metaData" in a or "protocol" in a for a in actions):
+            raise conflict
+        new_state = _replay_state(log_dir)
+        meta = new_state.get("meta") or {}
+        if (meta.get("configuration") or {}).get(
+            "writer"
+        ) != _WRITER_TAG or _layout_sig(new_state) != staged_sig:
+            raise conflict
+        if txn is not None:
+            done = new_state["txns"].get(txn[0])
+            if done is not None and done >= int(txn[1]):
+                return new_state["version"]  # winner was our batch
+        version = new_state["version"] + 1
+
+    return retry(attempt, rebase, attempts=5)
 
 
 # spark dtypes whose parquet statistics are safe to publish as add.stats
@@ -1150,13 +1082,7 @@ def write_delta_overwrite(df: DataFrame, path: str) -> int:
     except DeltaCommitConflict:
         # overwrite is not validated-retry: clean this attempt's staged
         # files and surface — the caller re-runs against the new head
-        for a in add_actions:
-            rel = a.get("add", {}).get("path")
-            if rel:
-                try:
-                    os.remove(os.path.join(path, rel))
-                except OSError:
-                    pass
+        _discard_adds(path, add_actions)
         raise
     return version
 
@@ -1370,7 +1296,7 @@ def delete_delta_rows(
         # snapshot-isolation serial re-execution (round 8): re-run the
         # whole DELETE against the winner's head — fresh replay, fresh
         # (file, pos) coordinates and DV merge targets
-        return _rescan_retry(
+        return retry(
             lambda: delete_delta_rows(spark, path, predicate)
         )
     log_dir = os.path.join(path, "_delta_log")
@@ -1729,7 +1655,7 @@ def merge_delta_rows(
         # snapshot-isolation serial re-execution (round 8): the whole
         # merge re-runs against the winner's head — fresh key
         # membership, fresh touched-file set, fresh ambiguity probe
-        return _rescan_retry(
+        return retry(
             lambda: merge_delta_rows(
                 spark, path, source, on, when_matched,
                 when_not_matched, strategy,
@@ -2025,7 +1951,7 @@ def update_delta_rows(
     if on_conflict == "rescan":
         # snapshot-isolation serial re-execution (round 8): fresh scan,
         # fresh touched files / DV coordinates / rewritten images
-        return _rescan_retry(
+        return retry(
             lambda: update_delta_rows(
                 spark, path, predicate, set_exprs, strategy
             )
@@ -2557,7 +2483,7 @@ def vacuum_delta(
     return deleted
 
 
-@_retry_recompute
+@recompute
 def repartition_delta_table(
     spark,
     path: str,
@@ -2578,7 +2504,7 @@ def repartition_delta_table(
     tailers skip the range exactly like an OPTIMIZE. Time travel below
     the migration resolves each version's own metaData, so pre-migration
     reads keep the old layout and pruning. Lost CAS races recompute
-    (``_retry_recompute``) with the attempt's staged files cleaned.
+    (``commit_retry.recompute``) with the attempt's staged files cleaned.
 
     At 100 TB this is the planned-downtime-free alternative to
     recreate-and-backfill: one distributed scan + partitioned write,
@@ -2652,18 +2578,12 @@ def repartition_delta_table(
     except DeltaCommitConflict:
         # recomputable: clean this attempt's staged files and let the
         # decorator re-run against the winner's head
-        for a in add_actions:
-            rel = a.get("add", {}).get("path")
-            if rel:
-                try:
-                    os.remove(os.path.join(path, rel))
-                except OSError:
-                    pass
+        _discard_adds(path, add_actions)
         raise
     return version
 
 
-@_retry_recompute
+@recompute
 def optimize_delta_table(
     spark,
     path: str,
@@ -2746,13 +2666,7 @@ def optimize_delta_table(
         # rewrite_iceberg_table's auto-retry): clean this attempt's
         # staged compacted files and let the decorator re-run the whole
         # verb against the winner's head
-        for a in add_actions:
-            rel = a.get("add", {}).get("path")
-            if rel:
-                try:
-                    os.remove(os.path.join(path, rel))
-                except OSError:
-                    pass
+        _discard_adds(path, add_actions)
         raise
     return version
 

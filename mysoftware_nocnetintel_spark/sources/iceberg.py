@@ -9,7 +9,7 @@
   race raises :class:`IcebergCommitConflict` instead of clobbering the
   winner. Appends retry on top of it (they commute), RECOMPUTABLE
   commits — compaction, manifest rewrite, expiration, ref/schema moves
-  — auto-retry too (``_retry_on_conflict``), and data-SEMANTIC writers
+  — auto-retry too (``commit_retry.recompute``), and data-SEMANTIC writers
   (delete/update/merge) auto-retry after FILE-OVERLAP VALIDATION
   (``_retry_head``, round 7): retry iff the winning commits are
   provably disjoint from this commit's basis (schema/spec unchanged,
@@ -39,6 +39,7 @@ from glob import glob
 from pyspark.sql import DataFrame
 
 from .avro_lite import write_avro_file
+from .commit_retry import CommitConflict, discard, recompute, retry
 
 _WRITER_TAG = "mysoftware-nocnetintel-spark-minimal"
 
@@ -344,76 +345,11 @@ def _default_spec_id(meta: dict | None) -> int:
     return int(meta.get("default-spec-id", 0))
 
 
-def _retry_on_conflict(fn):
-    """Auto-retry (3 attempts) for RECOMPUTABLE commits — maintenance
-    verbs (compaction, manifest rewrite, expiration) and metadata-only
-    ref/schema moves. Each of these reloads the table head on entry and
-    re-validates its preconditions, so re-running against the winning
-    writer's snapshot is semantically a fresh invocation, never a lost
-    update (round-5 verdict task 8: only appends retried before). Each
-    losing attempt deletes its own staged files before the exception
-    reaches this wrapper (round-6 advisor — no orphan pile-up across
-    retries; see the conflict-cleanup blocks in the verbs). Data-SEMANTIC
-    writers (delete/update/merge) deliberately do NOT retry blindly —
-    see :func:`_retry_data_commit` for the validated-retry path.
-
-    Attempts are spaced by a small RANDOMIZED sleep (0-150 ms, growing
-    per attempt): back-to-back retries under sustained append contention
-    lose every CAS race in the same burst; jitter de-synchronizes the
-    losers (the same reason Iceberg's commit properties default to
-    exponential backoff)."""
-    import functools
-    import random
-    import time as _time
-
-    @functools.wraps(fn)
-    def wrapper(*args, **kwargs):
-        last: IcebergCommitConflict | None = None
-        for attempt in range(3):
-            if attempt:
-                _time.sleep(random.uniform(0, 0.05 * (2**attempt)))
-            try:
-                return fn(*args, **kwargs)
-            except IcebergCommitConflict as e:
-                last = e
-        raise last
-
-    return wrapper
-
-
-def _rescan_retry(fn, attempts: int = 3):
-    """SNAPSHOT-ISOLATION RE-SCAN RETRY (round 8, opt-in via the verbs'
-    ``on_conflict="rescan"``): when a data-semantic verb surfaces a
-    conflict that validated retry could not absorb (its actions depended
-    on a scan of the pre-race table), re-run the WHOLE verb against the
-    winner's head — a fresh invocation reloads the snapshot, re-derives
-    every decision (matched keys, touched files, row coordinates), and
-    commits against the new state, exactly the serial order "winner
-    first, then this verb". Jittered growing backoff between attempts;
-    the losing attempt already cleaned its staged files (every verb's
-    surface path does), so retries strand nothing. Bounded attempts —
-    the final conflict propagates. The caller's source/predicate is
-    re-evaluated per attempt, so it must be deterministic (a DataFrame
-    over stable input, not a consumed stream)."""
-    import random
-    import time as _time
-
-    last: IcebergCommitConflict | None = None
-    for attempt in range(attempts):
-        if attempt:
-            _time.sleep(random.uniform(0, 0.05 * (2**attempt)))
-        try:
-            return fn()
-        except IcebergCommitConflict as e:
-            last = e
-    raise last
-
-
-class IcebergCommitConflict(RuntimeError):
+class IcebergCommitConflict(CommitConflict):
     """Another writer committed the metadata version this commit was
     staged against. Appends retry internally (they commute),
     recomputable maintenance/ref commits auto-retry
-    (``_retry_on_conflict``), and the data-semantic verbs
+    (``commit_retry.recompute``), and the data-semantic verbs
     (delete/update/merge) auto-retry AFTER file-overlap validation
     (``_retry_head``, round 7) — when validation shows the winning
     commit could have invalidated this one's scan basis, the conflict
@@ -1198,47 +1134,37 @@ def write_iceberg_append(
         )
 
     orig_sig = _table_sig(meta)
-    last_err: IcebergCommitConflict | None = None
-    for _attempt in range(5):
-        if _attempt:
-            # jittered growing backoff (r13, mirrors _retry_on_conflict):
-            # back-to-back CAS retries under burst contention lose every
-            # race in the same wave; 5 attempts (was 3) absorb a
-            # maintainer + injected-fault storm on a loaded box — a
-            # commuting append that CAN commit eventually should, and the
-            # retry re-validates schema/spec/txn each attempt so more
-            # tries never change what lands.
-            import random as _random
 
-            time.sleep(_random.uniform(0, 0.05 * (2 ** _attempt)))
-            # CAS lost: reload and re-stage the METADATA on top of the
-            # winner — appends commute, so the staged data files (and
-            # their footer-derived stats) stay valid as long as the
-            # schema and partition spec did not change underneath us.
-            meta, ver = _load_meta(meta_dir)
-            if meta is not None and meta.get("properties", {}).get(
-                "writer"
-            ) != _WRITER_TAG:
-                raise NotImplementedError(
-                    "refusing to append to an Iceberg table created by "
-                    "another writer: use the iceberg-spark-runtime "
-                    "connector"
-                )
-            if _table_sig(meta) != orig_sig:
-                raise IcebergCommitConflict(
-                    "concurrent commit changed the table schema or "
-                    "partition spec while this append was staged: re-run "
-                    "the append"
-                )
-            if _txn_already_committed(meta, txn):
-                # the CAS winner carried this very txn: drop the staged
-                # duplicate and report the committed snapshot
-                for f, _pv, _fmt, _n in new_files:
-                    try:
-                        os.remove(f)
-                    except OSError:
-                        pass
-                return meta["current-snapshot-id"]
+    def rebase(conflict: CommitConflict) -> int | None:
+        # CAS lost: reload and re-stage the METADATA on top of the
+        # winner — appends commute, so the staged data files (and their
+        # footer-derived stats) stay valid as long as the schema and
+        # partition spec did not change underneath us. The check runs
+        # per attempt, so the larger append budget never changes what
+        # lands.
+        nonlocal meta, ver
+        meta, ver = _load_meta(meta_dir)
+        if meta is not None and meta.get("properties", {}).get(
+            "writer"
+        ) != _WRITER_TAG:
+            raise NotImplementedError(
+                "refusing to append to an Iceberg table created by "
+                "another writer: use the iceberg-spark-runtime "
+                "connector"
+            )
+        if _table_sig(meta) != orig_sig:
+            raise IcebergCommitConflict(
+                "concurrent commit changed the table schema or "
+                "partition spec while this append was staged: re-run "
+                "the append"
+            )
+        if _txn_already_committed(meta, txn):
+            # the CAS winner carried this very txn: drop the staged
+            # duplicate and report the committed snapshot
+            discard(f for f, _pv, _fmt, _n in new_files)
+            return meta["current-snapshot-id"]
+
+    def attempt() -> int:
         now_ms = int(time.time() * 1000)
         snap_id = now_ms * 1000 + (ver + 1)  # unique, monotone per table
         seq = (meta.get("last-sequence-number", 0) if meta else 0) + 1
@@ -1406,12 +1332,10 @@ def write_iceberg_append(
             new_meta["last-column-id"] = max(
                 f["id"] for f in schemas[0]["fields"]
             )
-        try:
-            _commit_metadata(meta_dir, ver, new_meta)
-            return snap_id
-        except IcebergCommitConflict as e:
-            last_err = e
-    raise last_err
+        _commit_metadata(meta_dir, ver, new_meta)
+        return snap_id
+
+    return retry(attempt, rebase, attempts=5)
 
 
 # Delete commits collect (file_path, pos) rows to the driver before writing
@@ -1432,7 +1356,7 @@ def write_iceberg_position_deletes(
     touched files, so the staged (file,pos) coordinates are stale),
     re-run the whole delete against the winner's head instead of
     raising — the fresh scan re-derives coordinates, i.e.
-    snapshot-isolation serial re-execution (:func:`_rescan_retry`).
+    snapshot-isolation serial re-execution (``commit_retry.retry``).
 
     The matching rows' (file_path, pos) coordinates come from the hidden
     ``_metadata`` columns of a distributed scan (existing position deletes
@@ -1450,7 +1374,7 @@ def write_iceberg_position_deletes(
     if on_conflict not in ("surface", "rescan"):
         raise ValueError("on_conflict must be 'surface' or 'rescan'")
     if on_conflict == "rescan":
-        return _rescan_retry(
+        return retry(
             lambda: write_iceberg_position_deletes(spark, path, condition)
         )
     meta_dir = os.path.join(path, "metadata")
@@ -1531,8 +1455,9 @@ def _commit_delete_file(
     delete file and surfaces the conflict."""
     from .avro_lite import read_avro_file
 
-    last_err: IcebergCommitConflict | None = None
-    for _attempt in range(3):
+    staged: list[str] = []
+
+    def attempt() -> int:
         now_ms = int(time.time() * 1000)
         snap_id = now_ms * 1000 + (ver + 1)
         seq = meta.get("last-sequence-number", 0) + 1
@@ -1596,46 +1521,37 @@ def _commit_delete_file(
                 "current-snapshot-id": snap_id,
             },
         )
-        try:
-            _commit_metadata(meta_dir, ver, new_meta)
-            return snap_id
-        except IcebergCommitConflict as e:
-            last_err = e
-            # this attempt's manifest + list embed the lost snap id
-            for f in (manifest, mlist):
-                try:
-                    os.remove(f)
-                except OSError:
-                    pass
-            # Position deletes (touched set) must ALSO reject heads that
-            # gained delete content over the touched files: a concurrent
-            # UPDATE keeps those files live (it masks rows via new
-            # position deletes and adds rewritten image files), so the
-            # live-file check alone would pass while rows whose rewritten
-            # images still match our predicate silently escape the
-            # retried (file,pos) coordinates (round-7 advisor).
-            reloaded = (
-                _retry_head(
-                    path,
-                    meta,
-                    touched=touched,
-                    forbid_new_deletes=bool(touched),
-                )
-                if path is not None
-                else None
+        staged[:] = [manifest, mlist]
+        _commit_metadata(meta_dir, ver, new_meta)
+        return snap_id
+
+    def revalidate(conflict: CommitConflict) -> None:
+        nonlocal meta, ver
+        # this attempt's manifest + list embed the lost snap id
+        discard(staged)
+        # Position deletes (touched set) must ALSO reject heads that
+        # gained delete content over the touched files: a concurrent
+        # UPDATE keeps those files live (it masks rows via new position
+        # deletes and adds rewritten image files), so the live-file
+        # check alone would pass while rows whose rewritten images still
+        # match our predicate silently escape the retried (file,pos)
+        # coordinates (round-7 advisor).
+        reloaded = (
+            _retry_head(
+                path, meta, touched=touched, forbid_new_deletes=bool(touched)
             )
-            if reloaded is None:
-                try:
-                    os.remove(del_file)
-                except OSError:
-                    pass
-                raise
-            meta, ver = reloaded
+            if path is not None
+            else None
+        )
+        if reloaded is None:
+            raise conflict
+        meta, ver = reloaded
+
     try:
-        os.remove(del_file)
-    except OSError:
-        pass
-    raise last_err
+        return retry(attempt, revalidate)
+    except IcebergCommitConflict:
+        discard([del_file])
+        raise
 
 
 def write_iceberg_equality_deletes(spark, path: str, keys: DataFrame) -> int:
@@ -1795,7 +1711,7 @@ def merge_iceberg_rows(
         # whole merge re-runs against the winner's head (fresh key
         # membership, fresh ambiguity probe); txn idempotency still
         # short-circuits redelivered batches on each attempt
-        return _rescan_retry(
+        return retry(
             lambda: merge_iceberg_rows(
                 spark, path, source, on, when_matched,
                 when_not_matched, file_format, txn,
@@ -1986,8 +1902,10 @@ def merge_iceberg_rows(
 
         from .avro_lite import read_avro_file
 
-        last_err: IcebergCommitConflict | None = None
-        for _attempt in range(3):
+        staged: list[str] = []
+
+        def attempt() -> int:
+            nonlocal staged_ok
             now_ms = int(time.time() * 1000)
             snap_id = now_ms * 1000 + (ver + 1)
             seq = meta.get("last-sequence-number", 0) + 1
@@ -2102,32 +2020,28 @@ def merge_iceberg_rows(
                     "current-snapshot-id": snap_id,
                 },
             )
-            try:
-                _commit_metadata(meta_dir, ver, new_meta)
-                staged_ok = True
-                return snap_id
-            except IcebergCommitConflict as e:
-                last_err = e
-                # drop this attempt's manifests/list (they embed the
-                # lost snap id); the staged data/delete files are
-                # head-independent and reusable on retry
-                for f in [m for m, _c in new_manifests] + [mlist]:
-                    try:
-                        os.remove(f)
-                    except OSError:
-                        pass
-                reloaded = (
-                    _retry_head(path, meta) if retryable else None
-                )
-                if reloaded is None:
-                    raise
-                meta, ver = reloaded
-                if _txn_already_committed(meta, txn):
-                    # the CAS winner carried this very txn (redelivered
-                    # batch racing itself): nothing to commit; the
-                    # finally block cleans the staged files
-                    return meta["current-snapshot-id"]
-        raise last_err
+            staged[:] = [m for m, _c in new_manifests] + [mlist]
+            _commit_metadata(meta_dir, ver, new_meta)
+            staged_ok = True
+            return snap_id
+
+        def revalidate(conflict: CommitConflict) -> int | None:
+            nonlocal meta, ver
+            # drop this attempt's manifests/list (they embed the lost
+            # snap id); the staged data/delete files are head-independent
+            # and reusable on retry
+            discard(staged)
+            reloaded = _retry_head(path, meta) if retryable else None
+            if reloaded is None:
+                raise conflict
+            meta, ver = reloaded
+            if _txn_already_committed(meta, txn):
+                # the CAS winner carried this very txn (redelivered batch
+                # racing itself): nothing to commit; the finally block
+                # cleans the staged files
+                return meta["current-snapshot-id"]
+
+        return retry(attempt, revalidate)
     finally:
         shutil.rmtree(stage, ignore_errors=True)
         if not staged_ok:
@@ -2135,13 +2049,10 @@ def merge_iceberg_rows(
             # moved into the table directory (none of it is referenced;
             # manifest/manifest-list debris in metadata/ is what
             # remove_iceberg_orphan_files sweeps)
-            for f in [p for p, _pv, _fmt, _n in new_files] + (
-                [del_file] if del_file else []
-            ):
-                try:
-                    os.remove(f)
-                except OSError:
-                    pass
+            discard(
+                [p for p, _pv, _fmt, _n in new_files]
+                + ([del_file] if del_file else [])
+            )
 
 
 def update_iceberg_rows(
@@ -2179,7 +2090,7 @@ def update_iceberg_rows(
         # snapshot-isolation serial re-execution (round 8): re-run the
         # whole UPDATE against the winner's head — fresh scan, fresh
         # coordinates, fresh rewritten images
-        return _rescan_retry(
+        return retry(
             lambda: update_iceberg_rows(spark, path, predicate, set_exprs)
         )
     meta_dir = os.path.join(path, "metadata")
@@ -2286,8 +2197,10 @@ def update_iceberg_rows(
 
         from .avro_lite import read_avro_file
 
-        last_err: IcebergCommitConflict | None = None
-        for _attempt in range(3):
+        staged: list[str] = []
+
+        def attempt() -> int:
+            nonlocal staged_ok
             now_ms = int(time.time() * 1000)
             snap_id = now_ms * 1000 + (ver + 1)
             seq = meta.get("last-sequence-number", 0) + 1
@@ -2378,58 +2291,50 @@ def update_iceberg_rows(
                 "parent-snapshot-id": meta["current-snapshot-id"],
                 "summary": {"operation": "overwrite"},
             }
-            try:
-                _commit_metadata(
-                    meta_dir,
-                    ver,
-                    dict(
-                        meta,
-                        **{
-                            "last-sequence-number": seq,
-                            "last-updated-ms": now_ms,
-                            "snapshots": meta.get("snapshots", [])
-                            + [snapshot],
-                            "current-snapshot-id": snap_id,
-                        },
-                    ),
-                )
-                staged_ok = True
-                return snap_id
-            except IcebergCommitConflict as e:
-                last_err = e
-                for f in [m for m, _c in new_manifests] + [mlist]:
-                    try:
-                        os.remove(f)
-                    except OSError:
-                        pass
-                # retry only when the winner provably didn't touch our
-                # basis: every file whose rows we re-wrote is still live
-                # AND the winner added no delete content that could mask
-                # rows in them (our rewritten images would resurrect an
-                # interleaved delete)
-                reloaded = _retry_head(
-                    path,
+            staged[:] = [m for m, _c in new_manifests] + [mlist]
+            _commit_metadata(
+                meta_dir,
+                ver,
+                dict(
                     meta,
-                    touched={r[0] for r in rows},
-                    forbid_new_deletes=True,
-                )
-                if reloaded is None:
-                    raise
-                meta, ver = reloaded
-        raise last_err
+                    **{
+                        "last-sequence-number": seq,
+                        "last-updated-ms": now_ms,
+                        "snapshots": meta.get("snapshots", []) + [snapshot],
+                        "current-snapshot-id": snap_id,
+                    },
+                ),
+            )
+            staged_ok = True
+            return snap_id
+
+        def revalidate(conflict: CommitConflict) -> None:
+            nonlocal meta, ver
+            discard(staged)
+            # retry only when the winner provably didn't touch our basis:
+            # every file whose rows we re-wrote is still live AND the
+            # winner added no delete content that could mask rows in them
+            # (our rewritten images would resurrect an interleaved delete)
+            reloaded = _retry_head(
+                path,
+                meta,
+                touched={r[0] for r in rows},
+                forbid_new_deletes=True,
+            )
+            if reloaded is None:
+                raise conflict
+            meta, ver = reloaded
+
+        return retry(attempt, revalidate)
     finally:
         shutil.rmtree(stage, ignore_errors=True)
         if not staged_ok:
-            for f in [p for p, _pv in new_files] + (
-                [del_file] if del_file else []
-            ):
-                try:
-                    os.remove(f)
-                except OSError:
-                    pass
+            discard(
+                [p for p, _pv in new_files] + ([del_file] if del_file else [])
+            )
 
 
-@_retry_on_conflict
+@recompute
 def rewrite_iceberg_table(
     spark,
     path: str,
@@ -2846,15 +2751,15 @@ def rewrite_iceberg_table(
         # data files + the manifests/list referencing them) are garbage —
         # delete them NOW instead of deferring to remove_orphan_files, so
         # a 3-attempt retry burst strands zero bytes (round-6 advisor)
-        for f in [p for p, _pv in new_files] + [
-            r["manifest_path"]
-            for r in mlist_rows
-            if r["added_snapshot_id"] == snap_id
-        ] + [mlist]:
-            try:
-                os.remove(f)
-            except OSError:
-                pass
+        discard(
+            [p for p, _pv in new_files]
+            + [
+                r["manifest_path"]
+                for r in mlist_rows
+                if r["added_snapshot_id"] == snap_id
+            ]
+            + [mlist]
+        )
         raise
     return snap_id
 
@@ -2905,10 +2810,9 @@ def rewrite_iceberg_manifests(path: str, min_manifests: int = 3) -> int:
             "by another writer: use the iceberg-spark-runtime connector"
         )
 
-    last_err: IcebergCommitConflict | None = None
-    for _attempt in range(3):
-        if _attempt:
-            meta, ver = _load_meta(meta_dir)
+    staged: list[str] = []
+
+    def attempt() -> int:
         cur = next(
             s
             for s in meta["snapshots"]
@@ -3020,20 +2924,20 @@ def rewrite_iceberg_manifests(path: str, min_manifests: int = 3) -> int:
                 "current-snapshot-id": snap_id,
             },
         )
-        try:
-            _commit_metadata(meta_dir, ver, new_meta)
-            return snap_id
-        except IcebergCommitConflict as e:
-            # losing attempt deletes its own staged manifests/list —
-            # metadata-only, but KBs per lost race still shouldn't pile
-            # up as orphans across retries (round-6 advisor)
-            for f in [mpath for mpath, _c, _s in new_rows] + [mlist]:
-                try:
-                    os.remove(f)
-                except OSError:
-                    pass
-            last_err = e
-    raise last_err
+        staged[:] = [mpath for mpath, _c, _s in new_rows] + [mlist]
+        _commit_metadata(meta_dir, ver, new_meta)
+        return snap_id
+
+    def reload(conflict: CommitConflict) -> None:
+        # the losing attempt deletes its own staged manifests/list —
+        # metadata-only, but KBs per lost race still shouldn't pile up as
+        # orphans across retries (round-6 advisor) — and the next one
+        # rebuilds from the winner's head
+        nonlocal meta, ver
+        discard(staged)
+        meta, ver = _load_meta(meta_dir)
+
+    return retry(attempt, reload)
 
 
 def _entry_schema_for_spec(meta: dict, spec_id: int) -> dict:
@@ -3194,10 +3098,9 @@ def drop_iceberg_partition(
             for want in parts
         )
 
-    last_err: IcebergCommitConflict | None = None
-    for _attempt in range(3):
-        if _attempt:
-            meta, ver = _load_meta(meta_dir)
+    staged: list[str] = []
+
+    def attempt() -> int | None:
         if meta.get("current-snapshot-id") in (None, -1):
             return None  # no snapshot: nothing to drop
         cur = next(
@@ -3211,7 +3114,7 @@ def drop_iceberg_partition(
         seq = meta.get("last-sequence-number", 0) + 1
         keep_rows: list[dict] = []  # original list rows, verbatim
         new_rows: list[tuple[str, int, int]] = []
-        staged: list[str] = []
+        staged.clear()
         dropped: list[str] = []
         stray: list[str] = []
         for m in manifests:
@@ -3269,11 +3172,7 @@ def drop_iceberg_partition(
                 new_rows.append((mpath, 0, m_spec))
             # else: every live entry dropped — the manifest leaves the list
         if stray:
-            for f in staged:
-                try:
-                    os.remove(f)
-                except OSError:
-                    pass
+            discard(staged)
             stray = sorted(set(stray))
             raise ValueError(
                 f"pinned files {stray[:3]}{'...' if len(stray) > 3 else ''} "
@@ -3320,20 +3219,18 @@ def drop_iceberg_partition(
                 "current-snapshot-id": snap_id,
             },
         )
-        try:
-            _commit_metadata(meta_dir, ver, new_meta)
-            return snap_id
-        except IcebergCommitConflict as e:
-            for f in staged:
-                try:
-                    os.remove(f)
-                except OSError:
-                    pass
-            last_err = e
-    raise last_err
+        _commit_metadata(meta_dir, ver, new_meta)
+        return snap_id
+
+    def reload(conflict: CommitConflict) -> None:
+        nonlocal meta, ver
+        discard(staged)
+        meta, ver = _load_meta(meta_dir)
+
+    return retry(attempt, reload)
 
 
-@_retry_on_conflict
+@recompute
 def expire_iceberg_snapshots(path: str, keep_last: int = 3) -> int:
     """Snapshot EXPIRATION (the other half of table maintenance next to
     :func:`rewrite_iceberg_table`): keep only the newest ``keep_last``
@@ -3548,7 +3445,7 @@ def rollback_iceberg_table(path: str, snapshot_id: int) -> int:
     return snapshot_id
 
 
-@_retry_on_conflict
+@recompute
 def tag_iceberg_snapshot(
     path: str, name: str, snapshot_id: int | None = None
 ) -> int:
@@ -3613,7 +3510,7 @@ def _load_name_mapping(meta: dict | None) -> list[dict]:
     return json.loads(raw) if raw else []
 
 
-@_retry_on_conflict
+@recompute
 def rename_iceberg_column(path: str, old: str, new: str) -> int:
     """RENAME a column — metadata-only, one KB-scale CAS commit (spec
     "Schema Evolution": ids are forever, names are labels). The current
@@ -3700,7 +3597,7 @@ def rename_iceberg_column(path: str, old: str, new: str) -> int:
     return new_schema["schema-id"]
 
 
-@_retry_on_conflict
+@recompute
 def drop_iceberg_column(path: str, name: str) -> int:
     """DROP a column — metadata-only, one KB-scale CAS commit (spec
     "Schema Evolution"): the field leaves the CURRENT schema; data files
@@ -3785,7 +3682,7 @@ def drop_iceberg_column(path: str, name: str) -> int:
     return new_schema["schema-id"]
 
 
-@_retry_on_conflict
+@recompute
 def update_iceberg_partition_spec(
     path: str, partition_by: "tuple[str, ...]"
 ) -> int:
@@ -3931,7 +3828,7 @@ def update_iceberg_partition_spec(
     return new_spec["spec-id"]
 
 
-@_retry_on_conflict
+@recompute
 def move_iceberg_ref(path: str, name: str, snapshot_id: int) -> int:
     """Create-or-move a TAG ref to ``snapshot_id`` in ONE metadata
     commit — the refs-map entry is replaced atomically, so there is no
@@ -3977,7 +3874,7 @@ def move_iceberg_ref(path: str, name: str, snapshot_id: int) -> int:
     return int(snapshot_id)
 
 
-@_retry_on_conflict
+@recompute
 def drop_iceberg_ref(path: str, name: str) -> int:
     """Remove a named ref; the snapshot it pinned becomes expirable
     again. Returns the snapshot id the ref pointed at."""
@@ -4001,7 +3898,7 @@ def drop_iceberg_ref(path: str, name: str) -> int:
     return pinned
 
 
-@_retry_on_conflict
+@recompute
 def publish_iceberg_branch(path: str, name: str, drop: bool = True) -> int:
     """WRITE-AUDIT-PUBLISH, the publish step (Iceberg's
     ``fast_forward`` procedure): move the table head to the branch head

@@ -471,10 +471,3 @@ def test_append_racing_rescue_read_survives_pinned_gc(
     )
     got = AI.query_ivf_index(spark, q, path, k=203, nprobe=3).collect()
     assert {9500, 9501, 9502} <= {r.vec_id for r in got}
-
-# r13 (VERDICT task 2): one of the heavy suites deselected from the
-# DEFAULT run so `pytest tests/` fits the driver's pytest budget
-# (pyproject addopts `-m "not slow"`); the full matrix runs with
-# `pytest tests/ -m ""`. Subsystem representatives stay in the
-# default set — see OPTIMIZATION_r13.md "pytest budget".
-pytestmark = pytest.mark.slow

@@ -263,10 +263,3 @@ def test_two_gates_race_shared_index(spark, tmp_path, index_format):
         )
     assert _corpus_ids(spark, corpus_path) == want, "cross-gate dup leaked"
     assert index_ids() == want
-
-# r13 (VERDICT task 2): one of the heavy suites deselected from the
-# DEFAULT run so `pytest tests/` fits the driver's pytest budget
-# (pyproject addopts `-m "not slow"`); the full matrix runs with
-# `pytest tests/ -m ""`. Subsystem representatives stay in the
-# default set — see OPTIMIZATION_r13.md "pytest budget".
-pytestmark = pytest.mark.slow

@@ -276,10 +276,3 @@ def test_randomized_merge_update_differential(spark, tmp_path):
             for r in read_delta_snapshot(spark, path).collect()
         }
         assert got == ref, f"divergence after step {step} ({op})"
-
-# r13 (VERDICT task 2): one of the heavy suites deselected from the
-# DEFAULT run so `pytest tests/` fits the driver's pytest budget
-# (pyproject addopts `-m "not slow"`); the full matrix runs with
-# `pytest tests/ -m ""`. Subsystem representatives stay in the
-# default set — see OPTIMIZATION_r13.md "pytest budget".
-pytestmark = pytest.mark.slow

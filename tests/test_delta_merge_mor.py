@@ -218,10 +218,3 @@ def test_random_cow_vs_mor_equivalence(spark, tmp_path, seed):
             == _rows(read_delta_snapshot(spark, mor))
             == set(model.items())
         ), f"seed={seed} step={step}"
-
-# r13 (VERDICT task 2): one of the heavy suites deselected from the
-# DEFAULT run so `pytest tests/` fits the driver's pytest budget
-# (pyproject addopts `-m "not slow"`); the full matrix runs with
-# `pytest tests/ -m ""`. Subsystem representatives stay in the
-# default set — see OPTIMIZATION_r13.md "pytest budget".
-pytestmark = pytest.mark.slow

@@ -134,10 +134,3 @@ def test_tailer_still_raises_on_row_removing_version(spark, tmp_path):
     delete_delta_rows(spark, path, "id = 1")
     with pytest.raises(ValueError, match="ignore_deletes"):
         t.poll()
-
-# r13 (VERDICT task 2): one of the heavy suites deselected from the
-# DEFAULT run so `pytest tests/` fits the driver's pytest budget
-# (pyproject addopts `-m "not slow"`); the full matrix runs with
-# `pytest tests/ -m ""`. Subsystem representatives stay in the
-# default set — see OPTIMIZATION_r13.md "pytest budget".
-pytestmark = pytest.mark.slow

@@ -602,10 +602,3 @@ def test_mor_delete_by_partition_predicate_across_rename(spark, tmp_path):
     delete_delta_rows(spark, root, "zone = 1")
     got = read_delta_snapshot(spark, root)
     assert sorted(r.id for r in got.collect()) == [0, 3, 6]
-
-# r13 (VERDICT task 2): one of the heavy suites deselected from the
-# DEFAULT run so `pytest tests/` fits the driver's pytest budget
-# (pyproject addopts `-m "not slow"`); the full matrix runs with
-# `pytest tests/ -m ""`. Subsystem representatives stay in the
-# default set — see OPTIMIZATION_r13.md "pytest budget".
-pytestmark = pytest.mark.slow

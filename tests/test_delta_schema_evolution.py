@@ -109,10 +109,3 @@ def test_txn_plus_evolution_commit_atomically(spark, tmp_path):
     kinds = [next(iter(a)) for a in acts]
     assert "txn" in kinds and "metaData" in kinds and "add" in kinds
     assert _rows(read_delta_snapshot(spark, root)) == [(1, None), (2, "x")]
-
-# r13 (VERDICT task 2): one of the heavy suites deselected from the
-# DEFAULT run so `pytest tests/` fits the driver's pytest budget
-# (pyproject addopts `-m "not slow"`); the full matrix runs with
-# `pytest tests/ -m ""`. Subsystem representatives stay in the
-# default set — see OPTIMIZATION_r13.md "pytest budget".
-pytestmark = pytest.mark.slow

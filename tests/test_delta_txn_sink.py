@@ -9,8 +9,6 @@ log replay)."""
 
 from __future__ import annotations
 
-import pytest
-
 import json
 import os
 from glob import glob
@@ -150,10 +148,3 @@ def test_stream_append_clustered_stats(spark, tmp_path):
         ).collect()
     }
     assert got == set(range(150, 200))
-
-# r13 (VERDICT task 2): one of the heavy suites deselected from the
-# DEFAULT run so `pytest tests/` fits the driver's pytest budget
-# (pyproject addopts `-m "not slow"`); the full matrix runs with
-# `pytest tests/ -m ""`. Subsystem representatives stay in the
-# default set — see OPTIMIZATION_r13.md "pytest budget".
-pytestmark = pytest.mark.slow

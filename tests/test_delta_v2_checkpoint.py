@@ -180,10 +180,3 @@ def test_reader_features_gate(spark, tmp_path):
             fh.write(json.dumps({"protocol": proto}) + "\n")
         with pytest.raises(NotImplementedError, match="minReaderVersion"):
             read_delta_snapshot(spark, root)
-
-# r13 (VERDICT task 2): one of the heavy suites deselected from the
-# DEFAULT run so `pytest tests/` fits the driver's pytest budget
-# (pyproject addopts `-m "not slow"`); the full matrix runs with
-# `pytest tests/ -m ""`. Subsystem representatives stay in the
-# default set — see OPTIMIZATION_r13.md "pytest budget".
-pytestmark = pytest.mark.slow

@@ -314,10 +314,3 @@ def test_partitioned_avro_merge(spark, tmp_path):
     # partition pruning still correct across the mixed formats
     got = read_iceberg_snapshot(spark, root, partition_filter={"day": "d1"})
     assert sorted(r.id for r in got.collect()) == [1, 3, 5]
-
-# r13 (VERDICT task 2): one of the heavy suites deselected from the
-# DEFAULT run so `pytest tests/` fits the driver's pytest budget
-# (pyproject addopts `-m "not slow"`); the full matrix runs with
-# `pytest tests/ -m ""`. Subsystem representatives stay in the
-# default set — see OPTIMIZATION_r13.md "pytest budget".
-pytestmark = pytest.mark.slow

@@ -168,10 +168,3 @@ def test_binpack_time_travel_sees_prebinpack_state(spark, tmp_path):
         spark, root, snapshot_id=snap_before["snapshot-id"]
     )
     assert len(_rows(old)) == 5
-
-# r13 (VERDICT task 2): one of the heavy suites deselected from the
-# DEFAULT run so `pytest tests/` fits the driver's pytest budget
-# (pyproject addopts `-m "not slow"`); the full matrix runs with
-# `pytest tests/ -m ""`. Subsystem representatives stay in the
-# default set — see OPTIMIZATION_r13.md "pytest budget".
-pytestmark = pytest.mark.slow

@@ -496,10 +496,3 @@ def test_two_writer_appender_races_deleter(spark, tmp_path, seed, committer):
     )
     got = _ids(spark, root)
     assert got == want, f"seed={seed}: {got} != {want}"
-
-# r13 (VERDICT task 2): one of the heavy suites deselected from the
-# DEFAULT run so `pytest tests/` fits the driver's pytest budget
-# (pyproject addopts `-m "not slow"`); the full matrix runs with
-# `pytest tests/ -m ""`. Subsystem representatives stay in the
-# default set — see OPTIMIZATION_r13.md "pytest budget".
-pytestmark = pytest.mark.slow

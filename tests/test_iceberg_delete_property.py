@@ -308,10 +308,3 @@ def test_random_lifecycle_with_renames(spark, tmp_path, seed):
             continue
         got = _vals(read_iceberg_snapshot(spark, root, snapshot_id=sid))
         assert got == want, f"seed={seed} snapshot {sid}"
-
-# r13 (VERDICT task 2): one of the heavy suites deselected from the
-# DEFAULT run so `pytest tests/` fits the driver's pytest budget
-# (pyproject addopts `-m "not slow"`); the full matrix runs with
-# `pytest tests/ -m ""`. Subsystem representatives stay in the
-# default set — see OPTIMIZATION_r13.md "pytest budget".
-pytestmark = pytest.mark.slow

@@ -230,10 +230,3 @@ def test_consolidated_entries_are_existing_status(spark, tmp_path):
     assert _rows(read_iceberg_snapshot(spark, path)) == {
         (1, "a"), (2, "B"), (3, "C"), (4, "d"),
     }
-
-# r13 (VERDICT task 2): one of the heavy suites deselected from the
-# DEFAULT run so `pytest tests/` fits the driver's pytest budget
-# (pyproject addopts `-m "not slow"`); the full matrix runs with
-# `pytest tests/ -m ""`. Subsystem representatives stay in the
-# default set — see OPTIMIZATION_r13.md "pytest budget".
-pytestmark = pytest.mark.slow

@@ -278,10 +278,3 @@ def test_random_merge_differential(spark, tmp_path, seed, fmt):
         assert _rows(read_iceberg_snapshot(spark, path)) == set(
             model.items()
         )
-
-# r13 (VERDICT task 2): one of the heavy suites deselected from the
-# DEFAULT run so `pytest tests/` fits the driver's pytest budget
-# (pyproject addopts `-m "not slow"`); the full matrix runs with
-# `pytest tests/ -m ""`. Subsystem representatives stay in the
-# default set — see OPTIMIZATION_r13.md "pytest budget".
-pytestmark = pytest.mark.slow

@@ -174,10 +174,3 @@ def test_partition_by_list_column_fails_cleanly(spark, tmp_path):
             str(tmp_path / "listpart"),
             partition_by=("tags",),
         )
-
-# r13 (VERDICT task 2): one of the heavy suites deselected from the
-# DEFAULT run so `pytest tests/` fits the driver's pytest budget
-# (pyproject addopts `-m "not slow"`); the full matrix runs with
-# `pytest tests/ -m ""`. Subsystem representatives stay in the
-# default set — see OPTIMIZATION_r13.md "pytest budget".
-pytestmark = pytest.mark.slow

@@ -435,10 +435,3 @@ def test_metadata_tables_expose_specs(spark, tmp_path):
     assert by_spec == {0, 1}
     new = [r for r in files if r.spec_id == 1]
     assert all(r.partition and "day" in r.partition for r in new)
-
-# r13 (VERDICT task 2): one of the heavy suites deselected from the
-# DEFAULT run so `pytest tests/` fits the driver's pytest budget
-# (pyproject addopts `-m "not slow"`); the full matrix runs with
-# `pytest tests/ -m ""`. Subsystem representatives stay in the
-# default set — see OPTIMIZATION_r13.md "pytest budget".
-pytestmark = pytest.mark.slow

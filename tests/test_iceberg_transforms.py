@@ -734,10 +734,3 @@ def test_undigestible_literal_prunes_nothing(spark, tmp_path):
     # conservative: the read succeeds and the ROW filter still applies
     # (ANSI string>=timestamp comparison casts the literal to midnight)
     assert {r.id for r in got} == {0, 1, 2, 3}
-
-# r13 (VERDICT task 2): one of the heavy suites deselected from the
-# DEFAULT run so `pytest tests/` fits the driver's pytest budget
-# (pyproject addopts `-m "not slow"`); the full matrix runs with
-# `pytest tests/ -m ""`. Subsystem representatives stay in the
-# default set — see OPTIMIZATION_r13.md "pytest budget".
-pytestmark = pytest.mark.slow

@@ -251,10 +251,3 @@ def test_manifest_bound_bytes_on_disk(spark, tmp_path):
 
     assert lo["1"] == struct.pack("<q", 5)      # id: long LE
     assert lo["2"] == struct.pack("<d", 2.5)    # v: double LE
-
-# r13 (VERDICT task 2): one of the heavy suites deselected from the
-# DEFAULT run so `pytest tests/` fits the driver's pytest budget
-# (pyproject addopts `-m "not slow"`); the full matrix runs with
-# `pytest tests/ -m ""`. Subsystem representatives stay in the
-# default set — see OPTIMIZATION_r13.md "pytest budget".
-pytestmark = pytest.mark.slow

@@ -384,10 +384,3 @@ def test_medallion_relay_crash_window_with_bronze_advance(spark, tmp_path):
         (3, "c"),
     }  # (2,"b") exactly once
     assert relay_delta_increment(t2, ident, silver, "adv") is None
-
-# r13 (VERDICT task 2): one of the heavy suites deselected from the
-# DEFAULT run so `pytest tests/` fits the driver's pytest budget
-# (pyproject addopts `-m "not slow"`); the full matrix runs with
-# `pytest tests/ -m ""`. Subsystem representatives stay in the
-# default set — see OPTIMIZATION_r13.md "pytest budget".
-pytestmark = pytest.mark.slow

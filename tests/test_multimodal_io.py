@@ -405,10 +405,3 @@ def test_compact_partitions_crash_artifacts(spark, sf_dir, tmp_path):
     assert all("__compact" not in v for v in report)
     assert os.path.isdir(victim)  # restored partition is back
     assert spark.read.parquet(out).count() == n_before
-
-# r13 (VERDICT task 2): one of the heavy suites deselected from the
-# DEFAULT run so `pytest tests/` fits the driver's pytest budget
-# (pyproject addopts `-m "not slow"`); the full matrix runs with
-# `pytest tests/ -m ""`. Subsystem representatives stay in the
-# default set — see OPTIMIZATION_r13.md "pytest budget".
-pytestmark = pytest.mark.slow

@@ -37,10 +37,3 @@ def test_entry_smoke(spark):
 
 def test_every_oracle_key_has_query():
     assert set(ORACLES) <= set(QUERIES)
-
-# r13 (VERDICT task 2): one of the heavy suites deselected from the
-# DEFAULT run so `pytest tests/` fits the driver's pytest budget
-# (pyproject addopts `-m "not slow"`); the full matrix runs with
-# `pytest tests/ -m ""`. Subsystem representatives stay in the
-# default set — see OPTIMIZATION_r13.md "pytest budget".
-pytestmark = pytest.mark.slow

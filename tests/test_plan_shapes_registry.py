@@ -20,8 +20,6 @@ building is cheap there even for the k-means/model-fit queries).
 
 from __future__ import annotations
 
-import pytest
-
 from mysoftware_nocnetintel_spark.plans import QUERIES
 
 from .conftest import SF_DIR as SF
@@ -133,10 +131,3 @@ def test_registry_plan_shapes(spark):
 def test_whitelists_reference_real_queries(spark):
     for name in list(_BNLJ_OK) + list(_SINGLE_OK):
         assert name in QUERIES, f"stale whitelist entry {name}"
-
-# r13 (VERDICT task 2): one of the heavy suites deselected from the
-# DEFAULT run so `pytest tests/` fits the driver's pytest budget
-# (pyproject addopts `-m "not slow"`); the full matrix runs with
-# `pytest tests/ -m ""`. Subsystem representatives stay in the
-# default set — see OPTIMIZATION_r13.md "pytest budget".
-pytestmark = pytest.mark.slow

@@ -5,7 +5,6 @@ vs DuckDB SQL on the same parquet, value-hash comparison."""
 
 from __future__ import annotations
 
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import Window
@@ -320,10 +319,3 @@ class TestAsofGridRandomized:
               ON g.user_id = d.user_id AND g.ts >= d.ts
         """
         assert_matches_oracle(got, sql, sf_dir)
-
-# r13 (VERDICT task 2): one of the heavy suites deselected from the
-# DEFAULT run so `pytest tests/` fits the driver's pytest budget
-# (pyproject addopts `-m "not slow"`); the full matrix runs with
-# `pytest tests/ -m ""`. Subsystem representatives stay in the
-# default set — see OPTIMIZATION_r13.md "pytest budget".
-pytestmark = pytest.mark.slow

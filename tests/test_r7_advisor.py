@@ -3,7 +3,8 @@
 1. pinned-offset/offset files are fsynced before the atomic rename
    (power-loss durability, not just process-crash durability);
 2. lost maintenance CAS races clean their own staged files (no orphan
-   pile-up across retries) and attempts are spaced by jittered backoff;
+   pile-up across retries; the backoff between attempts is covered in
+   ``test_commit_retry.py``);
 3. ``lsh_bucketed_topk``'s Arrow bucket UDF tolerates NULL / wrong-dim
    embeddings (buckets to NULL, row dropped) like the expression form
    it replaced;
@@ -136,29 +137,6 @@ def test_lost_manifest_rewrite_cleans_staged_manifests(
     monkeypatch.undo()
 
     assert _tree(root) == before
-
-
-def test_retry_on_conflict_backs_off_between_attempts(monkeypatch):
-    import time as _time
-
-    sleeps: list[float] = []
-    monkeypatch.setattr(_time, "sleep", lambda s: sleeps.append(s))
-
-    calls = {"n": 0}
-
-    @ice._retry_on_conflict
-    def flaky():
-        calls["n"] += 1
-        if calls["n"] < 3:
-            raise IcebergCommitConflict("lost")
-        return "won"
-
-    assert flaky() == "won"
-    assert calls["n"] == 3
-    # jittered, bounded, GROWING windows: attempt 2 in [0, 0.1),
-    # attempt 3 in [0, 0.2)
-    assert len(sleeps) == 2
-    assert all(0 <= s < 0.25 for s in sleeps)
 
 
 # -------------------------------------------------- 3. LSH null tolerance

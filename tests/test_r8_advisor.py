@@ -293,10 +293,3 @@ def test_failed_mor_delete_cleans_its_deletion_vector_bin(
     assert glob(os.path.join(root, "**", "deletion_vector_*.bin"),
                 recursive=True) == []
     assert [r[0] for r in _rows(spark, root)] == list(range(6))
-
-# r13 (VERDICT task 2): one of the heavy suites deselected from the
-# DEFAULT run so `pytest tests/` fits the driver's pytest budget
-# (pyproject addopts `-m "not slow"`); the full matrix runs with
-# `pytest tests/ -m ""`. Subsystem representatives stay in the
-# default set — see OPTIMIZATION_r13.md "pytest budget".
-pytestmark = pytest.mark.slow

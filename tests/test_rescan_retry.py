@@ -211,10 +211,3 @@ def test_on_conflict_validation(spark, tmp_path):
         write_iceberg_position_deletes(
             spark, root, F.col("id") == 0, on_conflict="nope"
         )
-
-# r13 (VERDICT task 2): one of the heavy suites deselected from the
-# DEFAULT run so `pytest tests/` fits the driver's pytest budget
-# (pyproject addopts `-m "not slow"`); the full matrix runs with
-# `pytest tests/ -m ""`. Subsystem representatives stay in the
-# default set — see OPTIMIZATION_r13.md "pytest budget".
-pytestmark = pytest.mark.slow

@@ -627,10 +627,3 @@ def test_congruence_rejects_inconsistent_explicit_main():
     # a CONSISTENT explicit main still normalizes (the advisor fix holds)
     published["refs"]["main"]["snapshot-id"] = 9
     assert congruence_mismatches(derived, published) == []
-
-# r13 (VERDICT task 2): one of the heavy suites deselected from the
-# DEFAULT run so `pytest tests/` fits the driver's pytest budget
-# (pyproject addopts `-m "not slow"`); the full matrix runs with
-# `pytest tests/ -m ""`. Subsystem representatives stay in the
-# default set — see OPTIMIZATION_r13.md "pytest budget".
-pytestmark = pytest.mark.slow

@@ -588,10 +588,3 @@ def test_continuous_rollup_checkpoint_restart(spark, sf_dir, tmp_path):
     want = q45_tumbling_window(spark, sf_dir)
     cols = ["window_start", "n", "total_value"]
     assert _rows(got, cols) == _rows(want, cols)
-
-# r13 (VERDICT task 2): one of the heavy suites deselected from the
-# DEFAULT run so `pytest tests/` fits the driver's pytest budget
-# (pyproject addopts `-m "not slow"`); the full matrix runs with
-# `pytest tests/ -m ""`. Subsystem representatives stay in the
-# default set — see OPTIMIZATION_r13.md "pytest budget".
-pytestmark = pytest.mark.slow

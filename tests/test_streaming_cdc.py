@@ -239,10 +239,3 @@ def test_first_batch_retry_after_partial_failure(spark, tmp_path):
     cdc_upsert_batch(df, table, ("user_id",))
     got = {(r.user_id, r.event_id) for r in read_iceberg_snapshot(spark, table).collect()}
     assert got == {(5, 1)}
-
-# r13 (VERDICT task 2): one of the heavy suites deselected from the
-# DEFAULT run so `pytest tests/` fits the driver's pytest budget
-# (pyproject addopts `-m "not slow"`); the full matrix runs with
-# `pytest tests/ -m ""`. Subsystem representatives stay in the
-# default set — see OPTIMIZATION_r13.md "pytest budget".
-pytestmark = pytest.mark.slow

@@ -4,8 +4,6 @@ KB-scale metadata walks returning bounded DataFrames."""
 
 from __future__ import annotations
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from mysoftware_nocnetintel_spark.sources.delta import (
@@ -123,10 +121,3 @@ def test_iceberg_files_and_partitions_tables(spark, tmp_path):
     )
     f1 = iceberg_files(spark, root, snapshot_id=first).collect()
     assert len(f1) < len(f)
-
-# r13 (VERDICT task 2): one of the heavy suites deselected from the
-# DEFAULT run so `pytest tests/` fits the driver's pytest budget
-# (pyproject addopts `-m "not slow"`); the full matrix runs with
-# `pytest tests/ -m ""`. Subsystem representatives stay in the
-# default set — see OPTIMIZATION_r13.md "pytest budget".
-pytestmark = pytest.mark.slow

@@ -105,10 +105,3 @@ def test_random_producer_consumer_interleaving(spark, tmp_path, fmt, seed):
         f"{fmt} seed={seed}: missing "
         f"{sorted(produced - committed_through)[:5]}"
     )
-
-# r13 (VERDICT task 2): one of the heavy suites deselected from the
-# DEFAULT run so `pytest tests/` fits the driver's pytest budget
-# (pyproject addopts `-m "not slow"`); the full matrix runs with
-# `pytest tests/ -m ""`. Subsystem representatives stay in the
-# default set — see OPTIMIZATION_r13.md "pytest budget".
-pytestmark = pytest.mark.slow
