@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import local_frame
 from .similarity import _cosine_batch, ivf_assign, ivf_centroids
 
 _PARAMS_FILE = "_ann_index_params.json"
@@ -319,7 +320,8 @@ def query_ivf_index(
                 vec_id_type = rdr(spark, path).schema["vec_id"].dataType
             except Exception:
                 pass
-            return spark.createDataFrame(
+            return local_frame(
+                spark,
                 [],
                 T.StructType(
                     [
@@ -333,7 +335,8 @@ def query_ivf_index(
         probe_rows = [
             (qid, qv, c) for qid, qv in qrows for c in probes[qid]
         ]
-        probe_df = spark.createDataFrame(
+        probe_df = local_frame(
+            spark,
             probe_rows,
             T.StructType(
                 [

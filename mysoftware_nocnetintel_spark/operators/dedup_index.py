@@ -149,15 +149,23 @@ def append_to_minhash_index(
     id_col: str = "doc_id",
     text_col: str = "text",
     txn: tuple[str, int] | None = None,
+    _sigs: DataFrame | None = None,
 ) -> int:
     """Append a batch's signatures to an existing index, under the INDEX'S
     pinned parameters (the caller cannot accidentally mix signature
     spaces). ``txn=(app_id, version)`` passes through to the format's
     idempotent-transaction support, so an ingestion pipeline retrying a
-    batch cannot double-register it. Returns the committed version."""
+    batch cannot double-register it. Returns the committed version.
+    ``_sigs`` lets the ingestion gate register the ``(doc, sig)`` rows
+    it already computed under these parameters instead of re-shingling
+    ``df``."""
     p = read_index_params(path)
-    sigs = minhash_signatures(
-        df, id_col, text_col, p["num_hashes"], p["shingle_k"]
+    sigs = (
+        _sigs
+        if _sigs is not None
+        else minhash_signatures(
+            df, id_col, text_col, p["num_hashes"], p["shingle_k"]
+        )
     )
     return _write_table(
         sigs, path, p.get("table_format", "delta"), txn=txn, sort_by=("doc",)
@@ -171,6 +179,7 @@ def dedup_against_minhash_index(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.7,
+    _sigs: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup verdicts for a NEW batch against the persisted index AND
     within the batch itself, without re-touching any historical text.
@@ -187,7 +196,11 @@ def dedup_against_minhash_index(
     index self-matches at est_jaccard 1.0 — deliberately not filtered:
     for an ingestion gate a re-delivered document is a duplicate of its
     registered self, and flagging it keeps non-txn re-deliveries from
-    double-registering."""
+    double-registering.
+
+    ``_sigs`` is the caller's checkpointed ``minhash_signatures`` of
+    ``batch_df`` under the index's parameters; the ingestion gate passes
+    it so the same proxy also feeds the registration commit."""
     p = read_index_params(path)
     num_hashes, bands = p["num_hashes"], p["bands"]
     rows_per_band = num_hashes // bands
@@ -198,7 +211,9 @@ def dedup_against_minhash_index(
     # — without truncation the whole shingle+MinHash pipeline over the
     # batch text re-executes once per consumer. ``localCheckpoint`` pins
     # the (doc, 32×8 B sig) proxy so the batch text is shingled exactly
-    # once per gate call; the measured count then gates explicit
+    # once per call — and once per ingestion gate, which builds the proxy
+    # itself and hands it here (``_sigs``) and to the registration commit.
+    # The measured count then gates explicit
     # broadcasts of the batch-derived sides (a checkpointed plan carries
     # no size estimate, so Catalyst would otherwise fall back to
     # sort-merge) — under the budget the INDEX side is never shuffled at
@@ -207,9 +222,13 @@ def dedup_against_minhash_index(
     # dedup.hamming_band_pairs.
     from .dedup import _fits_broadcast, _proxy_stats
 
-    batch_sigs = minhash_signatures(
-        batch_df, id_col, text_col, num_hashes, p["shingle_k"]
-    ).localCheckpoint(eager=False)
+    batch_sigs = (
+        _sigs
+        if _sigs is not None
+        else minhash_signatures(
+            batch_df, id_col, text_col, num_hashes, p["shingle_k"]
+        ).localCheckpoint(eager=False)
+    )
     n_batch, id_bytes = _proxy_stats(batch_sigs, "doc")
     # banded rows: band + bucket payload; sig rows: the hash array
     bcast_band = _fits_broadcast(

@@ -39,6 +39,8 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 MANIFEST_FILE = "_shard_manifest.json"
 
 
@@ -144,7 +146,8 @@ def verify_training_shards(
     Returns rows only for shards that MISMATCH (empty = verified)."""
     with open(os.path.join(path, MANIFEST_FILE), encoding="utf-8") as f:
         manifest = json.load(f)
-    expect = spark.createDataFrame(
+    expect = local_frame(
+        spark,
         [
             (s["shard"], s["n_docs"], s["content_xor"])
             for s in manifest["shards"]

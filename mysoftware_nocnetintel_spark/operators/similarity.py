@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import vectors as V
+from ..session import local_frame
 
 
 def brute_force_topk(
@@ -331,9 +332,9 @@ def ivf_centroids(
         # invocation (~0.3 s of pure py4j overhead on a serving
         # statement, measured round 6)
         return [(i, list(c)) for i, c in enumerate(centers)]
-    return spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centers)], ["cell", "centroid"]
-    ).select("cell", F.col("centroid").cast("array<double>").alias("centroid"))
+    return local_frame(
+        spark, list(enumerate(centers)), "cell bigint, centroid array<double>"
+    )
 
 
 _COSINE_BATCH_UDF = None

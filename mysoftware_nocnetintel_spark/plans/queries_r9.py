@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from ..sources import load_table
 
 
@@ -217,7 +218,8 @@ def q146_bpe_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("eval_checksum"),
         )
     )
-    merge_rows = spark.createDataFrame(
+    merge_rows = local_frame(
+        spark,
         [
             (i + 1, a, b, int(n))
             for i, (a, b, n) in enumerate(merges)

@@ -36,6 +36,7 @@ from glob import glob
 
 from pyspark.sql import DataFrame
 
+from ..session import local_frame
 from .commit_retry import CommitConflict, discard, recompute, retry
 
 _WRITER_TAG = "mysoftware-nocnetintel-spark-minimal"
@@ -1524,7 +1525,7 @@ def _masked_target(
         ab = os.path.abspath(os.path.join(path, rel))
         dv_rows.extend((ab, int(p)) for p in positions)
     if dv_rows:
-        dead = spark.createDataFrame(dv_rows, "__fp string, __pos bigint")
+        dead = local_frame(spark, dv_rows, "__fp string, __pos bigint")
         target = target.join(
             F.broadcast(dead), ["__fp", "__pos"], "left_anti"
         )
@@ -1612,8 +1613,9 @@ def merge_delta_rows(
     ``strategy`` picks the physical plan, same logical result:
 
     - ``"cow"`` (copy-on-write, default): only the files that actually
-      contain matched keys are rewritten — one distributed key-semi-join
-      finds them, survivors (non-matching rows of those files,
+      contain matched keys are rewritten — one distributed key join
+      finds them (and runs the ambiguity check), survivors
+      (non-matching rows of those files,
       deletion-vector-masked so deleted rows can't resurrect) are
       rewritten together with the merged source rows, and the commit is
       ONE atomic version json (removes for the touched files + adds).
@@ -1682,30 +1684,26 @@ def merge_delta_rows(
     src = source.select(*table_cols)
     target = _masked_target(spark, path, state)
 
-    # ambiguity gate: duplicate source keys are only an error when they
-    # actually match a target row (duplicate not-matched rows both insert,
-    # as in SQL MERGE)
-    dup_keys = (
-        src.groupBy(*keys).count().filter(F.col("count") > 1).drop("count")
+    # ONE target probe: each touched file with the most source rows any
+    # of its keys matches. The inner equi-join drops NULL keys (they
+    # never match), and duplicate source keys are only an error when
+    # they actually match a target row (duplicate not-matched rows both
+    # insert, as in SQL MERGE)
+    probe = (
+        target.select("__fp", *keys)
+        .join(src.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n")), keys)
+        .groupBy("__fp")
+        .agg(F.max("__n").alias("__n"))
+        .collect()
     )
-    if (
-        dup_keys.join(target.select(*keys), keys, "left_semi")
-        .limit(1)
-        .count()
-    ):
+    if any(r["__n"] > 1 for r in probe):
         raise ValueError(
             "merge is ambiguous: more than one source row matches the same "
             "target row (duplicate ON keys in source)"
         )
 
     src_keys = src.select(*keys).distinct()
-    touched_abs = sorted(
-        r["__fp"]
-        for r in target.join(src_keys, keys, "left_semi")
-        .select("__fp")
-        .distinct()
-        .collect()
-    )
+    touched_abs = sorted(r["__fp"] for r in probe)
     abs_to_rel = {
         os.path.abspath(os.path.join(path, rel)): rel
         for rel in state["live"]
@@ -2365,7 +2363,7 @@ def delta_table_changes(
             for rel, e in t_live.items()
             if rel in rels
         })
-        keys = spark.createDataFrame(rows, "__fp string, __pos bigint")
+        keys = local_frame(spark, rows, "__fp string, __pos bigint")
         parts.append(
             _masked_target(spark, path, unmasked)
             .join(F.broadcast(keys), ["__fp", "__pos"])
@@ -2867,7 +2865,7 @@ def delta_history(spark, path: str) -> DataFrame:
     informational ``commitInfo.timestamp`` (every commit this writer
     makes since round 8), else the commit file's mtime — the same
     preference ``as_of_ms`` time travel uses. Driver-side JSON walk — one KB-scale
-    row per commit — then a bounded createDataFrame."""
+    row per commit — then a bounded local frame."""
     log_dir = os.path.join(path, "_delta_log")
     versions = _log_versions(log_dir)
     cp_v = _checkpoint_version(log_dir)
@@ -2944,7 +2942,8 @@ def delta_history(spark, path: str) -> DataFrame:
                 txn_ver,
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "version long, commit_ts_ms long, operation string, "
         "n_added_files long, n_removed_files long, "

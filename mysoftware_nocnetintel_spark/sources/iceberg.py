@@ -38,6 +38,7 @@ from glob import glob
 
 from pyspark.sql import DataFrame
 
+from ..session import local_frame
 from .avro_lite import write_avro_file
 from .commit_retry import CommitConflict, discard, recompute, retry
 
@@ -3986,8 +3987,8 @@ def iceberg_refs(spark, path: str) -> "DataFrame":
     rows = [
         (n, r["type"], r["snapshot-id"]) for n, r in sorted(refs.items())
     ]
-    return spark.createDataFrame(
-        rows, "name string, type string, snapshot_id long"
+    return local_frame(
+        spark, rows, "name string, type string, snapshot_id long"
     )
 
 
@@ -4117,7 +4118,7 @@ def iceberg_snapshots(spark, path: str) -> "DataFrame":
     metadata tables: one row per snapshot with its operation, sequence
     number, and LIVE file/record/delete-file counts resolved from its
     manifest list (KB-scale driver-side Avro walk, bounded
-    createDataFrame; the data files themselves are never touched)."""
+    local frame; the data files themselves are never touched)."""
     from .avro_lite import read_avro_file
 
     meta_dir = os.path.join(path, "metadata")
@@ -4156,7 +4157,8 @@ def iceberg_snapshots(spark, path: str) -> "DataFrame":
                 s["snapshot-id"] == meta.get("current-snapshot-id"),
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "snapshot_id long, parent_snapshot_id long, sequence_number long, "
         "timestamp_ms long, operation string, txn_app string, "
@@ -4198,7 +4200,8 @@ def iceberg_files(spark, path: str, snapshot_id: int | None = None) -> "DataFram
                 e.spec_id,
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "file_path string, file_format string, partition string, "
         "sequence_number long, file_size_bytes long, has_bounds boolean, "
@@ -4238,7 +4241,8 @@ def iceberg_partition_specs(spark, path: str) -> "DataFrame":
                     f.get("field-id"),
                 )
             )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "spec_id int, is_default boolean, field string, transform string, "
         "source_column string, field_id int",

@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
+
 
 def read_jsonl(spark: SparkSession, path: str, schema: T.StructType | None = None) -> DataFrame:
     """S2: newline-delimited JSON raw logs. Always pass a schema at scale —
@@ -105,10 +107,10 @@ def read_table_format(
 _DELTA_READER_FEATURES = {"v2Checkpoint", "columnMapping", "deletionVectors"}
 
 # Deletion-vector masking decodes bitmaps DRIVER-side (they ship in the
-# log/DV files the driver already reads) and parallelizes the positions
-# for a broadcast anti-join. The decoded-position total is capped so a
-# pathological table can't balloon driver memory — same posture as the
-# Iceberg reader's _MAX_DELETE_ROWS.
+# log/DV files the driver already reads) and ships the positions as a
+# local relation for a broadcast anti-join. The decoded-position total is
+# capped so a pathological table can't balloon driver memory — same
+# posture as the Iceberg reader's _MAX_DELETE_ROWS.
 _MAX_DV_POSITIONS = 5_000_000
 
 
@@ -787,7 +789,7 @@ def read_delta_snapshot(
                 )
             dv_rows.extend((os.path.abspath(abspath), p) for p in positions)
     deleted = (
-        spark.createDataFrame(dv_rows, "__fp string, __pos long")
+        local_frame(spark, dv_rows, "__fp string, __pos long")
         if dv_rows
         else None
     )
@@ -1279,8 +1281,8 @@ def _scan_iceberg_avro(
         ", ".join(ddl_parts + ["`__fp` string", "`__pos` bigint"])
     )
     paths = [os.path.abspath(e.path) for e in entries]
-    files_df = spark.createDataFrame(
-        [(p,) for p in paths], "__path string"
+    files_df = local_frame(
+        spark, [(p,) for p in paths], "__path string"
     ).repartition(len(paths), "__path")
     # RENAME support (name mapping): an avro record decoded from a file
     # written pre-rename keys its values by the historical name — try
@@ -1897,8 +1899,10 @@ def _apply_equality_deletes(
     import functools
     from collections import defaultdict
 
-    seq_df = spark.createDataFrame(
-        [(e.path, e.seq) for e in data_files], "__fp: string, __fseq: long"
+    seq_df = local_frame(
+        spark,
+        [(e.path, e.seq) for e in data_files],
+        "__fp: string, __fseq: long",
     )
     data = data.join(F.broadcast(seq_df), "__fp", "inner")
     groups: dict[tuple[str, ...], list[tuple[str, int]]] = defaultdict(list)
@@ -1968,8 +1972,9 @@ def _position_delete_rows(spark: SparkSession, delete_files: list):
     delete files (str paths) scan distributed; v3 deletion vectors
     (:class:`_DVDelete`) decode DRIVER-side — the blobs are KB-scale
     roaring bitmaps the driver's metadata walk already located — and
-    parallelize for the same broadcast anti-join, capped like the Delta
-    DV path so a pathological table can't balloon driver memory. Both
+    ship as a local relation for the same broadcast anti-join, capped
+    like the Delta DV path so a pathological table can't balloon driver
+    memory. Both
     kinds compose into ONE mask."""
     paths = [f for f in delete_files if isinstance(f, str)]
     dvs = [f for f in delete_files if isinstance(f, _DVDelete)]
@@ -2000,9 +2005,7 @@ def _position_delete_rows(spark: SparkSession, delete_files: list):
                 )
             ap = os.path.abspath(d.data_path)
             rows.extend((ap, p) for p in positions)
-        parts.append(
-            spark.createDataFrame(rows, "__fp string, __pos long")
-        )
+        parts.append(local_frame(spark, rows, "__fp string, __pos long"))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

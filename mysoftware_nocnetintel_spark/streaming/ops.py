@@ -1049,39 +1049,49 @@ def dedup_gate_batch(
     ``"ingest"`` (default — they pass through to the corpus EVERY time
     they arrive, including non-txn re-deliveries; pair the corpus with an
     exact-dedup pass if short docs matter), or ``"drop"`` (they never
-    ingest). Both are deterministic; neither can near-dup-gate them."""
+    ingest). Both are deterministic; neither can near-dup-gate them.
+
+    The batch is shingled and signed ONCE: the checkpointed ``(doc, sig)``
+    proxy feeds the verdicts, and its semi-join with the novel ids is what
+    the index registers. Lineage: both the proxy and ``novel`` are
+    local checkpoints (the truncation trade documented at
+    dedup.hamming_band_pairs); they live through both commits and are
+    reclaimed only by ContextCleaner once unreferenced."""
     if short_docs not in ("ingest", "drop"):
         raise ValueError(f"short_docs must be 'ingest' or 'drop': {short_docs!r}")
     from ..functions.text import word_shingles
-    from ..operators.dedup_index import (
-        append_to_minhash_index,
-        dedup_against_minhash_index,
-        read_index_params,
-    )
+    from ..operators import dedup_index as DI
+    from ..operators.dedup import minhash_signatures
     from ..sources.delta import write_delta_append
 
     spark = batch_df.sparkSession
+    p = DI.read_index_params(index_path)
     if short_docs == "drop":
-        k = read_index_params(index_path)["shingle_k"]
         batch_df = batch_df.filter(
-            F.size(word_shingles(F.col(text_col), k)) > 0
+            F.size(word_shingles(F.col(text_col), p["shingle_k"])) > 0
         )
-    verdicts = dedup_against_minhash_index(
-        spark, batch_df, index_path, id_col, text_col, threshold
+    sigs = minhash_signatures(
+        batch_df, id_col, text_col, p["num_hashes"], p["shingle_k"]
+    ).localCheckpoint(eager=False)
+    verdicts = DI.dedup_against_minhash_index(
+        spark, batch_df, index_path, id_col, text_col, threshold, _sigs=sigs
     )
     dup_ids = verdicts.select(F.col("doc").alias(id_col)).distinct()
     # localCheckpoint: `novel` feeds BOTH commits below — without it the
-    # batch minhash + full index banding + verify joins execute twice
-    # per micro-batch (the dedup.py shared-intermediate pattern)
+    # full index banding + verify joins execute twice per micro-batch
+    # (the dedup.py shared-intermediate pattern)
     novel = batch_df.join(dup_ids, id_col, "left_anti").localCheckpoint(
         eager=False
     )
     write_delta_append(
         novel, corpus_path, txn=(f"{app_id}:corpus", int(batch_id))
     )
-    append_to_minhash_index(
+    novel_sigs = sigs.join(
+        novel.select(F.col(id_col).alias("doc")), "doc", "left_semi"
+    )
+    DI.append_to_minhash_index(
         novel, index_path, id_col, text_col,
-        txn=(f"{app_id}:index", int(batch_id)),
+        txn=(f"{app_id}:index", int(batch_id)), _sigs=novel_sigs,
     )
 
 
@@ -1109,7 +1119,12 @@ def media_gate_batch(
 
     Undecodable payloads (the signer's NULL drops) pass through to the
     corpus un-gated and un-registered — the media analogue of the text
-    gate's ``short_docs="ingest"`` policy, documented there."""
+    gate's ``short_docs="ingest"`` policy, documented there.
+
+    Lineage: the signature proxy and ``novel`` are local checkpoints
+    (the truncation trade documented at dedup.hamming_band_pairs); they
+    live through both commits and are reclaimed only by ContextCleaner
+    once unreferenced."""
     from ..operators.hamming_index import (
         append_to_hamming_index,
         dedup_against_hamming_index,
