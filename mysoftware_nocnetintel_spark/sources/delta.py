@@ -777,50 +777,15 @@ def _file_stats(abspath: str, cols: set[str]) -> str | None:
     (skipping on a partial range would drop rows); NaN-poisoned
     float/double stats are treated as missing (same hardening as the
     Iceberg zone maps). Dates publish in ISO form (orders identically)."""
-    import math
-
     import pyarrow.parquet as pq
+
+    from .readers import _footer_ranges
 
     try:
         meta = pq.ParquetFile(abspath).metadata
     except Exception:
         return None
-    mins: dict = {}
-    maxs: dict = {}
-    nulls: dict = {}
-    dead: set[str] = set()
-    for rg in range(meta.num_row_groups):
-        row_group = meta.row_group(rg)
-        for ci in range(row_group.num_columns):
-            col = row_group.column(ci)
-            name = col.path_in_schema
-            if name not in cols or name in dead:
-                continue
-            st = col.statistics
-            if st is None or not st.has_min_max:
-                dead.add(name)
-                continue
-            mn, mx = st.min, st.max
-            if hasattr(mn, "isoformat"):
-                mn, mx = mn.isoformat(), mx.isoformat()
-            if isinstance(mn, float) and (math.isnan(mn) or math.isnan(mx)):
-                dead.add(name)
-                continue
-            nc = st.null_count if st.has_null_count else None
-            if name in mins:
-                mins[name] = min(mins[name], mn)
-                maxs[name] = max(maxs[name], mx)
-                nulls[name] = (
-                    None
-                    if nc is None or nulls[name] is None
-                    else nulls[name] + nc
-                )
-            else:
-                mins[name], maxs[name], nulls[name] = mn, mx, nc
-    for name in dead:
-        mins.pop(name, None)
-        maxs.pop(name, None)
-        nulls.pop(name, None)
+    mins, maxs, nulls = _footer_ranges(meta, cols)
     return json.dumps(
         {
             "numRecords": meta.num_rows,
@@ -943,24 +908,9 @@ def _stage_append(
         raise ValueError(f"partition columns {missing} not in the schema")
     version = (state["version"] + 1) if exists else 0
 
-    if sort_by:
-        bad = [c for c in sort_by if c not in df.columns]
-        if bad:
-            raise ValueError(f"sort_by columns {bad} not in the schema")
-        from pyspark.sql import functions as F
+    from .zorder import cluster
 
-        num = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "8")
-        )
-        if zorder:
-            from .zorder import zvalue_column
-
-            zc = zvalue_column(df, tuple(sort_by))
-            df = df.repartitionByRange(num, zc).sortWithinPartitions(zc)
-        else:
-            df = df.repartitionByRange(
-                num, *[F.col(c) for c in sort_by]
-            ).sortWithinPartitions(*sort_by)
+    df = cluster(df, sort_by, zorder)
     # distributed data write into a staging dir, then move into the root
     # (for partitioned tables the stage has Hive subdirs, moved as-is)
     stage = os.path.join(path, f"__stage-{uuid.uuid4().hex[:12]}")

@@ -23,13 +23,14 @@
 
 The COMMIT is driver-side KB-scale metadata (one manifest Avro, one
 manifest-list Avro, one metadata.json); the data write itself is a normal
-distributed ``df.write.parquet``.
+distributed ``df.write.parquet``. Every verb mints its snapshot through
+:func:`_commit_snapshot` and stages its data files through
+:func:`_stage_data_files`.
 """
 
 from __future__ import annotations
 
 import json
-import math
 import os
 import shutil
 import time
@@ -182,9 +183,11 @@ def _file_bounds(
 ) -> tuple[dict | None, dict | None]:
     """(lower_bounds, upper_bounds) maps — str(field id) → spec binary
     single-value bytes (:func:`encode_bound_value`) — aggregated across
-    the file's row-group parquet statistics. A column missing statistics
-    in ANY row group gets no bounds (skipping on a partial range would
-    drop rows)."""
+    the file's row-group parquet statistics by
+    :func:`.readers._footer_ranges` (same dead-column and NaN rules as
+    Delta ``add.stats``)."""
+    from .readers import _footer_ranges
+
     if not schema:
         return None, None
     by_name = {
@@ -194,41 +197,15 @@ def _file_bounds(
     }
     if not by_name:
         return None, None
-    lo: dict = {}
-    hi: dict = {}
-    dead: set[str] = set()
-    for rg in range(pq_meta.num_row_groups):
-        row_group = pq_meta.row_group(rg)
-        for ci in range(row_group.num_columns):
-            col = row_group.column(ci)
-            name = col.path_in_schema
-            if name not in by_name or name in dead:
-                continue
-            st = col.statistics
-            if st is None or not st.has_min_max:
-                dead.add(name)
-                continue
-            fid = str(by_name[name][0])
-            mn, mx = st.min, st.max
-            if hasattr(mn, "isoformat"):  # date → ISO string (ordered)
-                mn, mx = mn.isoformat(), mx.isoformat()
-            # parquet-mr / Spark include NaN in float/double min-max
-            # stats; every comparison against a NaN bound is False, so a
-            # NaN-poisoned bound would prune files that DO contain
-            # matching rows. Treat it like missing statistics.
-            if isinstance(mn, float) and (math.isnan(mn) or math.isnan(mx)):
-                dead.add(name)
-                continue
-            lo[fid] = mn if fid not in lo else min(lo[fid], mn)
-            hi[fid] = mx if fid not in hi else max(hi[fid], mx)
-    for name in dead:
-        fid = str(by_name[name][0])
-        lo.pop(fid, None)
-        hi.pop(fid, None)
-    types_by_fid = {str(i): t for _n, (i, t) in by_name.items()}
-    lo = {k: encode_bound_value(types_by_fid[k], v) for k, v in lo.items()}
-    hi = {k: encode_bound_value(types_by_fid[k], v) for k, v in hi.items()}
-    return (lo or None), (hi or None)
+    mins, maxs, _nulls = _footer_ranges(pq_meta, by_name)
+
+    def enc(vals: dict) -> dict | None:
+        return {
+            str(by_name[n][0]): encode_bound_value(by_name[n][1], v)
+            for n, v in vals.items()
+        } or None
+
+    return enc(mins), enc(maxs)
 
 
 MANIFEST_FILE_SCHEMA = {
@@ -564,55 +541,6 @@ def _hive_decode_partition_value(t: str, raw: str):
     return raw  # string / date (ISO form)
 
 
-def _stage_partitioned_parquet(
-    df: DataFrame, path: str, data_dir: str, pfs, pack: bool = False
-) -> list[tuple[str, dict]]:
-    """Fan-out-write ``df`` per partition tuple (Spark partitionBy over
-    DUPLICATE ``__part_<name>`` transform columns, so the original
-    columns stay in the data files as Iceberg requires), move the staged
-    files into ``data_dir`` under fresh names, and return
-    ``(dest, partition_values)`` pairs with the values decoded from the
-    Hive directory names to the spec's types. ``pack`` collapses each
-    partition tuple to one task → one output file first (the bin-packing
-    write shape). Shared by append, merge, and rewrite."""
-    from pyspark.sql import functions as F
-
-    from .iceberg_transforms import transform_column
-
-    stage = os.path.join(path, f"__stage-{uuid.uuid4().hex[:12]}")
-    try:
-        staged = df
-        for pf in pfs:
-            staged = staged.withColumn(
-                f"__part_{pf.name}", transform_column(pf)
-            )
-        if pack:
-            staged = staged.repartition(
-                *[F.col(f"__part_{pf.name}") for pf in pfs]
-            )
-        staged.write.partitionBy(
-            *[f"__part_{pf.name}" for pf in pfs]
-        ).parquet(stage)
-        types = {pf.name: pf.value_type for pf in pfs}
-        out: list[tuple[str, dict]] = []
-        for f in sorted(
-            glob(os.path.join(stage, "**", "*.parquet"), recursive=True)
-        ):
-            pvals: dict = {}
-            for piece in os.path.relpath(
-                os.path.dirname(f), stage
-            ).split(os.sep):
-                k, _, v = piece.partition("=")
-                name = k[len("__part_"):]
-                pvals[name] = _hive_decode_partition_value(types[name], v)
-            dest = os.path.join(data_dir, f"{uuid.uuid4().hex[:16]}.parquet")
-            shutil.move(f, dest)
-            out.append((dest, pvals))
-        return out
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-
-
 # spark/iceberg primitive -> avro type for row-oriented data files
 _AVRO_DATA_TYPES = {
     "int": "int",
@@ -784,6 +712,278 @@ def _write_avro_data_files(
     }
 
 
+def _stage_data_files(
+    df: DataFrame,
+    path: str,
+    data_dir: str,
+    pfs,
+    file_format: str = "parquet",
+    pack: bool = False,
+    drop_empty: bool = False,
+) -> "list[tuple[str, dict | None, str, int | None]]":
+    """The one distributed data-file write of every Iceberg writer:
+    write ``df`` into a private ``__stage-*`` directory under ``path``
+    (removed however the write ends), move each staged file into
+    ``data_dir`` under a fresh name, and return ``(dest, partition
+    values | None, file format, record count | None)`` per file. Three
+    layouts:
+
+    - avro: :func:`_write_avro_data_files`, partitioned or not; the
+      record count comes back from staging;
+    - partitioned parquet: one fan-out write (Spark partitionBy over
+      DUPLICATE ``__part_<name>`` transform columns, so the original
+      columns stay in the data files as Iceberg requires), partition
+      values decoded from the Hive directory names to the spec's types;
+      ``pack`` first collapses each partition tuple to one task → one
+      output file (the bin-packing write shape);
+    - unpartitioned parquet: a plain distributed write.
+
+    Parquet counts are None: :func:`_write_data_manifest` reads them from
+    the footer. ``drop_empty`` leaves zero-row files behind in the stage
+    (the row-delta verbs, whose write set may legitimately be empty)."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from .iceberg_transforms import transform_column
+
+    stage = os.path.join(path, f"__stage-{uuid.uuid4().hex[:12]}")
+    try:
+        files: list[tuple[str, dict | None, str, int | None]] = []
+        if file_format == "avro":
+            counts = _write_avro_data_files(df, stage, pfs)
+            for f in sorted(counts):
+                n, pvals = counts[f]
+                if n or not drop_empty:
+                    files.append((f, pvals, "AVRO", n))
+        else:
+            parts = [f"__part_{pf.name}" for pf in pfs]
+            for pf, col in zip(pfs, parts):
+                df = df.withColumn(col, transform_column(pf))
+            writer = df.write
+            if parts:
+                if pack:
+                    df = df.repartition(*[F.col(c) for c in parts])
+                writer = df.write.partitionBy(*parts)
+            writer.parquet(stage)
+            types = {pf.name: pf.value_type for pf in pfs}
+            for f in sorted(
+                glob(os.path.join(stage, "**", "*.parquet"), recursive=True)
+            ):
+                if drop_empty and not pq.read_metadata(f).num_rows:
+                    continue
+                pvals = None
+                if pfs:
+                    pvals = {}
+                    rel = os.path.relpath(os.path.dirname(f), stage)
+                    for piece in rel.split(os.sep):
+                        k, _, v = piece.partition("=")
+                        name = k[len("__part_"):]
+                        pvals[name] = _hive_decode_partition_value(
+                            types[name], v
+                        )
+                files.append((f, pvals, "PARQUET", None))
+        out = []
+        for f, pvals, fmt, n in files:
+            dest = os.path.join(
+                data_dir, f"{uuid.uuid4().hex[:16]}.{fmt.lower()}"
+            )
+            shutil.move(f, dest)
+            out.append((dest, pvals, fmt, n))
+        return out
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+
+
+def _write_data_manifest(
+    manifest: str,
+    snap_id: int,
+    files: "list[tuple[str, dict | None, str, int | None]]",
+    part_fields: list[tuple[str, str]],
+    schema: dict | None,
+) -> str:
+    """Write one manifest of ADDED data-file entries for ``files``
+    (:func:`_stage_data_files` tuples) and return its path. Each parquet
+    footer is read once, driver-side and KB-scale, for the record count
+    and the zone-map bounds keyed by ``schema``'s field ids (always the
+    TABLE's schema, never the incoming frame's column order); avro files
+    keep their staged count and carry no bounds. ``part_fields`` picks
+    the partition-record entry schema."""
+    import pyarrow.parquet as pq
+
+    entries = []
+    for f, pvals, fmt, nrows in files:
+        lo = hi = None  # row-format files carry no column stats
+        if fmt == "PARQUET":
+            pmeta = pq.read_metadata(f)
+            lo, hi = _file_bounds(pmeta, schema)
+            nrows = pmeta.num_rows
+        entries.append(
+            {
+                "status": 1,  # ADDED
+                "snapshot_id": snap_id,
+                "data_file": {
+                    "content": 0,
+                    "file_path": f,
+                    "file_format": fmt,
+                    "record_count": nrows,
+                    "file_size_in_bytes": os.path.getsize(f),
+                    "partition": pvals,
+                    "lower_bounds": lo,
+                    "upper_bounds": hi,
+                },
+            }
+        )
+    write_avro_file(
+        manifest,
+        _partition_manifest_schema(part_fields)
+        if part_fields
+        else MANIFEST_ENTRY_SCHEMA,
+        entries,
+    )
+    return manifest
+
+
+def _write_delete_manifest(
+    meta_dir: str,
+    snap_id: int,
+    del_file: str,
+    content: int,
+    n_rows: int,
+    equality_ids: list[int] | None = None,
+) -> str:
+    """Write the one-entry manifest adding a driver-written delete parquet
+    (``content`` 1 = position deletes, 2 = equality deletes) and return
+    its path."""
+    manifest = os.path.join(meta_dir, f"m-{snap_id}-deletes.avro")
+    write_avro_file(
+        manifest,
+        MANIFEST_ENTRY_SCHEMA,
+        [
+            {
+                "status": 1,
+                "snapshot_id": snap_id,
+                "data_file": {
+                    "content": content,
+                    "file_path": del_file,
+                    "file_format": "PARQUET",
+                    "record_count": n_rows,
+                    "file_size_in_bytes": os.path.getsize(del_file),
+                    "equality_ids": equality_ids,
+                },
+            }
+        ],
+    )
+    return manifest
+
+
+def _base_snapshot_id(meta: dict | None, branch: str | None = None):
+    """The snapshot a new commit builds on: the branch's head for a
+    branch commit (the table head while the branch does not exist yet),
+    else the table head; None before a table's first snapshot."""
+    base = (meta or {}).get("current-snapshot-id")
+    if branch is not None:
+        base = ((meta.get("refs") or {}).get(branch) or {}).get(
+            "snapshot-id", base
+        )
+    return None if base in (None, -1) else base
+
+
+def _base_manifests(meta: dict | None, branch: str | None = None) -> list:
+    """The manifest-list rows of the base snapshot
+    (:func:`_base_snapshot_id`); none before a table's first one."""
+    from .avro_lite import read_avro_file
+    from .readers import _iceberg_local_path
+
+    base = _base_snapshot_id(meta, branch)
+    if base is None:
+        return []
+    snap = next(s for s in meta["snapshots"] if s["snapshot-id"] == base)
+    return read_avro_file(_iceberg_local_path(snap["manifest-list"]))[1]
+
+
+def _commit_snapshot(
+    meta_dir: str,
+    meta: dict | None,
+    ver: int,
+    manifests,
+    summary: dict,
+    staged: list[str],
+    branch: str | None = None,
+    updates: dict | None = None,
+) -> int:
+    """Mint ONE snapshot on top of ``meta`` (version ``ver``) and commit
+    it — the only place a snapshot id is computed or a manifest list is
+    written. Returns the new snapshot id.
+
+    ``manifests(snap_id, seq)`` writes this commit's manifests and
+    returns the manifest-list rows in order: a dict is a row carried
+    from an earlier list (``sequence_number`` defaulted to 0 when
+    absent), a ``(manifest path, content, spec id)`` tuple a manifest
+    this snapshot added (stamped with ``snap_id`` and ``seq``). The
+    snapshot record takes ``summary`` and names the base head as its
+    parent (:func:`_base_snapshot_id`); the metadata gains the snapshot,
+    the sequence number and the timestamp, moves the head — or, for a
+    ``branch`` commit, only that branch ref — and finally takes
+    ``updates``. Every file written here is added to ``staged`` before
+    the CAS; removing them after a lost race is the caller's retry
+    hook's job. The CAS goes through the module-level
+    :func:`_commit_metadata`."""
+    now_ms = int(time.time() * 1000)
+    snap_id = now_ms * 1000 + (ver + 1)  # unique, monotone per table
+    seq = (meta or {}).get("last-sequence-number", 0) + 1
+    rows = []
+    for r in manifests(snap_id, seq):
+        if isinstance(r, dict):
+            rows.append(dict(r, sequence_number=r.get("sequence_number", 0)))
+            continue
+        mpath, content, spec_id = r
+        staged.append(mpath)
+        rows.append(
+            {
+                "manifest_path": mpath,
+                "manifest_length": os.path.getsize(mpath),
+                "partition_spec_id": spec_id,
+                "content": content,
+                "sequence_number": seq,
+                "added_snapshot_id": snap_id,
+            }
+        )
+    mlist = os.path.join(meta_dir, f"snap-{snap_id}.avro")
+    write_avro_file(mlist, MANIFEST_FILE_SCHEMA, rows)
+    staged.append(mlist)
+    snapshot = {
+        "snapshot-id": snap_id,
+        "sequence-number": seq,
+        "timestamp-ms": now_ms,
+        "manifest-list": mlist,
+        "summary": summary,
+    }
+    parent = _base_snapshot_id(meta, branch)
+    if parent is not None:
+        # spec field; the ancestry walk behind fast-forward publish and
+        # shared-storage readers
+        snapshot["parent-snapshot-id"] = parent
+    new_meta = {
+        **(meta or {}),
+        "last-sequence-number": seq,
+        "last-updated-ms": now_ms,
+        "snapshots": (meta or {}).get("snapshots", []) + [snapshot],
+        "current-snapshot-id": snap_id,
+    }
+    if branch is not None:
+        # the TABLE HEAD does not move — only the branch ref advances
+        # (readers of main never see staged data until
+        # publish_iceberg_branch fast-forwards)
+        new_meta["current-snapshot-id"] = meta["current-snapshot-id"]
+        new_meta["refs"] = {
+            **(meta.get("refs") or {}),
+            branch: {"snapshot-id": snap_id, "type": "branch"},
+        }
+    new_meta.update(updates or {})
+    _commit_metadata(meta_dir, ver, new_meta)
+    return snap_id
+
+
 def _txn_already_committed(
     meta: dict | None, txn: "tuple[str, int] | None"
 ) -> bool:
@@ -869,8 +1069,6 @@ def write_iceberg_append(
     append whose (app, version) the history already holds skips with
     zero executor work, and :func:`_txn_already_committed` documents
     the retention caveat (summaries die with expired snapshots)."""
-    import pyarrow.parquet as pq
-
     if file_format not in ("parquet", "avro"):
         raise ValueError(f"file_format must be parquet or avro: {file_format!r}")
 
@@ -1056,73 +1254,63 @@ def write_iceberg_append(
             *[f["name"] for f in extra],
         )
 
-    if sort_by:
-        if file_format == "avro":
-            raise NotImplementedError(
-                "sort_by clusters parquet zone maps; avro files carry "
-                "no bounds to tighten"
-            )
-        bad = [c for c in sort_by if c not in df.columns]
-        if bad:
-            raise ValueError(f"sort_by columns {bad} not in the schema")
-        # range exchange on the cluster key, then an in-partition sort:
-        # each output file covers a narrow key slice, so its bounds are
-        # near-disjoint from its siblings'. The partition count is passed
-        # EXPLICITLY (from the session's shuffle-partition conf) so AQE
-        # cannot coalesce the clustered write back into one wide file.
-        # With ``zorder`` the key is the Morton interleave of the
-        # sort_by columns instead of their lexicographic order, so zone
-        # maps prune on EVERY participating column (sources/zorder.py).
-        from pyspark.sql import functions as F
-
-        num = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "8")
+    if sort_by and file_format == "avro":
+        raise NotImplementedError(
+            "sort_by clusters parquet zone maps; avro files carry "
+            "no bounds to tighten"
         )
-        if zorder:
-            from .zorder import zvalue_column
+    from .zorder import cluster
 
-            zc = zvalue_column(df, tuple(sort_by))
-            df = df.repartitionByRange(num, zc).sortWithinPartitions(zc)
-        else:
-            df = df.repartitionByRange(
-                num, *[F.col(c) for c in sort_by]
-            ).sortWithinPartitions(*sort_by)
-    # distributed data write: ONE write for both shapes. Partitioned
-    # tables partitionBy DUPLICATE columns (``__part_<c>``) so Spark's
-    # fan-out writer does the per-tuple file split in one distributed
-    # pass (no per-partition driver loop, no double-execution of a
-    # non-deterministic source plan) while the ORIGINAL columns stay in
-    # the data files as Iceberg requires. Partition values come back from
-    # the Hive dir names, decoded to the spec's type.
-    new_files: list[tuple[str, dict | None, str, int | None]] = []
-    stage = os.path.join(path, f"__stage-{uuid.uuid4().hex[:12]}")
-    try:
-        if file_format == "avro":
-            counts = _write_avro_data_files(
-                df, stage, pfs if part_fields else ()
-            )
-            for f in sorted(counts):
-                dest = os.path.join(data_dir, f"{uuid.uuid4().hex[:16]}.avro")
-                n, pvals = counts[f]
-                shutil.move(f, dest)
-                new_files.append((dest, pvals, "AVRO", n))
-        elif part_fields:
-            for dest, pvals in _stage_partitioned_parquet(
-                df, path, data_dir, pfs
-            ):
-                new_files.append((dest, pvals, "PARQUET", None))
-        else:
-            df.write.parquet(stage)
-            for f in sorted(glob(os.path.join(stage, "*.parquet"))):
-                dest = os.path.join(
-                    data_dir, f"{uuid.uuid4().hex[:16]}.parquet"
-                )
-                shutil.move(f, dest)
-                new_files.append((dest, None, "PARQUET", None))
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    # one distributed pass per append: Spark's fan-out writer does the
+    # per-partition-tuple file split (no per-partition driver loop, no
+    # double-execution of a non-deterministic source plan)
+    new_files = _stage_data_files(
+        cluster(df, sort_by, zorder), path, data_dir, pfs, file_format
+    )
     if not new_files:
         raise ValueError("append produced no data files")
+
+    # bounds are keyed by the TABLE's field ids — never derive them
+    # from the incoming DataFrame's column order on an existing table
+    if evolved_schema is not None:
+        table_schema = evolved_schema
+    elif meta is not None:
+        table_schema = (meta.get("schemas") or [None])[0]
+    else:
+        table_schema = _iceberg_schema(df.schema)
+    # the schema and partition fields this commit (re)states; the
+    # rebase below refuses a head whose schema or spec moved, so they
+    # hold for every attempt
+    table_updates: dict = {}
+    if meta is None:
+        schemas = [table_schema] if table_schema else []
+    elif evolved_schema is not None:
+        schemas = [evolved_schema]
+    else:
+        schemas = meta.get("schemas") or []
+    if schemas:
+        table_updates = {
+            "schemas": schemas,
+            "current-schema-id": schemas[0]["schema-id"],
+            "last-column-id": max(f["id"] for f in schemas[0]["fields"]),
+        }
+    if meta is None and part_fields:
+        name_to_id = {f["name"]: f["id"] for f in table_schema["fields"]}
+        table_updates["partition-specs"] = [
+            {
+                "spec-id": 0,
+                "fields": [
+                    {
+                        "name": pf.name,
+                        "transform": pf.transform,
+                        "source-id": name_to_id[pf.source_col],
+                        "field-id": 1000 + i,
+                    }
+                    for i, pf in enumerate(pfs)
+                ],
+            }
+        ]
+        table_updates["default-spec-id"] = 0
 
     def _table_sig(m: dict | None) -> str:
         return json.dumps(
@@ -1165,176 +1353,48 @@ def write_iceberg_append(
             discard(f for f, _pv, _fmt, _n in new_files)
             return meta["current-snapshot-id"]
 
+    def manifests(snap_id: int, _seq: int) -> list:
+        # append semantics: every manifest of the base (the branch head
+        # for write-audit-publish staging, else the table head) + this one
+        manifest = _write_data_manifest(
+            os.path.join(meta_dir, f"m-{snap_id}.avro"),
+            snap_id,
+            new_files,
+            part_fields,
+            table_schema,
+        )
+        return _base_manifests(meta, branch) + [
+            (manifest, 0, _default_spec_id(meta))
+        ]
+
     def attempt() -> int:
-        now_ms = int(time.time() * 1000)
-        snap_id = now_ms * 1000 + (ver + 1)  # unique, monotone per table
-        seq = (meta.get("last-sequence-number", 0) if meta else 0) + 1
-
-        # bounds are keyed by the TABLE's field ids — never derive them
-        # from the incoming DataFrame's column order on an existing table
-        if evolved_schema is not None:
-            bounds_schema = evolved_schema
-        elif meta is not None:
-            bounds_schema = (meta.get("schemas") or [None])[0]
-        else:
-            bounds_schema = _iceberg_schema(df.schema)
-        entries = []
-        for f, pvals, fmt, nrows in new_files:
-            if fmt == "PARQUET":
-                pmeta = pq.read_metadata(f)  # driver-side footer, KB-scale
-                lo, hi = _file_bounds(pmeta, bounds_schema)
-                nrows = pmeta.num_rows
-            else:
-                lo = hi = None  # row-format files carry no column stats
-            entries.append(
-                {
-                    "status": 1,  # ADDED
-                    "snapshot_id": snap_id,
-                    "data_file": {
-                        "content": 0,
-                        "file_path": f,
-                        "file_format": fmt,
-                        "record_count": nrows,
-                        "file_size_in_bytes": os.path.getsize(f),
-                        "partition": pvals,
-                        "lower_bounds": lo,
-                        "upper_bounds": hi,
-                    },
-                }
-            )
-        manifest = os.path.join(meta_dir, f"m-{snap_id}.avro")
-        entry_schema = (
-            _partition_manifest_schema(part_fields)
-            if part_fields
-            else MANIFEST_ENTRY_SCHEMA
-        )
-        write_avro_file(manifest, entry_schema, entries)
-
-        # append semantics: manifest-list = all prior manifests + this one.
-        # The BASE is the branch head for branch appends (write-audit-
-        # publish staging), else the table head.
-        prior = []
-        base_id = None
-        if meta is not None:
-            base_id = meta["current-snapshot-id"]
-            if branch is not None:
-                ex = (meta.get("refs") or {}).get(branch)
-                if ex is not None:
-                    base_id = ex["snapshot-id"]
-            cur = next(
-                s
-                for s in meta["snapshots"]
-                if s["snapshot-id"] == base_id
-            )
-            from .avro_lite import read_avro_file
-
-            _, prior = read_avro_file(cur["manifest-list"])
-        mlist = os.path.join(meta_dir, f"snap-{snap_id}.avro")
-        write_avro_file(
-            mlist,
-            MANIFEST_FILE_SCHEMA,
-            [
-                dict(m, sequence_number=m.get("sequence_number", 0))
-                for m in prior
-            ]
-            + [
-                {
-                    "manifest_path": manifest,
-                    "manifest_length": os.path.getsize(manifest),
-                    "partition_spec_id": _default_spec_id(meta),
-                    "content": 0,
-                    "sequence_number": seq,
-                    "added_snapshot_id": snap_id,
-                }
-            ],
-        )
-
-        snapshot = {
-            "snapshot-id": snap_id,
-            "sequence-number": seq,
-            "timestamp-ms": now_ms,
-            "manifest-list": mlist,
-            "summary": {"operation": "append"},
-        }
+        summary = {"operation": "append"}
         if txn is not None:
             # idempotence marker, atomic with the snapshot itself
-            snapshot["summary"]["txn-app"] = txn[0]
-            snapshot["summary"]["txn-version"] = str(int(txn[1]))
-        if base_id is not None:
-            # spec field; the ancestry walk behind fast-forward publish
-            snapshot["parent-snapshot-id"] = base_id
-        if meta is None:
-            schema = _iceberg_schema(df.schema)
-            schemas = [schema] if schema else []
-        elif evolved_schema is not None:
-            # additive evolution: this commit's metadata carries the
-            # widened schema (new ids assigned above the prior maximum)
-            schemas = [evolved_schema]
-        else:
-            # schema compatibility was validated BEFORE the data write
-            schemas = meta.get("schemas") or []
-        new_meta = {
+            summary["txn-app"] = txn[0]
+            summary["txn-version"] = str(int(txn[1]))
+        updates = {
             "format-version": 2,
             "table-uuid": (meta or {}).get("table-uuid", str(uuid.uuid4())),
             "location": path,
-            "last-sequence-number": seq,
-            "last-updated-ms": now_ms,
             # carry table properties forward (the name mapping lives
             # there); the writer tag is always (re)asserted
             "properties": {
                 **((meta or {}).get("properties") or {}),
                 "writer": _WRITER_TAG,
             },
-            "snapshots": ((meta or {}).get("snapshots", [])) + [snapshot],
-            "current-snapshot-id": snap_id,
+            **table_updates,
         }
-        # named refs pin snapshots across appends — carry them verbatim
-        # (every other commit site rebuilds via dict(meta, ...) and keeps
-        # them implicitly)
-        if meta is not None and meta.get("refs"):
-            new_meta["refs"] = dict(meta["refs"])
-        if branch is not None:
-            # branch append: the TABLE HEAD does not move — only the
-            # branch ref advances (readers of main never see staged data
-            # until publish_iceberg_branch fast-forwards)
-            new_meta["current-snapshot-id"] = meta["current-snapshot-id"]
-            refs = dict(new_meta.get("refs") or {})
-            refs[branch] = {"snapshot-id": snap_id, "type": "branch"}
-            new_meta["refs"] = refs
-        if meta is not None:
-            if meta.get("partition-specs"):
-                new_meta["partition-specs"] = meta["partition-specs"]
-                new_meta["default-spec-id"] = meta.get("default-spec-id", 0)
-                if "last-partition-id" in meta:
-                    new_meta["last-partition-id"] = meta["last-partition-id"]
-        elif part_fields:
-            name_to_id = {
-                f["name"]: f["id"]
-                for f in _iceberg_schema(df.schema)["fields"]
-            }
-            new_meta["partition-specs"] = [
-                {
-                    "spec-id": 0,
-                    "fields": [
-                        {
-                            "name": pf.name,
-                            "transform": pf.transform,
-                            "source-id": name_to_id[pf.source_col],
-                            "field-id": 1000 + i,
-                        }
-                        for i, pf in enumerate(pfs)
-                    ],
-                }
-            ]
-            new_meta["default-spec-id"] = 0
-        if schemas:
-            new_meta["schemas"] = schemas
-            new_meta["current-schema-id"] = schemas[0]["schema-id"]
-            new_meta["last-column-id"] = max(
-                f["id"] for f in schemas[0]["fields"]
-            )
-        _commit_metadata(meta_dir, ver, new_meta)
-        return snap_id
+        return _commit_snapshot(
+            meta_dir,
+            meta,
+            ver,
+            manifests,
+            summary,
+            staged=[],
+            branch=branch,
+            updates=updates,
+        )
 
     return retry(attempt, rebase, attempts=5)
 
@@ -1454,77 +1514,20 @@ def _commit_delete_file(
     and re-apply at the new head's sequence — the serial order "winner
     first, then this delete". A failed validation deletes the staged
     delete file and surfaces the conflict."""
-    from .avro_lite import read_avro_file
-
     staged: list[str] = []
 
+    def manifests(snap_id: int, _seq: int) -> list:
+        manifest = _write_delete_manifest(
+            meta_dir, snap_id, del_file, file_content, n_rows, equality_ids
+        )
+        return _base_manifests(meta) + [
+            (manifest, 1, _default_spec_id(meta))  # delete manifest
+        ]
+
     def attempt() -> int:
-        now_ms = int(time.time() * 1000)
-        snap_id = now_ms * 1000 + (ver + 1)
-        seq = meta.get("last-sequence-number", 0) + 1
-        manifest = os.path.join(meta_dir, f"m-{snap_id}-deletes.avro")
-        write_avro_file(
-            manifest,
-            MANIFEST_ENTRY_SCHEMA,
-            [
-                {
-                    "status": 1,
-                    "snapshot_id": snap_id,
-                    "data_file": {
-                        "content": file_content,
-                        "file_path": del_file,
-                        "file_format": "PARQUET",
-                        "record_count": n_rows,
-                        "file_size_in_bytes": os.path.getsize(del_file),
-                        "equality_ids": equality_ids,
-                    },
-                }
-            ],
+        return _commit_snapshot(
+            meta_dir, meta, ver, manifests, {"operation": "delete"}, staged
         )
-        cur = next(
-            s
-            for s in meta["snapshots"]
-            if s["snapshot-id"] == meta["current-snapshot-id"]
-        )
-        _, prior = read_avro_file(cur["manifest-list"])
-        mlist = os.path.join(meta_dir, f"snap-{snap_id}.avro")
-        write_avro_file(
-            mlist,
-            MANIFEST_FILE_SCHEMA,
-            [
-                dict(m, sequence_number=m.get("sequence_number", 0))
-                for m in prior
-            ]
-            + [
-                {
-                    "manifest_path": manifest,
-                    "manifest_length": os.path.getsize(manifest),
-                    "partition_spec_id": _default_spec_id(meta),
-                    "content": 1,  # delete manifest
-                    "sequence_number": seq,
-                    "added_snapshot_id": snap_id,
-                }
-            ],
-        )
-        snapshot = {
-            "snapshot-id": snap_id,
-            "sequence-number": seq,
-            "timestamp-ms": now_ms,
-            "manifest-list": mlist,
-            "summary": {"operation": "delete"},
-        }
-        new_meta = dict(
-            meta,
-            **{
-                "last-sequence-number": seq,
-                "last-updated-ms": now_ms,
-                "snapshots": meta.get("snapshots", []) + [snapshot],
-                "current-snapshot-id": snap_id,
-            },
-        )
-        staged[:] = [manifest, mlist]
-        _commit_metadata(meta_dir, ver, new_meta)
-        return snap_id
 
     def revalidate(conflict: CommitConflict) -> None:
         nonlocal meta, ver
@@ -1858,38 +1861,11 @@ def merge_iceberg_rows(
     new_files: list[tuple[str, dict | None, str, int | None]] = []
     del_file: str | None = None
     staged_ok = False
-    stage = os.path.join(path, f"__stage-{uuid.uuid4().hex[:12]}")
     try:
         if rows is not None:
-            if file_format == "avro":
-                counts = _write_avro_data_files(rows, stage, pfs)
-                for f in sorted(counts):
-                    n, pv = counts[f]
-                    if not n:
-                        continue
-                    dest = os.path.join(
-                        data_dir, f"{uuid.uuid4().hex[:16]}.avro"
-                    )
-                    shutil.move(f, dest)
-                    new_files.append((dest, pv, "AVRO", n))
-            elif pfs:
-                for dest, pvals in _stage_partitioned_parquet(
-                    rows, path, data_dir, pfs
-                ):
-                    if not pq.read_metadata(dest).num_rows:
-                        os.remove(dest)
-                        continue
-                    new_files.append((dest, pvals, "PARQUET", None))
-            else:
-                rows.write.parquet(stage)
-                for f in sorted(glob(os.path.join(stage, "*.parquet"))):
-                    if not pq.read_metadata(f).num_rows:
-                        continue
-                    dest = os.path.join(
-                        data_dir, f"{uuid.uuid4().hex[:16]}.parquet"
-                    )
-                    shutil.move(f, dest)
-                    new_files.append((dest, None, "PARQUET", None))
+            new_files = _stage_data_files(
+                rows, path, data_dir, pfs, file_format, drop_empty=True
+            )
         if del_tbl.num_rows:
             del_file = os.path.join(
                 data_dir, f"eq-delete-{uuid.uuid4().hex[:16]}.parquet"
@@ -1901,128 +1877,37 @@ def merge_iceberg_rows(
                 "keys with inserts ignored)"
             )
 
-        from .avro_lite import read_avro_file
-
         staged: list[str] = []
+
+        def manifests(snap_id: int, _seq: int) -> list:
+            rows_ = _base_manifests(meta)
+            if new_files:
+                manifest = os.path.join(meta_dir, f"m-{snap_id}.avro")
+                _write_data_manifest(
+                    manifest, snap_id, new_files, part_fields, schemas[0]
+                )
+                rows_.append((manifest, 0, _default_spec_id(meta)))
+            if del_file is not None:
+                dmanifest = _write_delete_manifest(
+                    meta_dir,
+                    snap_id,
+                    del_file,
+                    2,
+                    del_tbl.num_rows,
+                    [name_to_id[c] for c in keys],
+                )
+                rows_.append((dmanifest, 1, _default_spec_id(meta)))
+            return rows_
 
         def attempt() -> int:
             nonlocal staged_ok
-            now_ms = int(time.time() * 1000)
-            snap_id = now_ms * 1000 + (ver + 1)
-            seq = meta.get("last-sequence-number", 0) + 1
-            new_manifests = []
-            if new_files:
-                entries = []
-                for f, pvals, fmt, nrows in new_files:
-                    if fmt == "PARQUET":
-                        pmeta = pq.read_metadata(f)
-                        lo, hi = _file_bounds(pmeta, schemas[0])
-                        nrows = pmeta.num_rows
-                    else:
-                        lo = hi = None
-                    rec = {
-                        "content": 0,
-                        "file_path": f,
-                        "file_format": fmt,
-                        "record_count": nrows,
-                        "file_size_in_bytes": os.path.getsize(f),
-                        "lower_bounds": lo,
-                        "upper_bounds": hi,
-                    }
-                    if part_fields:
-                        rec["partition"] = pvals
-                    entries.append(
-                        {
-                            "status": 1,
-                            "snapshot_id": snap_id,
-                            "data_file": rec,
-                        }
-                    )
-                manifest = os.path.join(meta_dir, f"m-{snap_id}.avro")
-                write_avro_file(
-                    manifest,
-                    _partition_manifest_schema(part_fields)
-                    if part_fields
-                    else MANIFEST_ENTRY_SCHEMA,
-                    entries,
-                )
-                new_manifests.append((manifest, 0))
-            if del_file is not None:
-                dmanifest = os.path.join(
-                    meta_dir, f"m-{snap_id}-deletes.avro"
-                )
-                write_avro_file(
-                    dmanifest,
-                    MANIFEST_ENTRY_SCHEMA,
-                    [
-                        {
-                            "status": 1,
-                            "snapshot_id": snap_id,
-                            "data_file": {
-                                "content": 2,
-                                "file_path": del_file,
-                                "file_format": "PARQUET",
-                                "record_count": del_tbl.num_rows,
-                                "file_size_in_bytes": os.path.getsize(
-                                    del_file
-                                ),
-                                "equality_ids": [
-                                    name_to_id[c] for c in keys
-                                ],
-                            },
-                        }
-                    ],
-                )
-                new_manifests.append((dmanifest, 1))
-
-            cur = next(
-                s
-                for s in meta["snapshots"]
-                if s["snapshot-id"] == meta["current-snapshot-id"]
-            )
-            _, prior = read_avro_file(cur["manifest-list"])
-            mlist = os.path.join(meta_dir, f"snap-{snap_id}.avro")
-            write_avro_file(
-                mlist,
-                MANIFEST_FILE_SCHEMA,
-                [
-                    dict(m, sequence_number=m.get("sequence_number", 0))
-                    for m in prior
-                ]
-                + [
-                    {
-                        "manifest_path": mpath,
-                        "manifest_length": os.path.getsize(mpath),
-                        "partition_spec_id": _default_spec_id(meta),
-                        "content": mcontent,
-                        "sequence_number": seq,
-                        "added_snapshot_id": snap_id,
-                    }
-                    for mpath, mcontent in new_manifests
-                ],
-            )
-            snapshot = {
-                "snapshot-id": snap_id,
-                "sequence-number": seq,
-                "timestamp-ms": now_ms,
-                "manifest-list": mlist,
-                "parent-snapshot-id": meta["current-snapshot-id"],
-                "summary": {"operation": "overwrite"},
-            }
+            summary = {"operation": "overwrite"}
             if txn is not None:
-                snapshot["summary"]["txn-app"] = txn[0]
-                snapshot["summary"]["txn-version"] = str(int(txn[1]))
-            new_meta = dict(
-                meta,
-                **{
-                    "last-sequence-number": seq,
-                    "last-updated-ms": now_ms,
-                    "snapshots": meta.get("snapshots", []) + [snapshot],
-                    "current-snapshot-id": snap_id,
-                },
+                summary["txn-app"] = txn[0]
+                summary["txn-version"] = str(int(txn[1]))
+            snap_id = _commit_snapshot(
+                meta_dir, meta, ver, manifests, summary, staged
             )
-            staged[:] = [m for m, _c in new_manifests] + [mlist]
-            _commit_metadata(meta_dir, ver, new_meta)
             staged_ok = True
             return snap_id
 
@@ -2044,7 +1929,6 @@ def merge_iceberg_rows(
 
         return retry(attempt, revalidate)
     finally:
-        shutil.rmtree(stage, ignore_errors=True)
         if not staged_ok:
             # lost CAS or staging failure: remove everything this merge
             # moved into the table directory (none of it is referenced;
@@ -2157,30 +2041,16 @@ def update_iceberg_rows(
     rows = sorted((r.file_path, r.pos) for r in coords)
 
     staged_ok = False
-    new_files: list[tuple[str, dict | None]] = []
+    new_files: list[tuple[str, dict | None, str, int | None]] = []
     del_file: str | None = None
-    stage = os.path.join(path, f"__stage-{uuid.uuid4().hex[:12]}")
     try:
-        updated = matched.select(*table_cols)
-        if pfs:
-            for f, pv in _stage_partitioned_parquet(
-                updated, path, data_dir, pfs
-            ):
-                if pq.read_metadata(f).num_rows:
-                    new_files.append((f, pv))
-                else:
-                    os.remove(f)
-        else:
-            updated.write.parquet(stage)
-            for f in sorted(glob(os.path.join(stage, "*.parquet"))):
-                if not pq.read_metadata(f).num_rows:
-                    continue
-                dest = os.path.join(
-                    data_dir, f"{uuid.uuid4().hex[:16]}.parquet"
-                )
-                shutil.move(f, dest)
-                new_files.append((dest, None))
-
+        new_files = _stage_data_files(
+            matched.select(*table_cols),
+            path,
+            data_dir,
+            pfs,
+            drop_empty=True,
+        )
         del_file = os.path.join(
             data_dir, f"delete-{uuid.uuid4().hex[:16]}.parquet"
         )
@@ -2196,115 +2066,30 @@ def update_iceberg_rows(
             del_file,
         )
 
-        from .avro_lite import read_avro_file
-
         staged: list[str] = []
+
+        def manifests(snap_id: int, _seq: int) -> list:
+            rows_ = _base_manifests(meta)
+            if new_files:
+                manifest = os.path.join(meta_dir, f"m-{snap_id}.avro")
+                _write_data_manifest(
+                    manifest, snap_id, new_files, part_fields, schemas[0]
+                )
+                rows_.append((manifest, 0, _default_spec_id(meta)))
+            dmanifest = _write_delete_manifest(
+                meta_dir, snap_id, del_file, 1, len(rows)
+            )
+            return rows_ + [(dmanifest, 1, _default_spec_id(meta))]
 
         def attempt() -> int:
             nonlocal staged_ok
-            now_ms = int(time.time() * 1000)
-            snap_id = now_ms * 1000 + (ver + 1)
-            seq = meta.get("last-sequence-number", 0) + 1
-            new_manifests: list[tuple[str, int]] = []
-            if new_files:
-                entries = []
-                for f, pvals in new_files:
-                    pmeta = pq.read_metadata(f)
-                    lo, hi = _file_bounds(pmeta, schemas[0])
-                    rec = {
-                        "content": 0,
-                        "file_path": f,
-                        "file_format": "PARQUET",
-                        "record_count": pmeta.num_rows,
-                        "file_size_in_bytes": os.path.getsize(f),
-                        "lower_bounds": lo,
-                        "upper_bounds": hi,
-                    }
-                    if part_fields:
-                        rec["partition"] = pvals
-                    entries.append(
-                        {
-                            "status": 1,
-                            "snapshot_id": snap_id,
-                            "data_file": rec,
-                        }
-                    )
-                manifest = os.path.join(meta_dir, f"m-{snap_id}.avro")
-                write_avro_file(
-                    manifest,
-                    _partition_manifest_schema(part_fields)
-                    if part_fields
-                    else MANIFEST_ENTRY_SCHEMA,
-                    entries,
-                )
-                new_manifests.append((manifest, 0))
-            dmanifest = os.path.join(meta_dir, f"m-{snap_id}-deletes.avro")
-            write_avro_file(
-                dmanifest,
-                MANIFEST_ENTRY_SCHEMA,
-                [
-                    {
-                        "status": 1,
-                        "snapshot_id": snap_id,
-                        "data_file": {
-                            "content": 1,
-                            "file_path": del_file,
-                            "file_format": "PARQUET",
-                            "record_count": len(rows),
-                            "file_size_in_bytes": os.path.getsize(del_file),
-                        },
-                    }
-                ],
-            )
-            new_manifests.append((dmanifest, 1))
-
-            cur = next(
-                s
-                for s in meta["snapshots"]
-                if s["snapshot-id"] == meta["current-snapshot-id"]
-            )
-            _, prior = read_avro_file(cur["manifest-list"])
-            mlist = os.path.join(meta_dir, f"snap-{snap_id}.avro")
-            write_avro_file(
-                mlist,
-                MANIFEST_FILE_SCHEMA,
-                [
-                    dict(m, sequence_number=m.get("sequence_number", 0))
-                    for m in prior
-                ]
-                + [
-                    {
-                        "manifest_path": mpath,
-                        "manifest_length": os.path.getsize(mpath),
-                        "partition_spec_id": _default_spec_id(meta),
-                        "content": mcontent,
-                        "sequence_number": seq,
-                        "added_snapshot_id": snap_id,
-                    }
-                    for mpath, mcontent in new_manifests
-                ],
-            )
-            snapshot = {
-                "snapshot-id": snap_id,
-                "sequence-number": seq,
-                "timestamp-ms": now_ms,
-                "manifest-list": mlist,
-                "parent-snapshot-id": meta["current-snapshot-id"],
-                "summary": {"operation": "overwrite"},
-            }
-            staged[:] = [m for m, _c in new_manifests] + [mlist]
-            _commit_metadata(
+            snap_id = _commit_snapshot(
                 meta_dir,
+                meta,
                 ver,
-                dict(
-                    meta,
-                    **{
-                        "last-sequence-number": seq,
-                        "last-updated-ms": now_ms,
-                        "snapshots": meta.get("snapshots", []) + [snapshot],
-                        "current-snapshot-id": snap_id,
-                    },
-                ),
+                manifests,
+                {"operation": "overwrite"},
+                staged,
             )
             staged_ok = True
             return snap_id
@@ -2328,10 +2113,9 @@ def update_iceberg_rows(
 
         return retry(attempt, revalidate)
     finally:
-        shutil.rmtree(stage, ignore_errors=True)
         if not staged_ok:
             discard(
-                [p for p, _pv in new_files] + ([del_file] if del_file else [])
+                [f[0] for f in new_files] + ([del_file] if del_file else [])
             )
 
 
@@ -2437,13 +2221,8 @@ def rewrite_iceberg_table(
             # rewritten files go dangling — the reader's anti-joins
             # simply never match them; a later full rewrite (or the
             # natural churn of merges) retires them.
-            from .avro_lite import read_avro_file as _read_avro
-
-            _, _all_m = _read_avro(snap["manifest-list"])
             carried_delete_manifests = [
-                dict(m, sequence_number=m.get("sequence_number", 0))
-                for m in _all_m
-                if m.get("content", 0) == 1
+                m for m in _base_manifests(meta) if m.get("content", 0) == 1
             ]
         by_part: dict = {}
         for e in data_files:
@@ -2534,98 +2313,44 @@ def rewrite_iceberg_table(
 
     pfs, part_fields = _spec_layout(_default_spec_id(meta))
 
-    if sort_by:
-        if part_fields:
-            raise NotImplementedError(
-                "sort_by re-clustering is unpartitioned-only (partition "
-                "fan-out already groups the write)"
-            )
-        schema_cols = (
-            [f["name"] for f in bounds_schema["fields"]]
-            if bounds_schema
-            else None
+    if sort_by and part_fields:
+        raise NotImplementedError(
+            "sort_by re-clustering is unpartitioned-only (partition "
+            "fan-out already groups the write)"
         )
-        if schema_cols is not None:
-            bad = [c for c in sort_by if c not in schema_cols]
-            if bad:
-                raise ValueError(
-                    f"sort_by columns {bad} not in the schema"
-                )
+    from .zorder import cluster
 
-    def _cluster(df_in):
-        """Apply the sort_by range clustering to one rewrite input."""
-        if not sort_by:
-            return df_in
-        from pyspark.sql import functions as F
-
-        num = int(spark.conf.get("spark.sql.shuffle.partitions", "8"))
-        if zorder:
-            from .zorder import zvalue_column
-
-            zc = zvalue_column(df_in, tuple(sort_by))
-            return df_in.repartitionByRange(num, zc).sortWithinPartitions(zc)
-        return df_in.repartitionByRange(
-            num, *[F.col(c) for c in sort_by]
-        ).sortWithinPartitions(*sort_by)
-
-    def _stage_group(live_df, pfs_g, part_fields_g, pack):
+    def _stage_group(live_df, pfs_g, pack):
         """Distributed write of one rewrite input under one spec's
-        layout; returns [(abs path, partition record|None)]."""
-        stage = os.path.join(path, f"__stage-{uuid.uuid4().hex[:12]}")
-        group_files: list[tuple[str, dict | None]] = []
-        try:
-            if part_fields_g:
-                # bin-packing must actually PACK (``pack=True``):
-                # collapse each rewritten partition tuple to one task →
-                # one output file (the live scan's joins scatter rows
-                # across tasks, and the fan-out writer emits one file
-                # per task×dir). One shuffle of only the fragmented rows
-                # — that shuffle IS the packing. A partition whose live
-                # bytes exceed a single-file target is not a small-file
-                # problem; rewrite it with the full path instead.
-                group_files.extend(
-                    _stage_partitioned_parquet(
-                        live_df, path, data_dir, pfs_g, pack=pack
-                    )
-                )
-            else:
-                if pack and not sort_by:
-                    # bin-packing an unpartitioned group must PACK too:
-                    # the live scan mirrors the fragmented input's task
-                    # layout, so an unshaped write reproduces the
-                    # fragmentation file-for-file (round 8 — the old
-                    # path only packed partitioned groups). One file per
-                    # ~128 MiB of input bytes, floor 1 (the OPTIMIZE
-                    # byte-budget rule); sort_by shapes the write itself
-                    # via the range exchange.
-                    total = sum(
-                        os.path.getsize(e.path)
-                        for grp in frag_by_spec.values()
-                        for e in grp
-                        if os.path.exists(e.path)
-                    )
-                    n = max(1, -(-total // (128 * 1024 * 1024)))
-                    live_df = live_df.coalesce(int(n))
-                live_df.write.parquet(stage)
-                for f in sorted(glob(os.path.join(stage, "*.parquet"))):
-                    dest = os.path.join(
-                        data_dir, f"{uuid.uuid4().hex[:16]}.parquet"
-                    )
-                    shutil.move(f, dest)
-                    group_files.append((dest, None))
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
-        return group_files
+        layout. Bin-packing must actually PACK: a partitioned group
+        collapses each rewritten partition tuple to one task → one
+        output file (the live scan's joins scatter rows across tasks,
+        and the fan-out writer emits one file per task×dir; that one
+        shuffle of only the fragmented rows IS the packing — a partition
+        whose live bytes exceed a single-file target is not a small-file
+        problem, rewrite it with the full path instead)."""
+        if pack and not pfs_g and not sort_by:
+            # an unpartitioned group packs too: the live scan mirrors the
+            # fragmented input's task layout, so an unshaped write
+            # reproduces the fragmentation file-for-file. One file per
+            # ~128 MiB of input bytes, floor 1 (the OPTIMIZE byte-budget
+            # rule); sort_by shapes the write itself via the range
+            # exchange.
+            total = sum(
+                os.path.getsize(e.path)
+                for grp in frag_by_spec.values()
+                for e in grp
+                if os.path.exists(e.path)
+            )
+            n = max(1, -(-total // (128 * 1024 * 1024)))
+            live_df = live_df.coalesce(int(n))
+        return _stage_data_files(live_df, path, data_dir, pfs_g, pack=pack)
 
     new_files_by_spec: dict[int, list] = {}
     if min_files_per_partition is None:
         new_files_by_spec[_default_spec_id(meta)] = _stage_group(
-            _cluster(live), pfs, part_fields, pack=False
+            cluster(live, sort_by, zorder), pfs, pack=False
         )
-        if not new_files_by_spec[_default_spec_id(meta)]:
-            raise ValueError(
-                "rewrite produced no data files (empty live set)"
-            )
     else:
         # one rewrite input PER SPEC GROUP: the fragmented files' LIVE
         # rows (position + equality deletes applied, parquet + avro
@@ -2634,135 +2359,63 @@ def rewrite_iceberg_table(
         # group whose live rows are all masked legitimately compacts to
         # zero files.
         for sid in sorted(frag_by_spec):
-            pfs_g, part_fields_g = _spec_layout(sid)
+            pfs_g = _spec_layout(sid)[0]
             live_g = _iceberg_live_scan(
                 spark, path, only_files={e.path for e in frag_by_spec[sid]}
             )
-            if not part_fields_g:
-                live_g = _cluster(live_g)
-            new_files_by_spec[sid] = _stage_group(
-                live_g, pfs_g, part_fields_g, pack=True
-            )
+            if not pfs_g:
+                live_g = cluster(live_g, sort_by, zorder)
+            new_files_by_spec[sid] = _stage_group(live_g, pfs_g, pack=True)
 
-    new_files: list[tuple[str, dict | None]] = [
-        nf for files in new_files_by_spec.values() for nf in files
-    ]
-    now_ms = int(time.time() * 1000)
-    snap_id = now_ms * 1000 + (ver + 1)
-    seq = meta.get("last-sequence-number", 0) + 1
-    # REPLACE semantics: the new manifest list holds ONLY this snapshot's
-    # manifests — per SPEC GROUP, one manifest of compacted files plus
-    # (incremental bin-pack only) one manifest carrying the untouched
-    # entries verbatim (explicit sequence numbers pinned), every row
-    # stamped with its group's spec id; when the table had live delete
-    # files, the delete manifests are carried unchanged so kept files
-    # stay masked (the full rewrite applies-and-drops all deletes).
-    mlist_rows: list[dict] = []
-    for sid in sorted(new_files_by_spec):
-        files = new_files_by_spec[sid]
-        if not files:
-            continue
-        _pfs_g, part_fields_g = _spec_layout(sid)
-        entry_schema = (
-            _partition_manifest_schema(part_fields_g)
-            if part_fields_g
-            else MANIFEST_ENTRY_SCHEMA
-        )
-        entries = []
-        for f, pvals in files:
-            pmeta = pq.read_metadata(f)
-            lo, hi = _file_bounds(pmeta, bounds_schema)
-            entries.append(
-                {
-                    "status": 1,
-                    "snapshot_id": snap_id,
-                    "data_file": {
-                        "content": 0,
-                        "file_path": f,
-                        "file_format": "PARQUET",
-                        "record_count": pmeta.num_rows,
-                        "file_size_in_bytes": os.path.getsize(f),
-                        "partition": pvals,
-                        "lower_bounds": lo,
-                        "upper_bounds": hi,
-                    },
-                }
-            )
-        manifest = os.path.join(meta_dir, f"m-{snap_id}-s{sid}.avro")
-        write_avro_file(manifest, entry_schema, entries)
-        mlist_rows.append(
-            {
-                "manifest_path": manifest,
-                "manifest_length": os.path.getsize(manifest),
-                "partition_spec_id": sid,
-                "content": 0,
-                "sequence_number": seq,
-                "added_snapshot_id": snap_id,
-            }
-        )
-    for sid in sorted(kept_by_spec):
-        kents = kept_by_spec[sid]
-        for ke in kents:
-            ke["snapshot_id"] = snap_id
-        _pfs_g, part_fields_g = _spec_layout(sid)
-        entry_schema = (
-            _partition_manifest_schema(part_fields_g)
-            if part_fields_g
-            else MANIFEST_ENTRY_SCHEMA
-        )
-        kept_manifest = os.path.join(
-            meta_dir, f"m-{snap_id}-kept-s{sid}.avro"
-        )
-        write_avro_file(kept_manifest, entry_schema, kents)
-        mlist_rows.append(
-            {
-                "manifest_path": kept_manifest,
-                "manifest_length": os.path.getsize(kept_manifest),
-                "partition_spec_id": sid,
-                "content": 0,
-                "sequence_number": seq,
-                "added_snapshot_id": snap_id,
-            }
-        )
-    if not mlist_rows:
+    new_files = [nf for files in new_files_by_spec.values() for nf in files]
+    if not new_files and not kept_by_spec:
         raise ValueError("rewrite produced no data files (empty live set)")
-    mlist_rows.extend(carried_delete_manifests)
-    mlist = os.path.join(meta_dir, f"snap-{snap_id}.avro")
-    write_avro_file(mlist, MANIFEST_FILE_SCHEMA, mlist_rows)
-    snapshot = {
-        "snapshot-id": snap_id,
-        "sequence-number": seq,
-        "timestamp-ms": now_ms,
-        "manifest-list": mlist,
-        "summary": {"operation": "replace"},
-    }
-    new_meta = dict(
-        meta,
-        **{
-            "last-sequence-number": seq,
-            "last-updated-ms": now_ms,
-            "snapshots": meta.get("snapshots", []) + [snapshot],
-            "current-snapshot-id": snap_id,
-        },
-    )
+
+    def manifests(snap_id: int, _seq: int) -> list:
+        # REPLACE semantics: the new manifest list holds ONLY this
+        # snapshot's manifests — per SPEC GROUP, one manifest of
+        # compacted files plus (incremental bin-pack only) one manifest
+        # carrying the untouched entries verbatim (explicit sequence
+        # numbers pinned), every row stamped with its group's spec id;
+        # when the table had live delete files, the delete manifests are
+        # carried unchanged so kept files stay masked (the full rewrite
+        # applies-and-drops all deletes).
+        rows = []
+        for sid in sorted(new_files_by_spec):
+            if new_files_by_spec[sid]:
+                manifest = os.path.join(meta_dir, f"m-{snap_id}-s{sid}.avro")
+                _write_data_manifest(
+                    manifest,
+                    snap_id,
+                    new_files_by_spec[sid],
+                    _spec_layout(sid)[1],
+                    bounds_schema,
+                )
+                rows.append((manifest, 0, sid))
+        for sid in sorted(kept_by_spec):
+            kept_manifest = os.path.join(
+                meta_dir, f"m-{snap_id}-kept-s{sid}.avro"
+            )
+            write_avro_file(
+                kept_manifest,
+                _entry_schema_for_spec(meta, sid),
+                [dict(e, snapshot_id=snap_id) for e in kept_by_spec[sid]],
+            )
+            rows.append((kept_manifest, 0, sid))
+        return rows + carried_delete_manifests
+
+    staged: list[str] = []
     try:
-        _commit_metadata(meta_dir, ver, new_meta)
+        return _commit_snapshot(
+            meta_dir, meta, ver, manifests, {"operation": "replace"}, staged
+        )
     except IcebergCommitConflict:
         # lost the CAS race: this attempt's staged artifacts (compacted
         # data files + the manifests/list referencing them) are garbage —
         # delete them NOW instead of deferring to remove_orphan_files, so
         # a 3-attempt retry burst strands zero bytes (round-6 advisor)
-        discard(
-            [p for p, _pv in new_files]
-            + [
-                r["manifest_path"]
-                for r in mlist_rows
-                if r["added_snapshot_id"] == snap_id
-            ]
-            + [mlist]
-        )
+        discard([f[0] for f in new_files] + staged)
         raise
-    return snap_id
 
 
 def rewrite_iceberg_manifests(path: str, min_manifests: int = 3) -> int:
@@ -2814,12 +2467,7 @@ def rewrite_iceberg_manifests(path: str, min_manifests: int = 3) -> int:
     staged: list[str] = []
 
     def attempt() -> int:
-        cur = next(
-            s
-            for s in meta["snapshots"]
-            if s["snapshot-id"] == meta["current-snapshot-id"]
-        )
-        _, manifests = read_avro_file(cur["manifest-list"])
+        manifests = _base_manifests(meta)
         data_specs = {
             m.get("partition_spec_id", 0)
             for m in manifests
@@ -2838,7 +2486,8 @@ def rewrite_iceberg_manifests(path: str, min_manifests: int = 3) -> int:
         if (
             n_data <= max(1, len(data_specs)) and n_del <= 1
         ) or len(manifests) < min_manifests:
-            return cur["snapshot-id"]  # already consolidated / under valve
+            # already consolidated / under valve
+            return meta["current-snapshot-id"]
 
         data_by_spec: dict[int, list[dict]] = {}
         del_entries: list[dict] = []
@@ -2873,61 +2522,26 @@ def rewrite_iceberg_manifests(path: str, min_manifests: int = 3) -> int:
                 else:
                     del_entries.append(rec)
 
-        now_ms = int(time.time() * 1000)
-        snap_id = now_ms * 1000 + (ver + 1)
-        seq = meta.get("last-sequence-number", 0) + 1
-        new_rows = []
-        for spec_id in sorted(data_by_spec):
-            mpath = os.path.join(meta_dir, f"m-{snap_id}-s{spec_id}.avro")
-            write_avro_file(
-                mpath,
-                _entry_schema_for_spec(meta, spec_id),
-                data_by_spec[spec_id],
-            )
-            new_rows.append((mpath, 0, spec_id))
-        if del_entries:
-            dpath = os.path.join(meta_dir, f"m-{snap_id}-deletes.avro")
-            write_avro_file(dpath, MANIFEST_ENTRY_SCHEMA, del_entries)
-            new_rows.append((dpath, 1, _default_spec_id(meta)))
-        mlist = os.path.join(meta_dir, f"snap-{snap_id}.avro")
-        write_avro_file(
-            mlist,
-            MANIFEST_FILE_SCHEMA,
-            [
-                {
-                    "manifest_path": mpath,
-                    "manifest_length": os.path.getsize(mpath),
-                    # each row stamped with its SOURCE manifests' spec,
-                    # not the default — consolidation moves old entries,
-                    # it doesn't re-partition them
-                    "partition_spec_id": mspec,
-                    "content": mcontent,
-                    "sequence_number": seq,
-                    "added_snapshot_id": snap_id,
-                }
-                for mpath, mcontent, mspec in new_rows
-            ],
+        def written(snap_id: int, _seq: int) -> list:
+            # each row stamped with its SOURCE manifests' spec, not the
+            # default — consolidation moves old entries, it doesn't
+            # re-partition them
+            rows = []
+            for sid in sorted(data_by_spec):
+                mpath = os.path.join(meta_dir, f"m-{snap_id}-s{sid}.avro")
+                write_avro_file(
+                    mpath, _entry_schema_for_spec(meta, sid), data_by_spec[sid]
+                )
+                rows.append((mpath, 0, sid))
+            if del_entries:
+                dpath = os.path.join(meta_dir, f"m-{snap_id}-deletes.avro")
+                write_avro_file(dpath, MANIFEST_ENTRY_SCHEMA, del_entries)
+                rows.append((dpath, 1, _default_spec_id(meta)))
+            return rows
+
+        return _commit_snapshot(
+            meta_dir, meta, ver, written, {"operation": "replace"}, staged
         )
-        snapshot = {
-            "snapshot-id": snap_id,
-            "sequence-number": seq,
-            "timestamp-ms": now_ms,
-            "manifest-list": mlist,
-            "parent-snapshot-id": meta["current-snapshot-id"],
-            "summary": {"operation": "replace"},
-        }
-        new_meta = dict(
-            meta,
-            **{
-                "last-sequence-number": seq,
-                "last-updated-ms": now_ms,
-                "snapshots": meta.get("snapshots", []) + [snapshot],
-                "current-snapshot-id": snap_id,
-            },
-        )
-        staged[:] = [mpath for mpath, _c, _s in new_rows] + [mlist]
-        _commit_metadata(meta_dir, ver, new_meta)
-        return snap_id
 
     def reload(conflict: CommitConflict) -> None:
         # the losing attempt deletes its own staged manifests/list —
@@ -3104,26 +2718,15 @@ def drop_iceberg_partition(
     def attempt() -> int | None:
         if meta.get("current-snapshot-id") in (None, -1):
             return None  # no snapshot: nothing to drop
-        cur = next(
-            s
-            for s in meta["snapshots"]
-            if s["snapshot-id"] == meta["current-snapshot-id"]
-        )
-        _, manifests = read_avro_file(cur["manifest-list"])
-        now_ms = int(time.time() * 1000)
-        snap_id = now_ms * 1000 + (ver + 1)
-        seq = meta.get("last-sequence-number", 0) + 1
         keep_rows: list[dict] = []  # original list rows, verbatim
-        new_rows: list[tuple[str, int, int]] = []
-        staged.clear()
+        rewritten: list[tuple[int, list[dict]]] = []  # (spec id, entries)
         dropped: list[str] = []
         stray: list[str] = []
-        for m in manifests:
+        for m in _base_manifests(meta):
             if m.get("content", 0) != 0:
                 keep_rows.append(m)  # delete manifests travel untouched
                 continue
             m_seq = m.get("sequence_number", 0)
-            m_spec = m.get("partition_spec_id", 0)
             _, entries = read_avro_file(m["manifest_path"])
             live = [e for e in entries if e.get("status") != 2]
             hit, kept = [], []
@@ -3163,17 +2766,9 @@ def drop_iceberg_partition(
                     }
                     for e in kept
                 ]
-                mpath = os.path.join(
-                    meta_dir, f"m-{snap_id}-drop{len(new_rows)}.avro"
-                )
-                write_avro_file(
-                    mpath, _entry_schema_for_spec(meta, m_spec), recs
-                )
-                staged.append(mpath)
-                new_rows.append((mpath, 0, m_spec))
+                rewritten.append((m.get("partition_spec_id", 0), recs))
             # else: every live entry dropped — the manifest leaves the list
         if stray:
-            discard(staged)
             stray = sorted(set(stray))
             raise ValueError(
                 f"pinned files {stray[:3]}{'...' if len(stray) > 3 else ''} "
@@ -3182,46 +2777,22 @@ def drop_iceberg_partition(
             )
         if not dropped:
             return None  # nothing live matches: idempotent no-op
-        mlist = os.path.join(meta_dir, f"snap-{snap_id}.avro")
-        write_avro_file(
-            mlist,
-            MANIFEST_FILE_SCHEMA,
-            keep_rows
-            + [
-                {
-                    "manifest_path": mpath,
-                    "manifest_length": os.path.getsize(mpath),
-                    "partition_spec_id": mspec,
-                    "content": mcontent,
-                    "sequence_number": seq,
-                    "added_snapshot_id": snap_id,
-                }
-                for mpath, mcontent, mspec in new_rows
-            ],
-        )
-        staged.append(mlist)
-        snapshot = {
-            "snapshot-id": snap_id,
-            "sequence-number": seq,
-            "timestamp-ms": now_ms,
-            "manifest-list": mlist,
-            "parent-snapshot-id": meta["current-snapshot-id"],
-            "summary": {
-                "operation": "delete",
-                "deleted-data-files": str(len(dropped)),
-            },
+
+        def written(snap_id: int, _seq: int) -> list:
+            rows: list = list(keep_rows)
+            for i, (m_spec, recs) in enumerate(rewritten):
+                mpath = os.path.join(meta_dir, f"m-{snap_id}-drop{i}.avro")
+                write_avro_file(
+                    mpath, _entry_schema_for_spec(meta, m_spec), recs
+                )
+                rows.append((mpath, 0, m_spec))
+            return rows
+
+        summary = {
+            "operation": "delete",
+            "deleted-data-files": str(len(dropped)),
         }
-        new_meta = dict(
-            meta,
-            **{
-                "last-sequence-number": seq,
-                "last-updated-ms": now_ms,
-                "snapshots": meta.get("snapshots", []) + [snapshot],
-                "current-snapshot-id": snap_id,
-            },
-        )
-        _commit_metadata(meta_dir, ver, new_meta)
-        return snap_id
+        return _commit_snapshot(meta_dir, meta, ver, written, summary, staged)
 
     def reload(conflict: CommitConflict) -> None:
         nonlocal meta, ver

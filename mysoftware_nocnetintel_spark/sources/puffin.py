@@ -40,6 +40,7 @@ from __future__ import annotations
 import json
 import os
 import struct
+import time
 import zlib
 
 from .roaring import decode_portable64, encode_portable64
@@ -241,12 +242,6 @@ def convert_iceberg_position_deletes_to_dvs(path: str) -> int:
         )
     _, manifests = read_avro_file(_iceberg_local_path(cur["manifest-list"]))
 
-    import time as _time
-
-    now_ms = int(_time.time() * 1000)
-    snap_id = now_ms * 1000 + (ver + 1)
-    seq = meta.get("last-sequence-number", 0) + 1
-
     # split the manifest list: position-delete entries are replaced by
     # DVs; everything else (data manifests, pure equality-delete
     # manifests) travels verbatim
@@ -280,6 +275,7 @@ def convert_iceberg_position_deletes_to_dvs(path: str) -> int:
         # nothing to rewrite: bump the format version WITHOUT minting a
         # no-op snapshot — the docstring's contract (callers comparing
         # snapshot ids must not mis-detect a data change)
+        now_ms = int(time.time() * 1000)
         _commit_metadata(
             meta_dir,
             ver,
@@ -294,18 +290,15 @@ def convert_iceberg_position_deletes_to_dvs(path: str) -> int:
             t.column("file_path").to_pylist(), t.column("pos").to_pylist()
         ):
             by_data_file.setdefault(fp, set()).add(int(p))
-    return _mint_dv_commit(
+    return _commit_dvs(
         path,
         meta_dir,
         meta,
         ver,
-        snap_id,
-        seq,
-        now_ms,
         by_data_file,
         keep_rows,
         "replace",
-        extra_meta={"format-version": 3},
+        updates={"format-version": 3},
     )
 
 
@@ -344,126 +337,101 @@ def _dv_entry_schema() -> dict:
 MANIFEST_ENTRY_SCHEMA_V3_DV = _dv_entry_schema()
 
 
-def _mint_dv_commit(
+def _commit_dvs(
     path: str,
     meta_dir: str,
     meta: dict,
     ver: int,
-    snap_id: int,
-    seq: int,
-    now_ms: int,
     by_data_file: "dict[str, object]",
-    keep_rows: list[dict],
+    plan: list,
     operation: str,
-    extra_meta: "dict | None" = None,
-    staged: "list[str] | None" = None,
+    updates: "dict | None" = None,
 ) -> int:
     """Shared commit tail of the two DV writers (convert + DV delete):
-    mint ONE Puffin file with one ``deletion-vector-v1`` blob per
-    referenced data file, its delete manifest, the manifest list
-    (``keep_rows`` + the new manifest), the snapshot, and the metadata
-    commit. ``extra_meta`` merges into the new metadata (the convert
-    path's format-version bump). On a commit failure every staged file
-    — the caller's ``staged`` plus everything minted here — is removed
-    before the error surfaces."""
+    one snapshot through ``iceberg._commit_snapshot`` whose manifest
+    list is ``plan`` — carried list rows, and ``(spec id, entries)``
+    pairs of surviving delete entries re-homed into a fresh manifest —
+    plus one new delete manifest pointing into ONE Puffin file with one
+    ``deletion-vector-v1`` blob per referenced data file.
+    ``updates`` merges into the new metadata (the convert path's
+    format-version bump). On any failure every file written for this
+    commit is removed before the error surfaces."""
+    from . import iceberg
     from .avro_lite import write_avro_file
-    from .iceberg import (
-        MANIFEST_FILE_SCHEMA,
-        _commit_metadata,
-        _default_spec_id,
-    )
+    from .commit_retry import discard
 
-    staged = list(staged or [])
-    puffin_path = os.path.join(path, "data", f"dv-{snap_id}.puffin")
-    blob_specs = [
-        {
-            "type": DV_BLOB_TYPE,
-            "data": encode_dv_blob(sorted(by_data_file[fp])),
-            "snapshot-id": snap_id,
-            "sequence-number": seq,
-            "properties": {
-                "referenced-data-file": fp,
-                "cardinality": str(len(set(by_data_file[fp]))),
-            },
-        }
-        for fp in sorted(by_data_file)
-    ]
-    blob_metas = write_puffin_file(puffin_path, blob_specs)
-    staged.append(puffin_path)
-    puffin_size = os.path.getsize(puffin_path)
-    dv_manifest = os.path.join(meta_dir, f"m-{snap_id}-dvs.avro")
-    write_avro_file(
-        dv_manifest,
-        MANIFEST_ENTRY_SCHEMA_V3_DV,
-        [
-            {
-                "status": 1,  # the DVs ARE added by this snapshot
-                "snapshot_id": snap_id,
-                "data_file": {
-                    "content": 1,  # position deletes (vector form)
-                    "file_path": puffin_path,
-                    "file_format": "PUFFIN",
-                    "record_count": int(bm["properties"]["cardinality"]),
-                    "file_size_in_bytes": puffin_size,
-                    "referenced_data_file": bm["properties"][
-                        "referenced-data-file"
-                    ],
-                    "content_offset": bm["offset"],
-                    "content_size_in_bytes": bm["length"],
-                },
-            }
-            for bm in blob_metas
-        ],
-    )
-    staged.append(dv_manifest)
-    mlist = os.path.join(meta_dir, f"snap-{snap_id}.avro")
-    write_avro_file(
-        mlist,
-        MANIFEST_FILE_SCHEMA,
-        [
-            dict(m, sequence_number=m.get("sequence_number", 0))
-            for m in keep_rows
-        ]
-        + [
-            {
-                "manifest_path": dv_manifest,
-                "manifest_length": os.path.getsize(dv_manifest),
-                "partition_spec_id": _default_spec_id(meta),
-                "content": 1,
-                "sequence_number": seq,
-                "added_snapshot_id": snap_id,
-            }
-        ],
-    )
-    staged.append(mlist)
-    snapshot = {
-        "snapshot-id": snap_id,
-        "sequence-number": seq,
-        "timestamp-ms": now_ms,
-        "manifest-list": mlist,
-        "parent-snapshot-id": meta["current-snapshot-id"],
-        "summary": {"operation": operation},
-    }
-    new_meta = dict(
-        meta,
-        **{
-            "last-sequence-number": seq,
-            "last-updated-ms": now_ms,
-            "snapshots": meta.get("snapshots", []) + [snapshot],
-            "current-snapshot-id": snap_id,
-            **(extra_meta or {}),
-        },
-    )
+    staged: list[str] = []
+
+    def written(snap_id: int, seq: int) -> list:
+        rows = []
+        for i, item in enumerate(plan):
+            if isinstance(item, dict):
+                rows.append(item)
+                continue
+            m_spec, recs = item
+            mpath = os.path.join(meta_dir, f"m-{snap_id}-dvkeep{i}.avro")
+            write_avro_file(mpath, MANIFEST_ENTRY_SCHEMA_V3_DV, recs)
+            rows.append((mpath, 1, m_spec))
+        puffin_path = os.path.join(path, "data", f"dv-{snap_id}.puffin")
+        staged.append(puffin_path)
+        blob_metas = write_puffin_file(
+            puffin_path,
+            [
+                {
+                    "type": DV_BLOB_TYPE,
+                    "data": encode_dv_blob(sorted(by_data_file[fp])),
+                    "snapshot-id": snap_id,
+                    "sequence-number": seq,
+                    "properties": {
+                        "referenced-data-file": fp,
+                        "cardinality": str(len(set(by_data_file[fp]))),
+                    },
+                }
+                for fp in sorted(by_data_file)
+            ],
+        )
+        puffin_size = os.path.getsize(puffin_path)
+        dv_manifest = os.path.join(meta_dir, f"m-{snap_id}-dvs.avro")
+        write_avro_file(
+            dv_manifest,
+            MANIFEST_ENTRY_SCHEMA_V3_DV,
+            [
+                {
+                    "status": 1,  # the DVs ARE added by this snapshot
+                    "snapshot_id": snap_id,
+                    "data_file": {
+                        "content": 1,  # position deletes (vector form)
+                        "file_path": puffin_path,
+                        "file_format": "PUFFIN",
+                        "record_count": int(
+                            bm["properties"]["cardinality"]
+                        ),
+                        "file_size_in_bytes": puffin_size,
+                        "referenced_data_file": bm["properties"][
+                            "referenced-data-file"
+                        ],
+                        "content_offset": bm["offset"],
+                        "content_size_in_bytes": bm["length"],
+                    },
+                }
+                for bm in blob_metas
+            ],
+        )
+        return rows + [(dv_manifest, 1, iceberg._default_spec_id(meta))]
+
     try:
-        _commit_metadata(meta_dir, ver, new_meta)
+        return iceberg._commit_snapshot(
+            meta_dir,
+            meta,
+            ver,
+            written,
+            {"operation": operation},
+            staged,
+            updates=updates,
+        )
     except Exception:
-        for f in staged:
-            try:
-                os.remove(f)
-            except OSError:
-                pass
+        discard(staged)
         raise
-    return snap_id
 
 
 # --------------------------------------------------- v3 DV MOR delete
@@ -494,7 +462,7 @@ def write_iceberg_dv_deletes(spark, path: str, condition) -> "int | None":
     CAS surfaces (the v2 writers' validated-retry ladder can be added
     when a concurrent-writer deployment needs it). v2 position-delete
     FILES on a v3 table are a spec violation and refuse loudly."""
-    from .avro_lite import read_avro_file, write_avro_file
+    from .avro_lite import read_avro_file
     from .iceberg import (
         _load_meta,
         _MAX_DELETE_ROWS,
@@ -549,20 +517,13 @@ def write_iceberg_dv_deletes(spark, path: str, condition) -> "int | None":
             int(r["__pos"])
         )
 
-    import time as _time
-
-    now_ms = int(_time.time() * 1000)
-    snap_id = now_ms * 1000 + (ver + 1)
-    seq = meta.get("last-sequence-number", 0) + 1
-
     # walk the delete manifests: find superseded DV entries for touched
     # files (their positions merge into the replacement), keep the rest
     _, manifests = read_avro_file(_iceberg_local_path(cur["manifest-list"]))
-    keep_rows: list[dict] = []
-    staged: list[str] = []
+    plan: list = []  # carried list rows, or (spec id, surviving entries)
     for m in manifests:
         if m.get("content", 0) != 1:
-            keep_rows.append(m)
+            plan.append(m)
             continue
         m_seq = m.get("sequence_number", 0)
         m_spec = m.get("partition_spec_id", 0)
@@ -588,7 +549,7 @@ def write_iceberg_dv_deletes(spark, path: str, condition) -> "int | None":
             else:
                 kept.append(e)
         if not superseded:
-            keep_rows.append(m)
+            plan.append(m)
             continue
         for e in superseded:
             df_rec = e["data_file"]
@@ -622,33 +583,7 @@ def write_iceberg_dv_deletes(spark, path: str, condition) -> "int | None":
                 }
                 for e in kept
             ]
-            mpath = os.path.join(
-                meta_dir, f"m-{snap_id}-dvkeep{len(keep_rows)}.avro"
-            )
-            write_avro_file(mpath, MANIFEST_ENTRY_SCHEMA_V3_DV, recs)
-            staged.append(mpath)
-            keep_rows.append(
-                {
-                    "manifest_path": mpath,
-                    "manifest_length": os.path.getsize(mpath),
-                    "partition_spec_id": m_spec,
-                    "content": 1,
-                    "sequence_number": seq,
-                    "added_snapshot_id": snap_id,
-                }
-            )
+            plan.append((m_spec, recs))
         # else: every entry superseded — the manifest leaves the list
 
-    return _mint_dv_commit(
-        path,
-        meta_dir,
-        meta,
-        ver,
-        snap_id,
-        seq,
-        now_ms,
-        new_by_file,
-        keep_rows,
-        "delete",
-        staged=staged,
-    )
+    return _commit_dvs(path, meta_dir, meta, ver, new_by_file, plan, "delete")

@@ -861,6 +861,56 @@ def read_delta_snapshot(
     return result
 
 
+def _footer_ranges(pq_meta, cols) -> tuple[dict, dict, dict]:
+    """``(mins, maxs, null_counts)`` per column name in ``cols``,
+    aggregated across every row group of a parquet footer — the zone
+    maps behind Delta ``add.stats`` and Iceberg manifest bounds, which
+    :func:`_delta_stats_prune` and :func:`_zone_map_prune` read back. A
+    column missing statistics in ANY row group gets no entry (skipping
+    on a partial range would drop rows); parquet-mr / Spark include NaN
+    in float/double min-max, and every comparison against a NaN bound
+    is False, so NaN-poisoned stats count as missing. Dates come back
+    in ISO string form (orders identically). A null count is None once
+    any row group lacks one."""
+    mins: dict = {}
+    maxs: dict = {}
+    nulls: dict = {}
+    dead: set[str] = set()
+    for rg in range(pq_meta.num_row_groups):
+        row_group = pq_meta.row_group(rg)
+        for ci in range(row_group.num_columns):
+            col = row_group.column(ci)
+            name = col.path_in_schema
+            if name not in cols or name in dead:
+                continue
+            st = col.statistics
+            if st is None or not st.has_min_max:
+                dead.add(name)
+                continue
+            mn, mx = st.min, st.max
+            if hasattr(mn, "isoformat"):
+                mn, mx = mn.isoformat(), mx.isoformat()
+            if isinstance(mn, float) and (math.isnan(mn) or math.isnan(mx)):
+                dead.add(name)
+                continue
+            nc = st.null_count if st.has_null_count else None
+            if name in mins:
+                mins[name] = min(mins[name], mn)
+                maxs[name] = max(maxs[name], mx)
+                nulls[name] = (
+                    None
+                    if nc is None or nulls[name] is None
+                    else nulls[name] + nc
+                )
+            else:
+                mins[name], maxs[name], nulls[name] = mn, mx, nc
+    for name in dead:
+        mins.pop(name, None)
+        maxs.pop(name, None)
+        nulls.pop(name, None)
+    return mins, maxs, nulls
+
+
 _DELTA_SCAN_OPS = (">=", ">", "<=", "<", "=")
 
 

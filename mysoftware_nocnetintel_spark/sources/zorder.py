@@ -84,3 +84,28 @@ def zvalue_column(df: DataFrame, cols: tuple[str, ...], bits: int = 6) -> Column
                 i * k + j,
             )
     return z
+
+
+def cluster(
+    df: DataFrame, sort_by: tuple[str, ...], zorder: bool = False
+) -> DataFrame:
+    """CLUSTER a lakehouse write on ``sort_by``: range-partition then sort
+    within each partition, so every output file covers a narrow key slice
+    and its zone-map bounds are near-disjoint from its siblings'. With
+    ``zorder`` the key is the Morton z-value of the columns
+    (:func:`zvalue_column`) instead of their lexicographic order. The
+    partition count is passed EXPLICITLY (the session's shuffle-partition
+    conf) so AQE cannot coalesce the clustered write back into one wide
+    file. No ``sort_by`` returns ``df`` unchanged."""
+    if not sort_by:
+        return df
+    bad = [c for c in sort_by if c not in df.columns]
+    if bad:
+        raise ValueError(f"sort_by columns {bad} not in the schema")
+    num = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "8"))
+    if zorder:
+        zc = zvalue_column(df, tuple(sort_by))
+        return df.repartitionByRange(num, zc).sortWithinPartitions(zc)
+    return df.repartitionByRange(
+        num, *[F.col(c) for c in sort_by]
+    ).sortWithinPartitions(*sort_by)
