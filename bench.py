@@ -81,6 +81,23 @@ def _median(xs: list[float]) -> float:
     return s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2
 
 
+def _best_of(n: int, fn) -> tuple[float, float]:
+    """Wall-clock ``fn()`` ``n`` times; return the (best, median) draw in
+    seconds. Every timed section of the bench goes through here."""
+    draws = []
+    for _ in range(n):
+        t0 = time.perf_counter()
+        fn()
+        draws.append(time.perf_counter() - t0)
+    return min(draws), _median(draws)
+
+
+def _concurrently(fn, items) -> None:
+    """Submit ``fn(item)`` for every item at once, one thread each."""
+    with ThreadPoolExecutor(max_workers=len(items)) as ex:
+        list(ex.map(fn, items))
+
+
 def materialize(df) -> None:
     """Execute a query end-to-end and fetch its result as Arrow —
     like-for-like with the DuckDB twin's ``.arrow()`` fetch.
@@ -159,13 +176,11 @@ def main() -> None:
     timings: dict[str, float] = {}
     seq_total_median = 0.0
     for name in HEADLINE:
-        draws = []
-        for _ in range(5):
-            t0 = time.perf_counter()
-            materialize(QUERIES[name](spark, sf_dir))
-            draws.append(time.perf_counter() - t0)
-        timings[name.split("_")[0]] = round(min(draws), 4)
-        seq_total_median += _median(draws)
+        best, med = _best_of(
+            5, lambda: materialize(QUERIES[name](spark, sf_dir))
+        )
+        timings[name.split("_")[0]] = round(best, 4)
+        seq_total_median += med
 
     # headline value: wall-clock for the WHOLE 10-query batch submitted
     # concurrently against the shared session (best-of-5). Spark's scheduler
@@ -177,13 +192,9 @@ def main() -> None:
     def run_one(name: str) -> None:
         materialize(QUERIES[name](spark, sf_dir))
 
-    batch_draws = []
-    for _ in range(5):
-        t0 = time.perf_counter()
-        with ThreadPoolExecutor(max_workers=len(HEADLINE)) as ex:
-            list(ex.map(run_one, HEADLINE))
-        batch_draws.append(time.perf_counter() - t0)
-    batch_wall = min(batch_draws)
+    batch_wall, batch_median = _best_of(
+        5, lambda: _concurrently(run_one, HEADLINE)
+    )
 
     # Like-for-like counterpart for `value` (round-2 advisor): the SAME
     # 10 queries submitted concurrently to DuckDB (one connection per
@@ -208,17 +219,9 @@ def main() -> None:
     duck_cons = {name: _duck_con() for name in HEADLINE}
     for name in HEADLINE:  # warm
         duck_cons[name].execute(_ORC[name]).arrow()
-    duckdb_batch_wall = float("inf")
-    for _ in range(5):
-        t0 = time.perf_counter()
-        with ThreadPoolExecutor(max_workers=len(HEADLINE)) as ex:
-            list(
-                ex.map(
-                    lambda n: duck_cons[n].execute(_ORC[n]).arrow(),
-                    HEADLINE,
-                )
-            )
-        duckdb_batch_wall = min(duckdb_batch_wall, time.perf_counter() - t0)
+    duckdb_batch_wall, _ = _best_of(5, lambda: _concurrently(
+        lambda n: duck_cons[n].execute(_ORC[n]).arrow(), HEADLINE
+    ))
     for con in duck_cons.values():
         con.close()
 
@@ -267,13 +270,11 @@ def main() -> None:
     pipeline_total_median = 0.0
     for name in PIPELINE:
         materialize(QUERIES[name](spark, sf_dir))  # warm
-        draws = []
-        for _ in range(5):
-            t0 = time.perf_counter()
-            materialize(QUERIES[name](spark, sf_dir))
-            draws.append(time.perf_counter() - t0)
-        pipeline[name] = round(min(draws), 4)
-        pipeline_total_median += _median(draws)
+        best, med = _best_of(
+            5, lambda: materialize(QUERIES[name](spark, sf_dir))
+        )
+        pipeline[name] = round(best, 4)
+        pipeline_total_median += med
         if name in ORACLES:
             import duckdb
 
@@ -284,11 +285,9 @@ def main() -> None:
                     f"read_parquet('{sf_dir}/{t}.parquet')"
                 )
             con.execute(ORACLES[name]).arrow()  # warm
-            best_d = float("inf")
-            for _ in range(5):
-                t0 = time.perf_counter()
-                con.execute(ORACLES[name]).arrow()
-                best_d = min(best_d, time.perf_counter() - t0)
+            best_d, _ = _best_of(
+                5, lambda: con.execute(ORACLES[name]).arrow()
+            )
             pipeline_duckdb[name] = round(best_d, 4)
             con.close()
 
@@ -311,12 +310,10 @@ def main() -> None:
     lifecycle: dict[str, float] = {}
     for name in LIFECYCLE:
         materialize(QUERIES[name](spark, sf_dir))  # warm
-        draws = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            materialize(QUERIES[name](spark, sf_dir))
-            draws.append(time.perf_counter() - t0)
-        lifecycle[name.split("_")[0]] = round(min(draws), 4)
+        best, _ = _best_of(
+            3, lambda: materialize(QUERIES[name](spark, sf_dir))
+        )
+        lifecycle[name.split("_")[0]] = round(best, 4)
 
     # Round-9 verdict task 4: the q147/q149/q151 registry numbers time
     # synth+encode SCAFFOLDING a deployment never pays (~60-70% of their
@@ -408,13 +405,9 @@ def main() -> None:
     try:
         for fam in _pairs_fn:
             _media_prod(fam)  # warm
-            draws = []
-            for _ in range(3):
-                t0 = time.perf_counter()
-                _media_prod(fam)
-                draws.append(time.perf_counter() - t0)
-            media_stored[fam] = round(min(draws), 4)
-            media_stored_median[fam] = round(_median(draws), 4)
+            best, med = _best_of(3, lambda: _media_prod(fam))
+            media_stored[fam] = round(best, 4)
+            media_stored_median[fam] = round(med, 4)
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", _mpb_before)
         _sh.rmtree(media_root, ignore_errors=True)
@@ -424,14 +417,9 @@ def main() -> None:
     # session (best-of-3; these are multi-second jobs, five repeats buys
     # noise not signal), and the like-for-like DuckDB batch — oracle-paired
     # pipeline queries on one warm connection per thread.
-    pipeline_batch_wall = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        with ThreadPoolExecutor(max_workers=len(PIPELINE)) as ex:
-            list(ex.map(run_one, PIPELINE))
-        pipeline_batch_wall = min(
-            pipeline_batch_wall, time.perf_counter() - t0
-        )
+    pipeline_batch_wall, _ = _best_of(
+        3, lambda: _concurrently(run_one, PIPELINE)
+    )
 
     import duckdb
 
@@ -446,51 +434,26 @@ def main() -> None:
             )
         con.execute(ORACLES[name]).arrow()  # warm
         pipe_cons[name] = con
-    pipeline_duckdb_batch_wall = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        with ThreadPoolExecutor(max_workers=len(_pipe_orc)) as ex:
-            list(
-                ex.map(
-                    lambda n: pipe_cons[n].execute(ORACLES[n]).arrow(),
-                    _pipe_orc,
-                )
-            )
-        pipeline_duckdb_batch_wall = min(
-            pipeline_duckdb_batch_wall, time.perf_counter() - t0
-        )
+    pipeline_duckdb_batch_wall, _ = _best_of(3, lambda: _concurrently(
+        lambda n: pipe_cons[n].execute(ORACLES[n]).arrow(), _pipe_orc
+    ))
     # COMBINED serving batch (round-4 verdict #9): headline + LLM-pipeline
     # queries as ONE concurrent submission against the shared session, and
     # the like-for-like DuckDB batch over the oracle-paired subset — the
     # single number covering the whole serving surface.
     COMBINED = HEADLINE + PIPELINE
-    combined_batch_wall = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        with ThreadPoolExecutor(max_workers=len(COMBINED)) as ex:
-            list(ex.map(run_one, COMBINED))
-        combined_batch_wall = min(
-            combined_batch_wall, time.perf_counter() - t0
-        )
+    combined_batch_wall, _ = _best_of(
+        3, lambda: _concurrently(run_one, COMBINED)
+    )
     comb_orc = HEADLINE + _pipe_orc
     comb_cons = {}
     for name in comb_orc:
         con = _duck_con()
         con.execute(ORACLES[name]).arrow()  # warm
         comb_cons[name] = con
-    combined_duckdb_batch_wall = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        with ThreadPoolExecutor(max_workers=len(comb_orc)) as ex:
-            list(
-                ex.map(
-                    lambda n: comb_cons[n].execute(ORACLES[n]).arrow(),
-                    comb_orc,
-                )
-            )
-        combined_duckdb_batch_wall = min(
-            combined_duckdb_batch_wall, time.perf_counter() - t0
-        )
+    combined_duckdb_batch_wall, _ = _best_of(3, lambda: _concurrently(
+        lambda n: comb_cons[n].execute(ORACLES[n]).arrow(), comb_orc
+    ))
     for con in comb_cons.values():
         con.close()
 
@@ -541,13 +504,11 @@ def main() -> None:
         sf1_med: dict[str, float] = {}
         for name in SF1_QUERIES:
             materialize(QUERIES[name](spark, sf1_dir))  # warm
-            draws = []
-            for _ in range(5):
-                t0 = time.perf_counter()
-                materialize(QUERIES[name](spark, sf1_dir))
-                draws.append(time.perf_counter() - t0)
-            sf1_spark[name.split("_")[0]] = round(min(draws), 4)
-            sf1_med[name.split("_")[0]] = _median(draws)
+            best, med = _best_of(
+                5, lambda: materialize(QUERIES[name](spark, sf1_dir))
+            )
+            sf1_spark[name.split("_")[0]] = round(best, 4)
+            sf1_med[name.split("_")[0]] = med
 
         sf1_duck: dict[str, float] = {}
         con = duckdb.connect()
@@ -561,11 +522,9 @@ def main() -> None:
             )
         for name in SF1_QUERIES:
             con.execute(ORACLES[name]).arrow()  # warm
-            best = float("inf")
-            for _ in range(5):
-                t0 = time.perf_counter()
-                con.execute(ORACLES[name]).arrow()
-                best = min(best, time.perf_counter() - t0)
+            best, _ = _best_of(
+                5, lambda: con.execute(ORACLES[name]).arrow()
+            )
             sf1_duck[name.split("_")[0]] = round(best, 4)
         con.close()
 
@@ -598,25 +557,17 @@ def main() -> None:
     from mysoftware_nocnetintel_spark.sources import load_table
 
     def _spark_floor() -> float:
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            load_table(spark, sf_dir, "region").selectExpr(
-                "count(*) as n"
-            ).toArrow()
-            best = min(best, time.perf_counter() - t0)
-        return best
+        return _best_of(3, lambda: load_table(
+            spark, sf_dir, "region"
+        ).selectExpr("count(*) as n").toArrow())[0]
 
     fcon = _duck_con()
     fcon.execute("SELECT count(*) AS n FROM region").arrow()
 
     def _duck_floor() -> float:
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            fcon.execute("SELECT count(*) AS n FROM region").arrow()
-            best = min(best, time.perf_counter() - t0)
-        return best
+        return _best_of(
+            3, lambda: fcon.execute("SELECT count(*) AS n FROM region").arrow()
+        )[0]
 
     _spark_floor()  # warm
     spark_floor = _spark_floor()
@@ -692,7 +643,7 @@ def main() -> None:
             # data-dependent work term the sf1 section's scale-up
             # argument rides on.
             "med": {
-                "value": round(_median(batch_draws), 4),
+                "value": round(batch_median, 4),
                 "seq_total": round(seq_total_median, 4),
                 "pipeline_total": round(pipeline_total_median, 4),
                 "media": media_stored_median,

@@ -96,54 +96,49 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr(_NS_TO_TS_NTZ.format(col="ts")))
     if _CACHE_ENABLED:
-        # Cache-time spread for the CPU-heavy narrow-pipeline tables:
-        # parquet scans split by BYTES, so the byte-small documents/
-        # embeddings tables arrive as ONE partition and every regex/
-        # shingle/hash/vector stage over the cached table would run on
-        # one core — with each consumer paying a per-statement
-        # repartition exchange (spread_narrow) to fix it. Repartitioning
-        # ONCE at cache build amortizes that across every query on the
-        # session. Deliberately NOT applied to the scan-light relational
-        # tables: fanning a 5-row dimension into 32 cached partitions
-        # just multiplies per-statement task count (measured: the
-        # trivial-statement floor tripled). At cluster scale inputs
-        # exceed core count and this is a no-op either way.
+        # One layout rule, applied once at cache build, sized by the
+        # table's parquet BYTES (the test corpus ships one single-row-group
+        # file per table, so a scan arrives as ONE partition whatever its
+        # size):
+        #
+        # * Under 512 KiB (``nbytes >> 18 <= 1``), a one-partition scan is
+        #   cached as ``coalesce(1)``. The cached relation then reports
+        #   ``SinglePartition``, which satisfies every clustered and
+        #   ordered distribution, so aggregates, windows, distincts and
+        #   joins over it plan no exchange: a serving statement over
+        #   KB-scale inputs pays no shuffle stage and one task per scan
+        #   instead of ``shuffle.partitions``.
+        # * Above it, every table gets ~256 KiB of parquet per cached
+        #   partition (best of {2 MiB, 512 KiB, 256 KiB}: headline sf0.1
+        #   seq total 2.33 / 1.87 / 1.75 s; a 184 MB sf1 lineitem cached
+        #   as one partition ran every aggregation single-core, 3.6x the
+        #   DuckDB wall). ``embeddings`` takes this spread, not a full
+        #   fan-out: its consumers are Arrow UDF stages that pay per TASK
+        #   (sf0.1 best-of-5, spread 4 vs 32: q48 1.39 -> 1.19 s, q35
+        #   2.12 -> 1.96 s).
+        # * ``documents`` fans out to every core at any size: its regex/
+        #   shingle/hash stages are CPU-heavy per byte. It stays out of the
+        #   single-partition rule because q154 builds its IVF index from a
+        #   ``limit()`` centroid sample whose rows follow the embedding's
+        #   partition layout: over a SinglePartition documents the
+        #   embedding's groupBy plans no shuffle, and q154's output changes.
+        #
+        # At cluster scale a scan spans many files and row groups and
+        # already exceeds the parallelism, so no branch fires.
         target = spark.sparkContext.defaultParallelism
+        parts = df.rdd.getNumPartitions()
+        try:
+            nbytes = os.path.getsize(table_path(sf_dir, name))
+        except OSError:
+            nbytes = 0
         if name == "documents":
-            # full fan-out: regex/shingle/hash stages are CPU-heavy per
-            # BYTE, so even a KB-scale documents table wants every core
-            if df.rdd.getNumPartitions() < target:
+            if parts < target:
                 df = df.repartition(target)
+        elif nbytes >> 18 <= 1 and parts == 1:
+            df = df.coalesce(1)
         else:
-            # Relational fact tables get a BYTE-sized spread: the test
-            # corpus ships one single-row-group file per table, so the
-            # scan — and therefore the cached relation every statement
-            # reuses — arrives as ONE partition regardless of size
-            # (measured at sf1: a 184 MB lineitem cached single-partition
-            # ran every aggregation single-core; 3.6x the DuckDB wall).
-            # ~256 KiB of parquet per cached partition (measured best of
-            # {2 MiB, 512 KiB, 256 KiB}: headline sf0.1 seq total 2.33 /
-            # 1.87 / 1.75 s — the window/JSON queries over the 2 MB
-            # events table were still single-core under coarser rules)
-            # while the KB-scale dimensions stay at 1 partition — fanning
-            # those out tripled the statement floor. At cluster scale
-            # inputs span many files/row groups and the scan already
-            # exceeds parallelism, so this never fires.
-            #
-            # ``embeddings`` moved here from the full-target branch in
-            # round 6: its consumers are Arrow pandas-UDF stages whose
-            # cost at serving SF is per-TASK Python-worker round trips,
-            # not per-row CPU — 32 partitions × 62 rows each made every
-            # ANN statement pay 32 worker dispatches per UDF stage
-            # (A/B at sf0.1, best-of-5: q48 1.39→1.19 s, q123 1.07→0.94,
-            # q76 1.82→1.55, q35 2.12→1.96 at spread 4 vs 32; that
-            # recovers the r4 numbers the round-5 verdict flagged).
-            try:
-                nbytes = os.path.getsize(table_path(sf_dir, name))
-            except OSError:
-                nbytes = 0
-            spread = min(target, int(nbytes) >> 18)
-            if spread > 1 and df.rdd.getNumPartitions() < spread:
+            spread = min(target, nbytes >> 18)
+            if spread > 1 and parts < spread:
                 df = df.repartition(spread)
         df = df.cache()
         _TABLE_CACHE[key] = df
