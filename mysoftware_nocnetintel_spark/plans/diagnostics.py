@@ -25,10 +25,32 @@ def formatted_plan(df: DataFrame) -> str:
     return buf.getvalue()
 
 
+def _cached_ids(p: str) -> set[str]:
+    """Operator ids of the plans inside cached relations: the tree lines
+    indented under an ``InMemoryRelation``. Those operators ran once, when
+    the cache was built, not on each execution of the statement."""
+    ids: set[str] = set()
+    depth = None
+    for line in p.split("\n\n", 1)[0].splitlines():
+        m = re.search(r"[A-Za-z]", line)
+        op = re.search(r"\((\d+)\)\s*$", line)
+        if not m or not op:
+            continue
+        if depth is not None and m.start() > depth:
+            ids.add(op.group(1))
+        elif line[m.start():].startswith("InMemoryRelation "):
+            depth = m.start()
+        else:
+            depth = None
+    return ids
+
+
 def plan_summary(df: DataFrame) -> dict:
     """Summarize scale-relevant physical-plan properties.
 
-    Keys: ``exchanges`` (shuffle count), ``single_partition_exchanges``,
+    Keys: ``exchanges`` (the shuffles each execution runs: a cached
+    relation's build exchanges ran once and are not counted),
+    ``single_partition_exchanges``,
     ``broadcast_joins``, ``sort_merge_joins``, ``nested_loop_joins``,
     ``scans``, ``pushed_filters`` (list), ``top_k`` (TakeOrderedAndProject
     present), ``python_evals`` (Arrow/Python UDF operators — the slow
@@ -39,16 +61,19 @@ def plan_summary(df: DataFrame) -> dict:
     """
     p = formatted_plan(df)
 
-    def n_ops(name: str) -> int:
+    def op_ids(name: str) -> set[str]:
         # formatted explain prints each operator once in the tree
         # ("Name (id)") and once in the details ("(id) Name"); count
         # unique operator ids so neither section double-counts
         ids = set(re.findall(rf"\b{name} \((\d+)\)", p))
         ids |= set(re.findall(rf"\((\d+)\) {name}\b", p))
-        return len(ids)
+        return ids
+
+    def n_ops(name: str) -> int:
+        return len(op_ids(name))
 
     return {
-        "exchanges": n_ops("Exchange"),
+        "exchanges": len(op_ids("Exchange") - _cached_ids(p)),
         "single_partition_exchanges": p.count("SinglePartition") > 0,
         "broadcast_joins": n_ops("BroadcastHashJoin"),
         "sort_merge_joins": n_ops("SortMergeJoin"),

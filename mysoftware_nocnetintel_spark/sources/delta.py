@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 
 from ..session import local_frame
 from .commit_retry import CommitConflict, discard, recompute, retry
+from .zorder import cluster
 
 _WRITER_TAG = "mysoftware-nocnetintel-spark-minimal"
 
@@ -285,9 +286,10 @@ def _commit_data_version(
     removes/re-adds (``touched``) is byte-identical at the new head
     (same add action: same stats, same deletion vector). A winner that
     only APPENDED passes; one that compacted, deleted from, or rewrote
-    any touched file fails validation, this verb's NEWLY staged data
-    files are removed (re-adds of pre-existing files are left alone),
-    and the conflict surfaces for the caller to re-decide."""
+    any touched file fails validation and the conflict surfaces for the
+    caller to re-decide. Whenever the conflict leaves — failed validation
+    or the last lost attempt — this verb's NEWLY staged data files are
+    removed (re-adds of pre-existing files are left alone)."""
 
     def attempt() -> int:
         _commit_version(log_dir, version, actions)
@@ -306,30 +308,28 @@ def _commit_data_version(
             )
         )
         if not ok:
-            base_live = base_state["live"]
-            adds = [
-                a["add"] for a in actions if (a.get("add") or {}).get("path")
-            ]
-            staged = {a["path"] for a in adds if a["path"] not in base_live}
-            # a MOR re-add whose DV descriptor is NEW relative to
-            # base_state references a bin file this failed attempt wrote
-            # (every MOR commit mints a fresh UUID file, so no base entry
-            # can share it) — delete it too, or the bin strands as an
-            # orphan (round-7 advisor). Several re-adds span one file;
-            # the set dedups.
-            for add in adds:
-                dv = add.get("deletionVector")
-                base_dv = (base_live.get(add["path"]) or {}).get(
-                    "deletionVector"
-                )
-                if dv and dv != base_dv and (p := _dv_rel_path(dv)):
-                    staged.add(p)
-            root = os.path.dirname(log_dir)
-            discard(os.path.join(root, rel) for rel in staged)
             raise conflict
         version = state["version"] + 1
 
-    return retry(attempt, revalidate)
+    try:
+        return retry(attempt, revalidate)
+    except CommitConflict:
+        base_live = base_state["live"]
+        adds = [a["add"] for a in actions if (a.get("add") or {}).get("path")]
+        staged = {a["path"] for a in adds if a["path"] not in base_live}
+        # a MOR re-add whose DV descriptor is NEW relative to base_state
+        # references a bin file this verb wrote (every MOR commit mints a
+        # fresh UUID file, so no base entry can share it) — delete it
+        # too, or the bin strands as an orphan (round-7 advisor). Several
+        # re-adds span one file; the set dedups.
+        for add in adds:
+            dv = add.get("deletionVector")
+            base_dv = (base_live.get(add["path"]) or {}).get("deletionVector")
+            if dv and dv != base_dv and (p := _dv_rel_path(dv)):
+                staged.add(p)
+        root = os.path.dirname(log_dir)
+        discard(os.path.join(root, rel) for rel in staged)
+        raise
 
 
 def _physical_names(meta: dict | None) -> dict[str, str]:
@@ -754,10 +754,19 @@ def write_delta_append(
         if txn is not None:
             done = new_state["txns"].get(txn[0])
             if done is not None and done >= int(txn[1]):
-                return new_state["version"]  # winner was our batch
+                # the winner was our batch: its files are the committed
+                # copy, this attempt's are unreferenced
+                _discard_adds(path, actions)
+                return new_state["version"]
         version = new_state["version"] + 1
 
-    return retry(attempt, rebase, attempts=5)
+    try:
+        return retry(attempt, rebase, attempts=5)
+    except CommitConflict:
+        # budget spent or the head moved incompatibly: nothing will
+        # reference the staged files
+        _discard_adds(path, actions)
+        raise
 
 
 # spark dtypes whose parquet statistics are safe to publish as add.stats
@@ -907,8 +916,6 @@ def _stage_append(
     if missing:
         raise ValueError(f"partition columns {missing} not in the schema")
     version = (state["version"] + 1) if exists else 0
-
-    from .zorder import cluster
 
     df = cluster(df, sort_by, zorder)
     # distributed data write into a staging dir, then move into the root

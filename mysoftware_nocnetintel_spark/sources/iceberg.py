@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame
 from ..session import local_frame
 from .avro_lite import write_avro_file
 from .commit_retry import CommitConflict, discard, recompute, retry
+from .zorder import cluster
 
 _WRITER_TAG = "mysoftware-nocnetintel-spark-minimal"
 
@@ -1259,8 +1260,6 @@ def write_iceberg_append(
             "sort_by clusters parquet zone maps; avro files carry "
             "no bounds to tighten"
         )
-    from .zorder import cluster
-
     # one distributed pass per append: Spark's fan-out writer does the
     # per-partition-tuple file split (no per-partition driver loop, no
     # double-execution of a non-deterministic source plan)
@@ -1323,6 +1322,7 @@ def write_iceberg_append(
         )
 
     orig_sig = _table_sig(meta)
+    staged: list[str] = []
 
     def rebase(conflict: CommitConflict) -> int | None:
         # CAS lost: reload and re-stage the METADATA on top of the
@@ -1332,6 +1332,8 @@ def write_iceberg_append(
         # per attempt, so the larger append budget never changes what
         # lands.
         nonlocal meta, ver
+        # this attempt's manifest + list embed the lost snap id
+        discard(staged)
         meta, ver = _load_meta(meta_dir)
         if meta is not None and meta.get("properties", {}).get(
             "writer"
@@ -1391,12 +1393,18 @@ def write_iceberg_append(
             ver,
             manifests,
             summary,
-            staged=[],
+            staged,
             branch=branch,
             updates=updates,
         )
 
-    return retry(attempt, rebase, attempts=5)
+    try:
+        return retry(attempt, rebase, attempts=5)
+    except CommitConflict:
+        # budget spent or the schema/spec moved: nothing will reference
+        # the staged data files
+        discard(f for f, _pv, _fmt, _n in new_files)
+        raise
 
 
 # Delete commits collect (file_path, pos) rows to the driver before writing
@@ -1864,7 +1872,12 @@ def merge_iceberg_rows(
     try:
         if rows is not None:
             new_files = _stage_data_files(
-                rows, path, data_dir, pfs, file_format, drop_empty=True
+                cluster(rows, ()),
+                path,
+                data_dir,
+                pfs,
+                file_format,
+                drop_empty=True,
             )
         if del_tbl.num_rows:
             del_file = os.path.join(
@@ -2045,7 +2058,7 @@ def update_iceberg_rows(
     del_file: str | None = None
     try:
         new_files = _stage_data_files(
-            matched.select(*table_cols),
+            cluster(matched.select(*table_cols), ()),
             path,
             data_dir,
             pfs,
@@ -2318,7 +2331,6 @@ def rewrite_iceberg_table(
             "sort_by re-clustering is unpartitioned-only (partition "
             "fan-out already groups the write)"
         )
-    from .zorder import cluster
 
     def _stage_group(live_df, pfs_g, pack):
         """Distributed write of one rewrite input under one spec's
@@ -2346,10 +2358,14 @@ def rewrite_iceberg_table(
             live_df = live_df.coalesce(int(n))
         return _stage_data_files(live_df, path, data_dir, pfs_g, pack=pack)
 
+    # a rewrite shapes its own files (the byte budget above), so only a
+    # sort_by rewrite goes through zorder.cluster's layout rule
     new_files_by_spec: dict[int, list] = {}
     if min_files_per_partition is None:
         new_files_by_spec[_default_spec_id(meta)] = _stage_group(
-            cluster(live, sort_by, zorder), pfs, pack=False
+            cluster(live, sort_by, zorder) if sort_by else live,
+            pfs,
+            pack=False,
         )
     else:
         # one rewrite input PER SPEC GROUP: the fragmented files' LIVE
@@ -2363,7 +2379,7 @@ def rewrite_iceberg_table(
             live_g = _iceberg_live_scan(
                 spark, path, only_files={e.path for e in frag_by_spec[sid]}
             )
-            if not pfs_g:
+            if sort_by and not pfs_g:
                 live_g = cluster(live_g, sort_by, zorder)
             new_files_by_spec[sid] = _stage_group(live_g, pfs_g, pack=True)
 

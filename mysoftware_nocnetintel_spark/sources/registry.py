@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..session import tune
+from .zorder import byte_small
 
 TABLES = (
     "region",
@@ -101,13 +102,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # file per table, so a scan arrives as ONE partition whatever its
         # size):
         #
-        # * Under 512 KiB (``nbytes >> 18 <= 1``), a one-partition scan is
-        #   cached as ``coalesce(1)``. The cached relation then reports
-        #   ``SinglePartition``, which satisfies every clustered and
-        #   ordered distribution, so aggregates, windows, distincts and
-        #   joins over it plan no exchange: a serving statement over
-        #   KB-scale inputs pays no shuffle stage and one task per scan
-        #   instead of ``shuffle.partitions``.
+        # * Byte-small (``zorder.byte_small``, under 512 KiB: the same
+        #   threshold the lakehouse writers' one-file rule reads), a
+        #   one-partition scan is cached as ``coalesce(1)``. The cached
+        #   relation then reports ``SinglePartition``, which satisfies
+        #   every clustered and ordered distribution, so aggregates,
+        #   windows, distincts and joins over it plan no exchange: a
+        #   serving statement over KB-scale inputs pays no shuffle stage
+        #   and one task per scan instead of ``shuffle.partitions``.
         # * Above it, every table gets ~256 KiB of parquet per cached
         #   partition (best of {2 MiB, 512 KiB, 256 KiB}: headline sf0.1
         #   seq total 2.33 / 1.87 / 1.75 s; a 184 MB sf1 lineitem cached
@@ -134,7 +136,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if name == "documents":
             if parts < target:
                 df = df.repartition(target)
-        elif nbytes >> 18 <= 1 and parts == 1:
+        elif byte_small(nbytes) and parts == 1:
             df = df.coalesce(1)
         else:
             spread = min(target, nbytes >> 18)

@@ -1,4 +1,10 @@
-"""Z-ORDER (Morton-curve) multi-column clustering for lakehouse writes.
+"""The data-file layout of every lakehouse write, and Z-ORDER
+(Morton-curve) multi-column clustering.
+
+:func:`cluster` is the one layout decision of the Delta and Iceberg data
+writers: a ``sort_by`` write is range-clustered (below); a write without
+one whose optimized plan is byte-small (:func:`byte_small`) runs as one
+task and stages one file; anything larger keeps its partitioning.
 
 Single-column ``sort_by`` clustering gives disjoint zone maps on the
 leading column only — a range predicate on the SECOND sort column still
@@ -86,19 +92,45 @@ def zvalue_column(df: DataFrame, cols: tuple[str, ...], bits: int = 6) -> Column
     return z
 
 
+def byte_small(nbytes: int) -> bool:
+    """The package's one byte-small threshold: under 512 KiB
+    (``nbytes >> 18 <= 1``) a relation is cheaper as one task than as a
+    fan-out. The table cache's single-partition rule
+    (``registry.load_table``) and :func:`cluster` both read it."""
+    return nbytes >> 18 <= 1
+
+
+def plan_bytes(df: DataFrame) -> int:
+    """Catalyst's ``sizeInBytes`` estimate of ``df``'s optimized plan.
+    Exact for a driver-built ``LocalTableScan``; without CBO an upper
+    bound for every operator except ``Generate`` (a join estimates the
+    product of its sides)."""
+    stats = df._jdf.queryExecution().optimizedPlan().stats()
+    return int(stats.sizeInBytes())
+
+
 def cluster(
     df: DataFrame, sort_by: tuple[str, ...], zorder: bool = False
 ) -> DataFrame:
-    """CLUSTER a lakehouse write on ``sort_by``: range-partition then sort
-    within each partition, so every output file covers a narrow key slice
-    and its zone-map bounds are near-disjoint from its siblings'. With
-    ``zorder`` the key is the Morton z-value of the columns
-    (:func:`zvalue_column`) instead of their lexicographic order. The
-    partition count is passed EXPLICITLY (the session's shuffle-partition
-    conf) so AQE cannot coalesce the clustered write back into one wide
-    file. No ``sort_by`` returns ``df`` unchanged."""
+    """The layout of one lakehouse data write.
+
+    - With ``sort_by``: CLUSTER the write — range-partition then sort
+      within each partition, so every output file covers a narrow key
+      slice and its zone-map bounds are near-disjoint from its siblings'.
+      With ``zorder`` the key is the Morton z-value of the columns
+      (:func:`zvalue_column`) instead of their lexicographic order. The
+      partition count is passed EXPLICITLY (the session's
+      shuffle-partition conf) so AQE cannot coalesce the clustered write
+      back into one wide file.
+    - Without, when the plan is byte-small (:func:`byte_small` of
+      :func:`plan_bytes`): ``coalesce(1)`` — one task writes one file (one
+      per partition directory). A 2,000-row driver-built batch otherwise
+      fans out to every core and stages a file per task, each paying task
+      start-up, a parquet footer and an add action.
+    - Otherwise ``df`` unchanged. At cluster scale a write's estimate is
+      far above the threshold, so the rule never fires there."""
     if not sort_by:
-        return df
+        return df.coalesce(1) if byte_small(plan_bytes(df)) else df
     bad = [c for c in sort_by if c not in df.columns]
     if bad:
         raise ValueError(f"sort_by columns {bad} not in the schema")

@@ -62,9 +62,8 @@ def _delta_table(spark, root):
 
 
 # verb -> (format, setup, call, attempt budget, strands nothing on a final
-# loss). Appends keep their staged data files when the budget runs out
-# and Delta's validated retry only cleans when validation fails, so the
-# directory check covers the verbs that clean every losing attempt.
+# loss). Every verb now removes what its losing attempts staged, the last
+# one included, so the directory check covers them all.
 VERBS = {
     "iceberg_delete_file": (
         "iceberg", _iceberg_table,
@@ -103,24 +102,24 @@ VERBS = {
     "iceberg_append": (
         "iceberg", _iceberg_table,
         lambda spark, root: ice.write_iceberg_append(_df(spark, 20, 22), root),
-        5, False,
+        5, True,
     ),
     "delta_append": (
         "delta", _delta_table,
         lambda spark, root: dl.write_delta_append(_df(spark, 20, 22), root),
-        5, False,
+        5, True,
     ),
     "delta_delete": (
         "delta", _delta_table,
         lambda spark, root: dl.delete_delta_rows(spark, root, "id = 1"),
-        3, False,
+        3, True,
     ),
     "delta_merge": (
         "delta", _delta_table,
         lambda spark, root: dl.merge_delta_rows(
             spark, root, _df(spark, 3, 7), on=["id"]
         ),
-        3, False,
+        3, True,
     ),
     "delta_optimize": (
         "delta", _delta_table,

@@ -47,8 +47,8 @@ def test_round4_rewrite_plan_shapes(spark, sf_dir):
     were designed to produce, asserted so regressions surface in CI rather
     than in bench numbers.
 
-    - q41: ONE scan + ONE map-side Python pass (the shingle posting
-      builder), pairs via nested generate — exactly two data shuffles plus
+    - q41: ONE scan, a JVM map-side shingle posting builder (no Python
+      pass), pairs via nested generate — exactly two data shuffles plus
       the spread repartition and the final sort; no joins at all.
     - q107 (gated closure path): overlap computed inside the train-side
       Python pass — NO join operators of any kind survive in the plan.
@@ -57,7 +57,7 @@ def test_round4_rewrite_plan_shapes(spark, sf_dir):
       single-partition exchange.
     """
     s41 = plan_summary(QUERIES["q41_ngram_jaccard"](spark, sf_dir))
-    assert s41["python_evals"] == 1
+    assert s41["python_evals"] == 0
     assert s41["scans"] == 1
     assert s41["broadcast_joins"] == 0 and s41["sort_merge_joins"] == 0
     assert s41["exchanges"] <= 4

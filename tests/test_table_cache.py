@@ -16,6 +16,10 @@ import os
 import pytest
 
 from mysoftware_nocnetintel_spark.plans import QUERIES
+from mysoftware_nocnetintel_spark.plans.diagnostics import (
+    formatted_plan,
+    plan_summary,
+)
 from mysoftware_nocnetintel_spark.sources import registry
 
 from .conftest import SF_DIR
@@ -185,3 +189,12 @@ def test_disabling_the_cache_unpersists_every_table(serving):
         assert registry.load_table(spark, SF, "region") is not df
     finally:
         registry.enable_table_cache(True)
+
+
+def test_plan_summary_skips_the_cache_build_exchange(serving):
+    # q1's cached lineitem was spread by a repartition when the cache was
+    # built; each execution of q1 runs only its aggregate's shuffle
+    df = QUERIES["q1_pricing_summary"](serving, SF)
+    p = formatted_plan(df)
+    assert "InMemoryRelation" in p and p.count("Exchange (") == 2
+    assert plan_summary(df)["exchanges"] == 1 == _shuffles(df)
