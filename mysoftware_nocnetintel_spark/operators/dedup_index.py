@@ -26,10 +26,14 @@ Design decisions, in 100 TB order:
    ``zip_with`` — so the historical corpus is only ever touched as an
    8-byte-per-hash signature table. Exact-Jaccard re-verification of the
    survivors is a caller-side join back to text when needed.
-3. **One shuffle each side.** Batch sigs shuffle once (groupBy doc in
-   minhash_signatures); the index side shuffles its banded projection
-   once into the equi-join. AQE handles hot buckets (stop-shingle-like
-   skew) by splitting them.
+3. **One band join; the index is scanned once.** Batch sigs shuffle
+   once (groupBy doc in minhash_signatures). Their band rows, each
+   carrying the doc's signature, are the join's build side (broadcast
+   under the budget); the streamed side is the index's band rows unioned
+   with the batch's own, so the vs-index and within-batch candidates and
+   their verification come out of the one join. Past the budget the join
+   shuffles both sides, and AQE splits hot buckets (stop-shingle-like
+   skew).
 4. **Params are pinned.** ``num_hashes/bands/shingle_k`` are written to a
    sidecar JSON at build time and validated on every append/query —
    mixing signature spaces silently would produce garbage verdicts.
@@ -47,9 +51,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .dedup import minhash_signatures, sig_band_rows  # noqa: F401 — re-export:
-# sig_band_rows moved to dedup.py (the single banding definition shared
-# with lsh_candidate_pairs); kept importable from here for callers.
+from .dedup import minhash_signatures, sig_band_rows
 
 _PARAMS_FILE = "_dedup_index_params.json"
 
@@ -158,7 +160,11 @@ def append_to_minhash_index(
     batch cannot double-register it. Returns the committed version.
     ``_sigs`` lets the ingestion gate register the ``(doc, sig)`` rows
     it already computed under these parameters instead of re-shingling
-    ``df``."""
+    ``df``. A byte-small registration (``zorder.byte_small`` of its plan
+    estimate) is written as one file; a larger one is range-clustered on
+    ``doc`` like the build."""
+    from ..sources.zorder import byte_small, plan_bytes
+
     p = read_index_params(path)
     sigs = (
         _sigs
@@ -167,8 +173,9 @@ def append_to_minhash_index(
             df, id_col, text_col, p["num_hashes"], p["shingle_k"]
         )
     )
+    sort_by = () if byte_small(plan_bytes(sigs)) else ("doc",)
     return _write_table(
-        sigs, path, p.get("table_format", "delta"), txn=txn, sort_by=("doc",)
+        sigs, path, p.get("table_format", "delta"), txn=txn, sort_by=sort_by
     )
 
 
@@ -184,7 +191,7 @@ def dedup_against_minhash_index(
     """Near-dup verdicts for a NEW batch against the persisted index AND
     within the batch itself, without re-touching any historical text.
 
-    Returns one row per duplicate relation:
+    Returns one distinct row per duplicate relation:
       (doc, dup_of, est_jaccard, source)  with source in
       ('index', 'batch'); within-batch relations follow the keep-one rule
       (``dup_of`` is a strictly lower batch id, so min-id group members
@@ -198,28 +205,30 @@ def dedup_against_minhash_index(
     registered self, and flagging it keeps non-txn re-deliveries from
     double-registering.
 
+    Rows are distinct, so a doc registered twice with identical
+    signatures yields one ``index`` row.
+
     ``_sigs`` is the caller's checkpointed ``minhash_signatures`` of
     ``batch_df`` under the index's parameters; the ingestion gate passes
-    it so the same proxy also feeds the registration commit."""
+    it so the same proxy also carries the signatures it registers."""
     p = read_index_params(path)
     num_hashes, bands = p["num_hashes"], p["bands"]
     rows_per_band = num_hashes // bands
 
     # FINGERPRINT ONCE (r13, the q147/guide-§8 proxy pattern): the batch
-    # signature table feeds FIVE join inputs below (banded vs-index left,
-    # banded vs-batch both sides, and the __sig_a/__sig_b verify lookups)
-    # — without truncation the whole shingle+MinHash pipeline over the
-    # batch text re-executes once per consumer. ``localCheckpoint`` pins
-    # the (doc, 32×8 B sig) proxy so the batch text is shingled exactly
-    # once per call — and once per ingestion gate, which builds the proxy
-    # itself and hands it here (``_sigs``) and to the registration commit.
-    # The measured count then gates explicit
-    # broadcasts of the batch-derived sides (a checkpointed plan carries
-    # no size estimate, so Catalyst would otherwise fall back to
-    # sort-merge) — under the budget the INDEX side is never shuffled at
-    # all (the 100 TB posture: the historical index dwarfs any ingest
-    # batch). Lineage-truncation trade documented at
-    # dedup.hamming_band_pairs.
+    # signature table feeds BOTH sides of the one band join below (the
+    # broadcast build side, and its union with the index on the streamed
+    # side) — without truncation the whole shingle+MinHash pipeline over
+    # the batch text would re-execute once per consumer.
+    # ``localCheckpoint`` pins the (doc, 32×8 B sig) proxy so the batch
+    # text is shingled exactly once per call — and once per ingestion
+    # gate, which builds the proxy itself and hands it here (``_sigs``).
+    # The measured count then gates the explicit broadcast of the batch's
+    # band rows (a checkpointed plan's size estimate is the pre-truncation
+    # plan's, not a measurement) — under the budget the INDEX side is
+    # never shuffled into the join at all (the 100 TB posture: the
+    # historical index dwarfs any ingest batch). Lineage-truncation trade
+    # documented at dedup.hamming_band_pairs.
     from .dedup import _fits_broadcast, _proxy_stats
 
     batch_sigs = (
@@ -230,85 +239,53 @@ def dedup_against_minhash_index(
         ).localCheckpoint(eager=False)
     )
     n_batch, id_bytes = _proxy_stats(batch_sigs, "doc")
-    # banded rows: band + bucket payload; sig rows: the hash array
-    bcast_band = _fits_broadcast(
-        n_batch, id_bytes, payload_bytes=16.0, fanout=bands
-    )
-    bcast_sigs = _fits_broadcast(
-        n_batch, id_bytes, payload_bytes=16.0 + 8.0 * num_hashes
+    # each build row: band + bucket + the doc's whole signature
+    bcast = _fits_broadcast(
+        n_batch, id_bytes, payload_bytes=16.0 + 8.0 * num_hashes,
+        fanout=bands,
     )
 
-    def _hint(df, ok):
-        return F.broadcast(df) if ok else df
+    def banded(sigs: DataFrame) -> DataFrame:
+        """(doc, sig, band, bucket): ``sig_band_rows`` over a struct id,
+        so every band row carries its doc's signature to the verify."""
+        return sig_band_rows(
+            sigs.select(F.struct("doc", "sig").alias("__ds"), "sig"),
+            bands, rows_per_band, id_col="__ds",
+        ).select("doc.doc", "doc.sig", "band", "bucket")
 
-    index_sigs = _read_table(spark, path, p.get("table_format", "delta"))
-
-    b_band = sig_band_rows(batch_sigs, bands, rows_per_band)
-    i_band = sig_band_rows(index_sigs, bands, rows_per_band)
-
-    # batch vs index: every (batch_doc, index_doc) sharing >= 1 bucket
-    cand_i = (
-        _hint(b_band.select(F.col("doc").alias("doc"), "band", "bucket"),
-              bcast_band)
-        .join(
-            i_band.select(F.col("doc").alias("dup_of"), "band", "bucket"),
-            ["band", "bucket"],
+    b_band = banded(batch_sigs)
+    build = b_band.select(
+        "doc", F.col("sig").alias("__sig_a"), "band", "bucket"
+    )
+    # ONE band join: the streamed side is the index's band rows and the
+    # batch's own, tagged by source — the index is scanned once and the
+    # batch's band rows are broadcast once
+    streamed = (
+        banded(_read_table(spark, path, p.get("table_format", "delta")))
+        .withColumn("source", F.lit("index"))
+        .unionByName(b_band.withColumn("source", F.lit("batch")))
+        .select(
+            F.col("doc").alias("dup_of"), F.col("sig").alias("__sig_b"),
+            "band", "bucket", "source",
         )
-        .select("doc", "dup_of")
-        .distinct()
     )
-    # batch vs batch: keep-one rule (pair with a strictly lower id)
-    cand_b = (
-        b_band.select(F.col("doc").alias("doc"), "band", "bucket")
-        .join(
-            _hint(
-                b_band.select(
-                    F.col("doc").alias("dup_of"), "band", "bucket"
-                ),
-                bcast_band,
+    return (
+        (F.broadcast(build) if bcast else build)
+        .join(streamed, ["band", "bucket"])
+        # within the batch, the keep-one rule: pair with a strictly
+        # lower id
+        .filter(
+            (F.col("source") == "index") | (F.col("dup_of") < F.col("doc"))
+        )
+        .select(
+            "doc",
+            "dup_of",
+            est_jaccard(F.col("__sig_a"), F.col("__sig_b"), num_hashes).alias(
+                "est_jaccard"
             ),
-            ["band", "bucket"],
+            "source",
         )
-        .filter(F.col("dup_of") < F.col("doc"))
-        .select("doc", "dup_of")
+        .filter(F.col("est_jaccard") >= F.lit(threshold))
+        # a pair sharing several bands matches once per band
         .distinct()
-    )
-
-    def verify(
-        cand: DataFrame, other_sigs: DataFrame, other_bcast: bool,
-        source: str,
-    ) -> DataFrame:
-        return (
-            cand.join(
-                _hint(
-                    batch_sigs.select(
-                        F.col("doc"), F.col("sig").alias("__sig_a")
-                    ),
-                    bcast_sigs,
-                ),
-                "doc",
-            )
-            .join(
-                _hint(
-                    other_sigs.select(
-                        F.col("doc").alias("dup_of"),
-                        F.col("sig").alias("__sig_b"),
-                    ),
-                    other_bcast,
-                ),
-                "dup_of",
-            )
-            .select(
-                "doc",
-                "dup_of",
-                est_jaccard(F.col("__sig_a"), F.col("__sig_b"), num_hashes).alias(
-                    "est_jaccard"
-                ),
-                F.lit(source).alias("source"),
-            )
-            .filter(F.col("est_jaccard") >= F.lit(threshold))
-        )
-
-    return verify(cand_i, index_sigs, False, "index").unionByName(
-        verify(cand_b, batch_sigs, bcast_sigs, "batch")
     )

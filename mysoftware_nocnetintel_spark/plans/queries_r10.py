@@ -323,8 +323,9 @@ def q152_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     lifecycle): split documents 80/20 by the q97 deterministic md5 trick;
     BUILD the index from the corpus split (engine's own Delta writer, a
     fresh build per invocation at a deterministic tmp path); DEDUP the
-    batch split against it (banded equi-join on the pinned geometry +
-    signature-agreement >= 0.6); triage every batch doc:
+    batch split against it (one band join on the pinned geometry, the
+    index and the batch's own band rows on one side, signature agreement
+    >= 0.6); triage every batch doc:
 
     - ``dup_vs_index`` — agrees with a persisted signature;
     - ``dup_in_batch`` — keep-one rule within the batch (min id survives);
@@ -335,9 +336,11 @@ def q152_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     have no DuckDB twin; the value oracles are the lifecycle +
     banding-bit-compatibility units (tests/test_dedup_index.py).
 
-    At 100 TB: the index side shuffles 8-byte-per-hash signatures (point
-    1 of the module docstring), the batch side is the only text scan,
-    and verification is array agreement — no historical text is read."""
+    At 100 TB: the index is scanned once as 8-byte-per-hash signatures
+    (points 1 and 3 of the module docstring) and streams past the batch's
+    broadcast band rows, the batch side is the only text scan, and
+    verification is array agreement — no historical text is read. The
+    verdict rows are distinct; the triage aggregates per doc either way."""
     from ..operators import dedup_index as DI
 
     docs = _t(spark, sf_dir, "documents").select(

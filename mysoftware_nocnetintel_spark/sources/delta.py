@@ -812,12 +812,15 @@ def _stage_append(
     sort_by: tuple[str, ...] = (),
     zorder: bool = False,
     repartition_to: "tuple[str, ...] | None" = None,
+    allow_empty: bool = False,
 ) -> tuple[int, list[dict]]:
     """Gate + stage an append: runs every check ``write_delta_append``
     documents, performs the distributed data write, moves the files into
     the table root, and returns ``(version, actions)`` WITHOUT writing
     the commit json — so overwrite can prepend remove tombstones and
-    commit removes+adds as one version file."""
+    commit removes+adds as one version file. ``allow_empty`` lets a write
+    that staged no file (an empty write into a partitioned table) return
+    no add actions instead of raising."""
     from urllib.parse import unquote
 
     log_dir = os.path.join(path, "_delta_log")
@@ -945,7 +948,7 @@ def _stage_append(
         shutil.move(f, os.path.join(path, rel))
         new_files.append((rel, pvals))
     shutil.rmtree(stage)
-    if not new_files:
+    if not new_files and not allow_empty:
         raise ValueError("append produced no data files")
 
     now_ms = int(time.time() * 1000)
@@ -1510,15 +1513,34 @@ def _writer_state(path: str) -> dict:
     return state
 
 
+def _stage_rows(new_df, path: str) -> list[dict]:
+    """Stage ``new_df`` as add actions for a MERGE/UPDATE commit, keeping
+    only the files that hold rows. Emptiness is read from each staged
+    file's ``numRecords`` (its footer's row count when the add carries no
+    stats), so no job runs to probe ``new_df`` first; zero-row files are
+    discarded, and an empty write stages nothing."""
+    import pyarrow.parquet as pq
+
+    def rows(add: dict) -> int:
+        if add.get("stats"):
+            return json.loads(add["stats"])["numRecords"]
+        return pq.ParquetFile(os.path.join(path, add["path"])).metadata.num_rows
+
+    _, actions = _stage_append(new_df, path, allow_empty=True)
+    empty = [a for a in actions if "add" in a and not rows(a["add"])]
+    _discard_adds(path, empty)
+    return [a for a in actions if a not in empty]
+
+
 def _commit_cow_rewrite(
-    spark, path: str, state: dict, touched_rel: list[str], new_df, has_rows
+    spark, path: str, state: dict, touched_rel: list[str], new_df
 ) -> int:
-    """Shared MERGE/UPDATE commit tail: stage ``new_df`` as ordinary add
-    actions (unless provably empty), prepend remove tombstones for the
-    rewritten files, and commit everything as ONE version json — a reader
-    or crash can never observe the adds without their removes or vice
-    versa. ``has_rows`` avoids staging a zero-row write (a delete-only
-    merge commits removes only)."""
+    """Shared MERGE/UPDATE commit tail: stage ``new_df`` (when not None)
+    as ordinary add actions (:func:`_stage_rows`: files that hold rows),
+    prepend remove tombstones for the rewritten files, and commit
+    everything as ONE version json — a reader or crash can never observe
+    the adds without their removes or vice versa. A rewrite with no rows
+    left (a delete-only merge) commits removes only."""
     log_dir = os.path.join(path, "_delta_log")
     now_ms = int(time.time() * 1000)
     removes = [
@@ -1531,10 +1553,7 @@ def _commit_cow_rewrite(
         }
         for rel in touched_rel
     ]
-    if has_rows:
-        _, add_actions = _stage_append(new_df, path)
-    else:
-        add_actions = []
+    add_actions = [] if new_df is None else _stage_rows(new_df, path)
     # Commit at base_state's version+1, NOT _stage_append's fresh replay:
     # the removes/touched set were computed against base_state, so a
     # writer landing between entry and staging must trip the CAS and flow
@@ -1698,16 +1717,11 @@ def merge_delta_rows(
         if when_not_matched == "insert":
             pieces.append(src.join(tgt_keys, keys, "left_anti"))
     if not pieces:
-        return _commit_cow_rewrite(
-            spark, path, state, touched_rel, None, has_rows=False
-        )
+        return _commit_cow_rewrite(spark, path, state, touched_rel, None)
     new_df = pieces[0]
     for p in pieces[1:]:
         new_df = new_df.unionByName(p)
-    has_rows = bool(new_df.limit(1).count())
-    return _commit_cow_rewrite(
-        spark, path, state, touched_rel, new_df, has_rows
-    )
+    return _commit_cow_rewrite(spark, path, state, touched_rel, new_df)
 
 
 def _commit_mor_merge(
@@ -1788,7 +1802,6 @@ def _commit_mor_mask_and_add(
         by_file.setdefault(
             abs_to_rel[os.path.abspath(r["__fp"])], set()
         ).add(r["__pos"])
-    has_rows = new_df is not None and bool(new_df.limit(1).count())
 
     now_ms = int(time.time() * 1000)
     actions: list[dict] = []
@@ -1860,9 +1873,8 @@ def _commit_mor_mask_and_add(
                 re_add["stats"] = old["stats"]
             actions.append({"add": re_add})
 
-    if has_rows:
-        _, add_actions = _stage_append(new_df, path)
-        actions.extend(add_actions)
+    if new_df is not None:
+        actions.extend(_stage_rows(new_df, path))
     # base_state version+1, not _stage_append's re-derived version: an
     # interleaved writer must trip the CAS so the DV coordinates/protocol
     # decisions computed from `state` go through validation (r7 advisor).
@@ -1964,9 +1976,7 @@ def update_delta_rows(
             for c in table_cols
         ]
     )
-    return _commit_cow_rewrite(
-        spark, path, state, touched_rel, new_df, has_rows=True
-    )
+    return _commit_cow_rewrite(spark, path, state, touched_rel, new_df)
 
 
 def _dv_rel_path(dv: dict | None) -> str | None:

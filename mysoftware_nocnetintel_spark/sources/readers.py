@@ -1940,53 +1940,65 @@ def _apply_equality_deletes(
 ) -> DataFrame:
     """Merge-on-read equality deletes, spec semantics: a delete row kills a
     data row iff the equality columns match NULL-SAFELY and the data file's
-    data sequence number is STRICTLY LOWER than the delete file's. The
-    per-file sequence number reaches the rows via a broadcast join on the
-    hidden file path (KB-scale map, never collected back); delete files are
-    grouped by their equality-column set so each set costs one broadcast
-    anti-join. Fully distributed — scales with the data scan, not the
+    data sequence number is STRICTLY LOWER than the delete file's. Delete
+    files are grouped by their equality-column set, and each group is ONE
+    scan of all its files under an explicit schema (the data scan's column
+    types, so no schema-inference job runs per file) and one broadcast
+    anti-join. Every file's sequence number — data or delete — reaches its
+    rows through one broadcast join on the hidden file path (KB-scale map,
+    never collected back; the data and delete sides reuse the one
+    exchange). Fully distributed — scales with the data scan, not the
     driver."""
     import functools
     from collections import defaultdict
 
-    seq_df = local_frame(
-        spark,
-        [(e.path, e.seq) for e in data_files],
-        "__fp: string, __fseq: long",
+    import pyarrow.parquet as pq
+
+    seq_df = F.broadcast(
+        local_frame(
+            spark,
+            [(e.path, e.seq) for e in data_files]
+            + [(fpath, seq) for fpath, seq, _ in eq_deletes],
+            "__fp: string, __fseq: long",
+        )
     )
-    data = data.join(F.broadcast(seq_df), "__fp", "inner")
-    groups: dict[tuple[str, ...], list[tuple[str, int]]] = defaultdict(list)
-    for fpath, seq, cols in eq_deletes:
-        groups[tuple(cols)].append((fpath, seq))
-    for cols, files in groups.items():
-        dels = None
-        for fpath, seq in files:
-            raw = spark.read.parquet(fpath)
-            sel = []
+    data = data.join(seq_df, "__fp", "inner")
+    types = {f.name: f.dataType for f in data.schema.fields}
+    groups: dict[tuple[str, ...], list[str]] = defaultdict(list)
+    for fpath, _seq, cols in eq_deletes:
+        groups[tuple(cols)].append(fpath)
+    for cols, paths in groups.items():
+        # a delete file written before a column RENAME carries the
+        # historical name (the manifest's equality_ids are field ids, so
+        # the name mapping resolves it): each historical name is one more
+        # nullable column, coalesced — a file carries exactly one of the
+        # names, as in the data scan
+        names = {c: [c] + (legacy or {}).get(c, []) for c in cols}
+        for fpath in paths:
+            have = set(pq.read_schema(fpath).names)
             for c in cols:
-                if c in raw.columns:
-                    sel.append(F.col(c))
-                    continue
-                # delete file written before a column RENAME: its
-                # equality column carries the historical name — the
-                # equality_ids in the manifest are field ids, so the
-                # name mapping resolves it to the current name
-                h = next(
-                    (
-                        h
-                        for h in (legacy or {}).get(c, [])
-                        if h in raw.columns
-                    ),
-                    None,
-                )
-                if h is None:
+                if not have.intersection(names[c]):
                     raise ValueError(
                         f"equality-delete file {fpath} lacks column "
                         f"{c!r} (and no historical name matches)"
                     )
-                sel.append(F.col(h).alias(c))
-            d = raw.select(*sel, F.lit(seq).alias("__dseq"))
-            dels = d if dels is None else dels.unionByName(d)
+        schema = T.StructType(
+            [
+                T.StructField(n, types[c], True)
+                for c in cols
+                for n in names[c]
+            ]
+        )
+        dels = (
+            spark.read.schema(schema)
+            .parquet(*paths)
+            .select(
+                *[F.coalesce(*map(F.col, names[c])).alias(c) for c in cols],
+                _uri_to_path(F.col("_metadata.file_path")).alias("__fp"),
+            )
+            .join(seq_df, "__fp", "inner")
+            .select(*cols, F.col("__fseq").alias("__dseq"))
+        )
         cond = functools.reduce(
             lambda a, b: a & b, [data[c].eqNullSafe(dels[c]) for c in cols]
         ) & (dels["__dseq"] > data["__fseq"])

@@ -1052,11 +1052,13 @@ def dedup_gate_batch(
     ingest). Both are deterministic; neither can near-dup-gate them.
 
     The batch is shingled and signed ONCE: the checkpointed ``(doc, sig)``
-    proxy feeds the verdicts, and its semi-join with the novel ids is what
-    the index registers. Lineage: both the proxy and ``novel`` are
-    local checkpoints (the truncation trade documented at
+    proxy feeds the verdicts, and ONE checkpointed proxy of the novel
+    rows, carrying their signatures, feeds both commits: the corpus
+    append writes its batch columns, the index registers its non-NULL
+    ``(doc, sig)`` pairs (a short doc has no signature). Lineage: both
+    proxies are local checkpoints (the truncation trade documented at
     dedup.hamming_band_pairs); they live through both commits and are
-    reclaimed only by ContextCleaner once unreferenced."""
+    released when the gate returns or raises."""
     if short_docs not in ("ingest", "drop"):
         raise ValueError(f"short_docs must be 'ingest' or 'drop': {short_docs!r}")
     from ..functions.text import word_shingles
@@ -1073,26 +1075,58 @@ def dedup_gate_batch(
     sigs = minhash_signatures(
         batch_df, id_col, text_col, p["num_hashes"], p["shingle_k"]
     ).localCheckpoint(eager=False)
-    verdicts = DI.dedup_against_minhash_index(
-        spark, batch_df, index_path, id_col, text_col, threshold, _sigs=sigs
-    )
-    dup_ids = verdicts.select(F.col("doc").alias(id_col)).distinct()
-    # localCheckpoint: `novel` feeds BOTH commits below — without it the
-    # full index banding + verify joins execute twice per micro-batch
-    # (the dedup.py shared-intermediate pattern)
-    novel = batch_df.join(dup_ids, id_col, "left_anti").localCheckpoint(
-        eager=False
-    )
-    write_delta_append(
-        novel, corpus_path, txn=(f"{app_id}:corpus", int(batch_id))
-    )
-    novel_sigs = sigs.join(
-        novel.select(F.col(id_col).alias("doc")), "doc", "left_semi"
-    )
-    DI.append_to_minhash_index(
-        novel, index_path, id_col, text_col,
-        txn=(f"{app_id}:index", int(batch_id)), _sigs=novel_sigs,
-    )
+    novel = None
+    try:
+        verdicts = DI.dedup_against_minhash_index(
+            spark, batch_df, index_path, id_col, text_col, threshold,
+            _sigs=sigs,
+        )
+        dup_ids = verdicts.select(F.col("doc").alias(id_col)).distinct()
+        # localCheckpoint: `novel` feeds BOTH commits below — without it
+        # the index band join executes twice per micro-batch (the dedup.py
+        # shared-intermediate pattern)
+        novel = (
+            batch_df.join(dup_ids, id_col, "left_anti")
+            .join(
+                sigs.select(
+                    F.col("doc").alias(id_col), F.col("sig").alias("__sig")
+                ),
+                id_col,
+                "left",
+            )
+            .localCheckpoint(eager=False)
+        )
+        write_delta_append(
+            novel.drop("__sig"), corpus_path,
+            txn=(f"{app_id}:corpus", int(batch_id)),
+        )
+        DI.append_to_minhash_index(
+            novel, index_path, id_col, text_col,
+            txn=(f"{app_id}:index", int(batch_id)),
+            _sigs=novel.where(F.col("__sig").isNotNull()).select(
+                F.col(id_col).alias("doc"), F.col("__sig").alias("sig")
+            ),
+        )
+    finally:
+        _release(sigs, novel)
+
+
+def _release(*dfs) -> None:
+    """Drop the blocks of the local checkpoints under a gate's frames now,
+    not when ContextCleaner finds them unreferenced: the RDD of every
+    ``LogicalRDD`` leaf of each frame's plan. A local checkpoint is not in
+    the cache manager, so ``DataFrame.unpersist`` would miss it. Callers
+    pass only frames built from their own proxies and the index read (a
+    verdict plan reaches the checkpoint the Hamming gate takes of its
+    input)."""
+    for df in dfs:
+        if df is None:
+            continue
+        leaves = df._jdf.queryExecution().logical().collectLeaves()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if leaf.getClass().getSimpleName() == "LogicalRDD":
+                leaf.rdd().unpersist(True)
 
 
 def media_gate_batch(
@@ -1121,10 +1155,10 @@ def media_gate_batch(
     corpus un-gated and un-registered — the media analogue of the text
     gate's ``short_docs="ingest"`` policy, documented there.
 
-    Lineage: the signature proxy and ``novel`` are local checkpoints
-    (the truncation trade documented at dedup.hamming_band_pairs); they
-    live through both commits and are reclaimed only by ContextCleaner
-    once unreferenced."""
+    Lineage: the signature proxy, the verdicts' own checkpoint of it and
+    ``novel`` are local checkpoints (the truncation trade documented at
+    dedup.hamming_band_pairs); they live through both commits and are
+    released when the gate returns or raises."""
     from ..operators.hamming_index import (
         append_to_hamming_index,
         dedup_against_hamming_index,
@@ -1133,23 +1167,27 @@ def media_gate_batch(
 
     spark = batch_df.sparkSession
     sigs = signer(batch_df).localCheckpoint(eager=False)
-    verdicts = dedup_against_hamming_index(
-        spark, sigs, index_path, family, max_hamming
-    )
-    dup_ids = verdicts.select(F.col("doc").alias(id_col)).distinct()
-    novel = batch_df.join(dup_ids, id_col, "left_anti").localCheckpoint(
-        eager=False
-    )
-    write_delta_append(
-        novel, corpus_path, txn=(f"{app_id}:corpus", int(batch_id))
-    )
-    novel_sigs = sigs.join(
-        novel.select(F.col(id_col).alias("doc")), "doc", "left_semi"
-    )
-    append_to_hamming_index(
-        novel_sigs, index_path, family,
-        txn=(f"{app_id}:index", int(batch_id)),
-    )
+    verdicts = novel = None
+    try:
+        verdicts = dedup_against_hamming_index(
+            spark, sigs, index_path, family, max_hamming
+        )
+        dup_ids = verdicts.select(F.col("doc").alias(id_col)).distinct()
+        novel = batch_df.join(dup_ids, id_col, "left_anti").localCheckpoint(
+            eager=False
+        )
+        write_delta_append(
+            novel, corpus_path, txn=(f"{app_id}:corpus", int(batch_id))
+        )
+        novel_sigs = sigs.join(
+            novel.select(F.col(id_col).alias("doc")), "doc", "left_semi"
+        )
+        append_to_hamming_index(
+            novel_sigs, index_path, family,
+            txn=(f"{app_id}:index", int(batch_id)),
+        )
+    finally:
+        _release(sigs, verdicts, novel)
 
 
 def media_gated_stream_append(

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -86,6 +87,45 @@ def _restore_shuffle_partitions():
     s = SparkSession.getActiveSession()
     if s is not None and before is not None:
         s.conf.set("spark.sql.shuffle.partitions", before)
+
+
+@pytest.fixture
+def aqe_off(spark):
+    """The shared session with AQE off for one test, as in the ingest
+    benchmark: adaptive execution re-plans stages into extra jobs."""
+    before = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        yield spark
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", before)
+
+
+@pytest.fixture
+def job_budget(aqe_off):
+    """``job_budget(fn) -> (jobs, tasks)``: the Spark jobs and tasks
+    ``fn()`` ran, counted under one job group through the status tracker
+    (broadcast jobs inherit the group), with AQE off."""
+    sc = aqe_off.sparkContext
+
+    def count(fn) -> tuple[int, int]:
+        group = f"job-budget-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        st = sc.statusTracker()
+        jobs = st.getJobIdsForGroup(group)
+        tasks = sum(
+            st.getStageInfo(s).numTasks
+            for j in jobs
+            for s in st.getJobInfo(j).stageIds
+        )
+        return len(jobs), tasks
+
+    return count
 
 
 @pytest.fixture(scope="session")

@@ -1,6 +1,7 @@
 """The ingestion gate signs each batch ONCE (streaming/ops.dedup_gate_batch):
 the checkpointed MinHash proxy that decides the verdicts is also what the
-index registers, so registration never re-shingles the novel text.
+index registers, so registration never re-shingles the novel text. The
+gate's local-checkpoint proxies are released when it returns or raises.
 
 Default-tier companion of the slow test_dedup_gate_stream.py suite."""
 
@@ -10,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mysoftware_nocnetintel_spark.operators import dedup
+from mysoftware_nocnetintel_spark.operators import dedup_index as DI
 from mysoftware_nocnetintel_spark.operators.dedup import minhash_signatures
 from mysoftware_nocnetintel_spark.operators.dedup_index import (
     build_minhash_index,
@@ -93,3 +95,29 @@ def test_gate_shingles_the_batch_once(spark, tmp_path, monkeypatch):
     batch = spark.createDataFrame(BATCH, SCHEMA)
     dedup_gate_batch(batch, 0, corpus, index, app_id="g", threshold=0.5)
     assert len(calls) == 1
+
+
+def _stored_rdds(spark) -> int:
+    return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+
+def test_gate_releases_its_proxies_on_return_and_on_raise(
+    spark, tmp_path, monkeypatch
+):
+    corpus, index = _setup(spark, tmp_path)
+    before = _stored_rdds(spark)
+    for bid in range(3):
+        batch = spark.createDataFrame(
+            [(100 * (bid + 1) + d, t) for d, t in BATCH], SCHEMA
+        )
+        dedup_gate_batch(batch, bid, corpus, index, app_id="g", threshold=0.5)
+    assert _stored_rdds(spark) <= before
+
+    def refuse(*args, **kwargs):
+        raise RuntimeError("index commit refused")
+
+    monkeypatch.setattr(DI, "append_to_minhash_index", refuse)
+    batch = spark.createDataFrame([(900 + d, t) for d, t in BATCH], SCHEMA)
+    with pytest.raises(RuntimeError, match="refused"):
+        dedup_gate_batch(batch, 9, corpus, index, app_id="g", threshold=0.5)
+    assert _stored_rdds(spark) <= before

@@ -4,8 +4,8 @@
 Iceberg data write: a write without ``sort_by`` whose optimized plan is
 byte-small (under 512 KiB) runs as one task and stages one file. A
 2,000-row driver-built batch would otherwise fan out to every core and
-stage a file per task. Jobs and tasks are counted per job group through
-the status tracker, with AQE off as in the ingest benchmark; the MinHash
+stage a file per task. Jobs and tasks are counted by the ``job_budget``
+fixture (conftest), with AQE off as in the ingest benchmark; the MinHash
 gate's shingle front end runs no Python.
 """
 
@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import glob
 import os
-import uuid
 
 import pyarrow as pa
 import pytest
@@ -29,16 +28,6 @@ from mysoftware_nocnetintel_spark.sources.zorder import (
     cluster,
     plan_bytes,
 )
-
-
-@pytest.fixture
-def aqe_off(spark):
-    before = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield spark
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", before)
 
 
 def _batch(spark, lo: int, n: int = 2000):
@@ -66,28 +55,10 @@ def _data_files(root: str) -> set[str]:
     }
 
 
-def _budget(spark, fn) -> tuple[int, int]:
-    """(jobs, tasks) Spark ran for ``fn()``."""
-    sc = spark.sparkContext
-    group = f"ingest-layout-{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-    st = sc.statusTracker()
-    jobs = st.getJobIdsForGroup(group)
-    tasks = sum(
-        st.getStageInfo(s).numTasks
-        for j in jobs
-        for s in st.getJobInfo(j).stageIds
-    )
-    return len(jobs), tasks
-
-
 @pytest.mark.parametrize("fmt", ["delta", "iceberg"])
-def test_byte_small_append_is_one_task_and_one_file(aqe_off, tmp_path, fmt):
+def test_byte_small_append_is_one_task_and_one_file(
+    aqe_off, job_budget, tmp_path, fmt
+):
     spark = aqe_off
     root = str(tmp_path / fmt)
     append = dl.write_delta_append if fmt == "delta" else ice.write_iceberg_append
@@ -96,7 +67,7 @@ def test_byte_small_append_is_one_task_and_one_file(aqe_off, tmp_path, fmt):
     batch = _batch(spark, 2000)
     assert byte_small(plan_bytes(batch))
     assert batch.rdd.getNumPartitions() > 1  # the fan-out the rule removes
-    assert _budget(spark, lambda: append(batch, root)) == (1, 1)
+    assert job_budget(lambda: append(batch, root)) == (1, 1)
     assert len(_data_files(root) - before) == 1
 
 

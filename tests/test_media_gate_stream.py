@@ -82,6 +82,22 @@ def test_media_gate_filters_neardups_and_registers_novel(spark, tmp_path):
     assert read_delta_snapshot(spark, index_path).count() == 4
 
 
+def test_media_gate_releases_its_proxies(spark, tmp_path):
+    corpus_path, index_path = _setup(spark, tmp_path)
+    rdds = spark.sparkContext._jsc.sc().getRDDStorageInfo
+    before = len(rdds())
+    for bid in range(3):
+        batch = spark.createDataFrame(
+            [(30 + bid, MM.png_encode(_img(950 + bid)))], SCHEMA
+        )
+        media_gate_batch(
+            batch, bid, corpus_path, index_path, app_id="mgr",
+            signer=_signer, family="dhash",
+        )
+    assert len(rdds()) <= before
+    assert _corpus_ids(spark, corpus_path) == [0, 1, 2, 30, 31, 32]
+
+
 def test_media_stream_end_to_end_available_now(spark, tmp_path):
     corpus_path, index_path = _setup(spark, tmp_path)
     src = tmp_path / "src"
