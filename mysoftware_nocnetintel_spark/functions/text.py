@@ -41,30 +41,12 @@ def bpe_ish_tokens(text: Column | str) -> Column:
 SUBWORD_REGEX = r"'(?:s|t|re|ve|m|ll|d)|[A-Za-z]+|[0-9]{1,3}|[^A-Za-z0-9\s]+"
 
 
-def subword_regex_tokens(text: Column | str) -> Column:
-    """BPE-style pre-tokenization via one regex scan (`SUBWORD_REGEX`):
-    the token-COUNT estimator a training-data pipeline budgets with before
-    a real BPE vocab exists. JVM-side, one expression; parity with DuckDB's
-    RE2 engine verified by the q94 oracle."""
-    text = F.col(text) if isinstance(text, str) else text
-    return F.regexp_extract_all(text, F.lit(SUBWORD_REGEX), 0)
-
-
 def token_count(text: Column | str) -> Column:
     return F.size(tokens(text))
 
 
 def distinct_token_count(text: Column | str) -> Column:
     return F.size(F.array_distinct(tokens(text)))
-
-
-def avg_token_length(text: Column | str) -> Column:
-    """Mean token length; NULL for empty documents (ANSI-safe division)."""
-    toks = tokens(text)
-    return F.try_divide(
-        F.aggregate(toks, F.lit(0.0), lambda acc, t: acc + F.length(t)),
-        F.size(toks).cast("double"),
-    )
 
 
 def stopword_ratio(text: Column | str) -> Column:

@@ -34,7 +34,6 @@ FAISS heuristic. Delta persistence cited in sources/delta.py.
 
 from __future__ import annotations
 
-import json
 import os
 
 import numpy as np
@@ -43,6 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..session import local_frame
+from . import index_store
 from .similarity import _cosine_batch, ivf_assign, ivf_centroids
 
 _PARAMS_FILE = "_ann_index_params.json"
@@ -53,44 +53,24 @@ _PARAMS_FILE = "_ann_index_params.json"
 _MAX_SERVING_QUERIES = 4096
 
 
-def _params_path(path: str) -> str:
-    return os.path.join(path, _PARAMS_FILE)
-
-
 def read_ann_params(path: str) -> dict:
     """Pinned geometry + centroids of the index at ``path``."""
-    with open(_params_path(path), encoding="utf-8") as f:
-        return json.load(f)
+    return index_store.read_params(path, _PARAMS_FILE)
 
 
-def _write_table(df, path, fmt, partition_by=(), txn=None):
-    """Format seam: the index rides either open table format — same
-    partition spec, same idempotent-txn discipline (Delta Transaction
-    Identifiers / Iceberg snapshot-summary txn markers)."""
-    if fmt == "delta":
-        from ..sources.delta import write_delta_append
-
-        return write_delta_append(df, path, partition_by=partition_by, txn=txn)
-    if fmt == "iceberg":
-        from ..sources.iceberg import write_iceberg_append
-
-        return write_iceberg_append(df, path, partition_by=partition_by, txn=txn)
-    raise ValueError(f"unknown table_format {fmt!r}")
+def _cell_key(fmt: str, cell: int):
+    """A cell id as the format's partition filter takes it: Delta
+    add.partitionValues are strings; Iceberg manifests carry the typed
+    partition record."""
+    return str(cell) if fmt == "delta" else cell
 
 
 def _read_cell(spark, path, fmt, cell: int):
     """One probed cell's files — driver-side partition pruning in either
-    format (Delta add.partitionValues are strings; Iceberg manifests carry
-    the typed partition record)."""
-    if fmt == "delta":
-        from ..sources.readers import read_delta_snapshot
-
-        return read_delta_snapshot(spark, path, partition_filter={"cell": str(cell)})
-    if fmt == "iceberg":
-        from ..sources.readers import read_iceberg_snapshot
-
-        return read_iceberg_snapshot(spark, path, partition_filter={"cell": cell})
-    raise ValueError(f"unknown table_format {fmt!r}")
+    format."""
+    return index_store.read(
+        spark, path, fmt, partition_filter={"cell": _cell_key(fmt, cell)}
+    )
 
 
 def build_ivf_index(
@@ -106,23 +86,17 @@ def build_ivf_index(
     driver collect — ivf_centroids' FAISS heuristic), zero-shuffle cell
     assignment (ivf_assign's Arrow argmin), one cell-partitioned commit in
     either open table format. Returns the committed version/snapshot."""
-    if os.path.exists(_params_path(path)):
-        raise ValueError(f"index already exists at {path}")
     cents = ivf_centroids(df, vec_col, n_cells, seed, as_list=True)
-    params = {
-        "n_cells": n_cells,
-        "seed": seed,
-        "table_format": table_format,
-        "centroids": [[float(x) for x in c] for _, c in cents],
-    }
-    # sidecar FIRST (same crash argument as dedup_index.build): a rerun
-    # after a crash mid-build hits the exists-guard instead of silently
-    # double-appending; remedy is delete-and-rebuild.
-    os.makedirs(path, exist_ok=True)
-    tmp = _params_path(path) + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(params, f)
-    os.replace(tmp, _params_path(path))
+    index_store.create(
+        path,
+        _PARAMS_FILE,
+        {
+            "n_cells": n_cells,
+            "seed": seed,
+            "table_format": table_format,
+            "centroids": [[float(x) for x in c] for _, c in cents],
+        },
+    )
     assigned = ivf_assign(df, cents, vec_col).select(
         "cell",
         F.col(id_col).alias("vec_id"),
@@ -140,7 +114,7 @@ def build_ivf_index(
     # configurable); at cluster scale a giant cell stays one task's
     # write, split into bounded files by spark.sql.files.maxRecordsPerFile
     # and by AQE skew handling in batch (AQE-on) deployments.
-    return _write_table(
+    return index_store.append(
         assigned.repartition("cell"), path, table_format,
         partition_by=("cell",),
     )
@@ -164,7 +138,7 @@ def append_to_ivf_index(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).cast("array<double>").alias("embedding"),
     )
-    return _write_table(
+    return index_store.append(
         assigned, path, p.get("table_format", "delta"), txn=txn
     )
 
@@ -273,28 +247,15 @@ def query_ivf_index(
         # guarantee (never-probed cells are never opened).
         from ..sources.readers import NoMatchingFilesError
 
-        corpus = None
         try:
-            if fmt == "delta":
-                from ..sources.readers import read_delta_snapshot
-
-                corpus = read_delta_snapshot(
-                    spark,
-                    path,
-                    partition_filter={
-                        "cell": frozenset(str(c) for c in cells)
-                    },
-                )
-            elif fmt == "iceberg":
-                from ..sources.readers import read_iceberg_snapshot
-
-                corpus = read_iceberg_snapshot(
-                    spark,
-                    path,
-                    partition_filter={"cell": frozenset(cells)},
-                )
-            else:  # pragma: no cover
-                raise RuntimeError(f"unknown table_format {fmt!r}")
+            corpus = index_store.read(
+                spark,
+                path,
+                fmt,
+                partition_filter={
+                    "cell": frozenset(_cell_key(fmt, c) for c in cells)
+                },
+            )
         except NoMatchingFilesError:
             # none of the probed cells has files — a legal empty slice.
             # Any OTHER ValueError (bad filter keys on a foreign/corrupt
@@ -307,17 +268,11 @@ def query_ivf_index(
             # vec_id type from the index table when it is readable
             vec_id_type: T.DataType = T.LongType()
             try:
-                from ..sources.readers import (
-                    read_delta_snapshot,
-                    read_iceberg_snapshot,
+                vec_id_type = (
+                    index_store.read(spark, path, fmt)
+                    .schema["vec_id"]
+                    .dataType
                 )
-
-                rdr = (
-                    read_delta_snapshot
-                    if fmt == "delta"
-                    else read_iceberg_snapshot
-                )
-                vec_id_type = rdr(spark, path).schema["vec_id"].dataType
             except Exception:
                 pass
             return local_frame(
@@ -399,6 +354,17 @@ def _delete_cells(
     sidecar, so no appender assigns into them)."""
     if fmt not in ("delta", "iceberg"):  # pragma: no cover
         raise ValueError(f"unknown table_format {fmt!r}")
+
+    def drop(values, files=None):
+        if fmt == "delta":
+            from ..sources.delta import drop_delta_partition
+
+            drop_delta_partition(spark, path, values, files=files)
+        else:
+            from ..sources.iceberg import drop_iceberg_partition
+
+            drop_iceberg_partition(path, values, files=files)
+
     if not cells:
         return
     ids = sorted(int(c) for c in cells)
@@ -407,29 +373,12 @@ def _delete_cells(
         # a crashed run leaves split_factor ghosts per parent, and the
         # sweep must not pay one CAS + manifest rewrite per ghost
         # (round-10 review)
-        if fmt == "delta":
-            from ..sources.delta import drop_delta_partition
-
-            drop_delta_partition(
-                spark, path, [{"cell": str(c)} for c in ids]
-            )
-        else:
-            from ..sources.iceberg import drop_iceberg_partition
-
-            drop_iceberg_partition(path, [{"cell": c} for c in ids])
+        drop([{"cell": _cell_key(fmt, c)} for c in ids])
         return
     for c in ids:
         fl = files_by_cell.get(c)
-        if not fl:
-            continue  # pinned mode with nothing pinned: nothing to drop
-        if fmt == "delta":
-            from ..sources.delta import drop_delta_partition
-
-            drop_delta_partition(spark, path, {"cell": str(c)}, files=fl)
-        else:
-            from ..sources.iceberg import drop_iceberg_partition
-
-            drop_iceberg_partition(path, {"cell": c}, files=fl)
+        if fl:  # pinned mode with nothing pinned: nothing to drop
+            drop({"cell": _cell_key(fmt, c)}, files=fl)
 
 
 def _read_cell_or_none(spark, path, fmt, cell: int):
@@ -462,14 +411,11 @@ def _metadata_cell_counts(path: str, fmt: str) -> "dict[int, int] | None":
     the zero-I/O count path the rebalance sizes its work by. None when
     the format can't guarantee exactness (missing stats, live delete
     files after a retraction); callers fall back to the scan."""
-    if fmt == "delta":
-        from ..sources.delta import partition_row_counts
+    from ..sources import delta, iceberg
 
-        raw = partition_row_counts(path, "cell")
-    else:
-        from ..sources.iceberg import partition_row_counts
-
-        raw = partition_row_counts(path, "cell")
+    raw = (delta if fmt == "delta" else iceberg).partition_row_counts(
+        path, "cell"
+    )
     if raw is None:
         return None
     return {int(k): int(v) for k, v in raw.items()}
@@ -483,46 +429,32 @@ def _pin_cell(spark, path: str, fmt: str, cell: int):
     adds a file the pin never saw), closing the lost-append window a
     fresh-scan delete had between the rescue read and its own scan
     (round-10 advisor). Driver-side metadata walk only."""
+    key = _cell_key(fmt, int(cell))
     if fmt == "delta":
         from ..sources.delta import _replay_state
-        from ..sources.readers import read_delta_snapshot
 
         st = _replay_state(os.path.join(path, "_delta_log"))
         files = sorted(
             rel
             for rel, add in st["live"].items()
-            if (add.get("partitionValues") or {}).get("cell") == str(cell)
+            if (add.get("partitionValues") or {}).get("cell") == key
         )
-        if not files:
-            return None, []
-        return (
-            read_delta_snapshot(
-                spark,
-                path,
-                version=st["version"],
-                partition_filter={"cell": str(cell)},
-            ),
-            files,
-        )
-    from ..sources.readers import (
-        _iceberg_snapshot_files,
-        read_iceberg_snapshot,
-    )
+        pin = {"version": st["version"]}
+    else:
+        from ..sources.readers import _iceberg_snapshot_files
 
-    data_files, _, _, snap = _iceberg_snapshot_files(path)
-    files = sorted(
-        e.path
-        for e in data_files
-        if (e.partition or {}).get("cell") == int(cell)
-    )
+        data_files, _, _, snap = _iceberg_snapshot_files(path)
+        files = sorted(
+            e.path
+            for e in data_files
+            if (e.partition or {}).get("cell") == key
+        )
+        pin = {"snapshot_id": snap["snapshot-id"]}
     if not files:
         return None, []
     return (
-        read_iceberg_snapshot(
-            spark,
-            path,
-            snapshot_id=snap["snapshot-id"],
-            partition_filter={"cell": int(cell)},
+        index_store.read(
+            spark, path, fmt, partition_filter={"cell": key}, **pin
         ),
         files,
     )
@@ -574,7 +506,7 @@ def _rescue_then_gc(
     ).localCheckpoint(eager=False)  # feeds count AND write: one compute
     n_late = late_assigned.count()
     if n_late:
-        _write_table(late_assigned, path, fmt)
+        index_store.append(late_assigned, path, fmt)
     _delete_cells(
         spark, path, fmt, [parent],
         files_by_cell={int(parent): pinned_files},
@@ -649,10 +581,6 @@ def rebalance_ivf_index(
 
     p = read_ann_params(path)
     fmt = p.get("table_format", "delta")
-    if fmt == "delta":
-        from ..sources.readers import read_delta_snapshot as _rdr
-    else:
-        from ..sources.readers import read_iceberg_snapshot as _rdr
 
     def _counts() -> dict[int, int]:
         # metadata first (round 10): KB of log/Avro instead of a
@@ -681,7 +609,7 @@ def rebalance_ivf_index(
         REBALANCE_STATS["count_scan_fallbacks"] += 1
         return {
             int(r["cell"]): int(r["n"])
-            for r in _rdr(spark, path)
+            for r in index_store.read(spark, path, fmt)
             .groupBy("cell")
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
@@ -771,7 +699,7 @@ def rebalance_ivf_index(
         # step 2: idempotent append — app per PARENT, version = first
         # sub id (monotone across generations, collision-free across
         # parents; see the skip-vs-ghost note in the docstring)
-        _write_table(
+        index_store.append(
             assigned, path, fmt, txn=(f"ann-rebalance-{parent}", base)
         )
         new_ids = [i for i, _ in pairs]
@@ -783,16 +711,16 @@ def rebalance_ivf_index(
         # step 3: ATOMIC sidecar swap — the visibility switch
         retired_rec = dict(p.get("retired") or {})
         retired_rec[str(parent)] = new_ids
-        new_params = dict(
-            p,
-            centroids=centroids,
-            retired=retired_rec,
-            rebalance_generation=base,
+        index_store.write_params(
+            path,
+            _PARAMS_FILE,
+            dict(
+                p,
+                centroids=centroids,
+                retired=retired_rec,
+                rebalance_generation=base,
+            ),
         )
-        tmp = _params_path(path) + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump(new_params, f)
-        os.replace(tmp, _params_path(path))
 
         # step 4: rescue the swap-window racers, then GC the parent
         rescued += _rescue_then_gc(

@@ -24,7 +24,7 @@ across runs and partitionings; seeds are plan constants.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -622,6 +622,31 @@ def _fits_broadcast(
     return n_rows * fanout * per_row <= _BAND_BROADCAST_BYTES
 
 
+def hamming_bands(sig_df: DataFrame) -> DataFrame:
+    """(doc, sig, band, bucket) from 64-bit ``(doc, sig)`` rows: the four
+    16-bit bands, bucket = the band's bits. THE single Hamming banding
+    definition: the batch operator below and the persisted Hamming index
+    (operators/hamming_index.py) both call it, so an index built today
+    buckets identically to batches banded tomorrow."""
+    return sig_df.select(
+        "doc",
+        "sig",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        F.shiftright(F.col("sig"), 16 * b)
+                        .bitwiseAND(F.lit(0xFFFF))
+                        .alias("bucket"),
+                    )
+                    for b in range(4)
+                ]
+            )
+        ).alias("bb"),
+    ).select("doc", "sig", "bb.band", "bb.bucket")
+
+
 def hamming_band_pairs(
     sig: DataFrame,
     id_col: str = "doc",
@@ -661,23 +686,7 @@ def hamming_band_pairs(
         F.col(id_col).alias("doc"), F.col(sig_col).alias("sig")
     ).localCheckpoint(eager=False)
     n_sig, _id_bytes = _proxy_stats(sig, "doc")
-    banded = sig.select(
-        F.col("doc"),
-        F.col("sig"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright(F.col("sig"), 16 * b)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("bucket"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc", "sig", "bb.band", "bb.bucket")
+    banded = hamming_bands(sig)
     a = banded.select(
         F.col("doc").alias("id_a"), F.col("sig").alias("sig_a"), "band", "bucket"
     )
@@ -693,6 +702,54 @@ def hamming_band_pairs(
         .select("id_a", "id_b", hamming64("sig_a", "sig_b").alias("hamming"))
         .distinct()
         .filter(F.col("hamming") <= max_hamming)
+    )
+
+
+def index_band_join(
+    batch_sigs: DataFrame,
+    index_sigs: DataFrame,
+    banded: Callable[[DataFrame], DataFrame],
+    score: Column,
+    keep: Column,
+    payload_bytes: float,
+    fanout: int,
+) -> DataFrame:
+    """Verdicts of a ``(doc, sig)`` batch against a persisted index and
+    within itself, in ONE band join — both index gates' verdict. The
+    batch's band rows (``banded``: the family's split to ``(doc, sig,
+    band, bucket)``), carrying ``sig`` as ``__sig_a``, are the build
+    side, broadcast when :func:`_fits_broadcast` allows; the streamed
+    side is the index's band rows (scanned once) unioned with the
+    batch's own, tagged ``index``/``batch``, carrying ``__sig_b``.
+    ``score`` is the named verify expression over the two, ``keep`` its
+    predicate; within the batch a doc pairs only with lower ids. Returns
+    distinct ``(doc, dup_of, <score>, source)`` rows. ``batch_sigs`` is
+    read three times: pass a checkpointed proxy."""
+    n_batch, id_bytes = _proxy_stats(batch_sigs, "doc")
+    bcast = _fits_broadcast(n_batch, id_bytes, payload_bytes, fanout)
+    b_band = banded(batch_sigs)
+    build = b_band.select(
+        "doc", F.col("sig").alias("__sig_a"), "band", "bucket"
+    )
+    streamed = (
+        banded(index_sigs)
+        .withColumn("source", F.lit("index"))
+        .unionByName(b_band.withColumn("source", F.lit("batch")))
+        .select(
+            F.col("doc").alias("dup_of"), F.col("sig").alias("__sig_b"),
+            "band", "bucket", "source",
+        )
+    )
+    return (
+        (F.broadcast(build) if bcast else build)
+        .join(streamed, ["band", "bucket"])
+        .filter(
+            (F.col("source") == "index") | (F.col("dup_of") < F.col("doc"))
+        )
+        .select("doc", "dup_of", score, "source")
+        .filter(keep)
+        # a pair sharing several bands matches once per band
+        .distinct()
     )
 
 

@@ -45,51 +45,18 @@ estimator. The Delta persistence layer is cited in sources/delta.py.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .dedup import minhash_signatures, sig_band_rows
+from . import index_store
+from .dedup import index_band_join, minhash_signatures, sig_band_rows
 
 _PARAMS_FILE = "_dedup_index_params.json"
 
 
-def _params_path(path: str) -> str:
-    return os.path.join(path, _PARAMS_FILE)
-
-
 def read_index_params(path: str) -> dict:
     """The pinned signature-space parameters of the index at ``path``."""
-    with open(_params_path(path), encoding="utf-8") as f:
-        return json.load(f)
-
-
-def _write_table(df, path, fmt, txn=None, sort_by=()):
-    """Format seam: the index rides either open table format with the same
-    idempotent-txn discipline."""
-    if fmt == "delta":
-        from ..sources.delta import write_delta_append
-
-        return write_delta_append(df, path, txn=txn, sort_by=sort_by)
-    if fmt == "iceberg":
-        from ..sources.iceberg import write_iceberg_append
-
-        return write_iceberg_append(df, path, txn=txn, sort_by=sort_by)
-    raise ValueError(f"unknown table_format {fmt!r}")
-
-
-def _read_table(spark, path, fmt):
-    if fmt == "delta":
-        from ..sources.readers import read_delta_snapshot
-
-        return read_delta_snapshot(spark, path)
-    if fmt == "iceberg":
-        from ..sources.readers import read_iceberg_snapshot
-
-        return read_iceberg_snapshot(spark, path)
-    raise ValueError(f"unknown table_format {fmt!r}")
+    return index_store.read_params(path, _PARAMS_FILE)
 
 
 def est_jaccard(sig_a, sig_b, num_hashes: int):
@@ -121,28 +88,17 @@ def build_minhash_index(
     :func:`append_to_minhash_index`)."""
     if num_hashes % bands:
         raise ValueError("num_hashes must be divisible by bands")
-    if os.path.exists(_params_path(path)):
-        raise ValueError(
-            f"index already exists at {path}; use append_to_minhash_index"
-        )
     params = {
         "num_hashes": num_hashes,
         "bands": bands,
         "shingle_k": shingle_k,
         "table_format": table_format,
     }
-    # sidecar FIRST: its existence is the build guard above, so a crash
-    # between sidecar and data commit leaves a visibly broken index
-    # (queries fail on the missing table) instead of letting a rerun pass
-    # the guard and silently DOUBLE-append the whole corpus. Remedy for a
-    # half-built index: delete the directory and rebuild.
-    os.makedirs(path, exist_ok=True)
-    tmp = _params_path(path) + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(params, f)
-    os.replace(tmp, _params_path(path))
+    index_store.create(
+        path, _PARAMS_FILE, params, "; use append_to_minhash_index"
+    )
     sigs = minhash_signatures(df, id_col, text_col, num_hashes, shingle_k)
-    return _write_table(sigs, path, table_format, sort_by=("doc",))
+    return index_store.append(sigs, path, table_format, sort_by=("doc",))
 
 
 def append_to_minhash_index(
@@ -163,8 +119,6 @@ def append_to_minhash_index(
     ``df``. A byte-small registration (``zorder.byte_small`` of its plan
     estimate) is written as one file; a larger one is range-clustered on
     ``doc`` like the build."""
-    from ..sources.zorder import byte_small, plan_bytes
-
     p = read_index_params(path)
     sigs = (
         _sigs
@@ -173,9 +127,8 @@ def append_to_minhash_index(
             df, id_col, text_col, p["num_hashes"], p["shingle_k"]
         )
     )
-    sort_by = () if byte_small(plan_bytes(sigs)) else ("doc",)
-    return _write_table(
-        sigs, path, p.get("table_format", "delta"), txn=txn, sort_by=sort_by
+    return index_store.register(
+        sigs, path, p.get("table_format", "delta"), ("doc",), txn=txn
     )
 
 
@@ -216,33 +169,19 @@ def dedup_against_minhash_index(
     rows_per_band = num_hashes // bands
 
     # FINGERPRINT ONCE (r13, the q147/guide-§8 proxy pattern): the batch
-    # signature table feeds BOTH sides of the one band join below (the
-    # broadcast build side, and its union with the index on the streamed
-    # side) — without truncation the whole shingle+MinHash pipeline over
-    # the batch text would re-execute once per consumer.
-    # ``localCheckpoint`` pins the (doc, 32×8 B sig) proxy so the batch
-    # text is shingled exactly once per call — and once per ingestion
-    # gate, which builds the proxy itself and hands it here (``_sigs``).
-    # The measured count then gates the explicit broadcast of the batch's
-    # band rows (a checkpointed plan's size estimate is the pre-truncation
-    # plan's, not a measurement) — under the budget the INDEX side is
-    # never shuffled into the join at all (the 100 TB posture: the
-    # historical index dwarfs any ingest batch). Lineage-truncation trade
+    # signature table feeds the band join's count and both of its sides —
+    # without truncation the whole shingle+MinHash pipeline over the batch
+    # text would re-execute once per consumer. ``localCheckpoint`` pins the
+    # (doc, 32×8 B sig) proxy so the batch text is shingled exactly once
+    # per call — and once per ingestion gate, which builds the proxy
+    # itself and hands it here (``_sigs``). Lineage-truncation trade
     # documented at dedup.hamming_band_pairs.
-    from .dedup import _fits_broadcast, _proxy_stats
-
     batch_sigs = (
         _sigs
         if _sigs is not None
         else minhash_signatures(
             batch_df, id_col, text_col, num_hashes, p["shingle_k"]
         ).localCheckpoint(eager=False)
-    )
-    n_batch, id_bytes = _proxy_stats(batch_sigs, "doc")
-    # each build row: band + bucket + the doc's whole signature
-    bcast = _fits_broadcast(
-        n_batch, id_bytes, payload_bytes=16.0 + 8.0 * num_hashes,
-        fanout=bands,
     )
 
     def banded(sigs: DataFrame) -> DataFrame:
@@ -253,39 +192,15 @@ def dedup_against_minhash_index(
             bands, rows_per_band, id_col="__ds",
         ).select("doc.doc", "doc.sig", "band", "bucket")
 
-    b_band = banded(batch_sigs)
-    build = b_band.select(
-        "doc", F.col("sig").alias("__sig_a"), "band", "bucket"
-    )
-    # ONE band join: the streamed side is the index's band rows and the
-    # batch's own, tagged by source — the index is scanned once and the
-    # batch's band rows are broadcast once
-    streamed = (
-        banded(_read_table(spark, path, p.get("table_format", "delta")))
-        .withColumn("source", F.lit("index"))
-        .unionByName(b_band.withColumn("source", F.lit("batch")))
-        .select(
-            F.col("doc").alias("dup_of"), F.col("sig").alias("__sig_b"),
-            "band", "bucket", "source",
-        )
-    )
-    return (
-        (F.broadcast(build) if bcast else build)
-        .join(streamed, ["band", "bucket"])
-        # within the batch, the keep-one rule: pair with a strictly
-        # lower id
-        .filter(
-            (F.col("source") == "index") | (F.col("dup_of") < F.col("doc"))
-        )
-        .select(
-            "doc",
-            "dup_of",
-            est_jaccard(F.col("__sig_a"), F.col("__sig_b"), num_hashes).alias(
-                "est_jaccard"
-            ),
-            "source",
-        )
-        .filter(F.col("est_jaccard") >= F.lit(threshold))
-        # a pair sharing several bands matches once per band
-        .distinct()
+    return index_band_join(
+        batch_sigs,
+        index_store.read(spark, path, p.get("table_format", "delta")),
+        banded,
+        est_jaccard(F.col("__sig_a"), F.col("__sig_b"), num_hashes).alias(
+            "est_jaccard"
+        ),
+        F.col("est_jaccard") >= F.lit(threshold),
+        # each build row: band + bucket + the doc's whole signature
+        payload_bytes=16.0 + 8.0 * num_hashes,
+        fanout=bands,
     )

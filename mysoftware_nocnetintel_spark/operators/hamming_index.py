@@ -6,92 +6,59 @@ set-similarity. This module is its Hamming-space sibling: it persists
 64-bit signatures — SimHash text (dedup.simhash_signatures), perceptual
 image dHash (multimodal.image_hashes), spectral audio fingerprints
 (audio.audio_hashes), mean-frame video hashes (video.video_hashes) — in
-an open lakehouse table, and gates each new batch with the SAME banded
-pigeonhole join the batch operators use (dedup.hamming_band_pairs'
-geometry: four 16-bit bands; hamming <= 3 implies >= 1 exact band).
+an open lakehouse table, and gates each new batch with the index band
+join both gates share (dedup.index_band_join) over the band split the
+batch operators use (dedup.hamming_bands: four 16-bit bands; hamming
+<= 3 implies >= 1 exact band).
 
 The index is FAMILY-AGNOSTIC by construction (it stores (doc, sig)
 bigints) but FAMILY-PINNED by policy: ``family`` is written to the
 sidecar at build time and validated on every append/query, because a
 dHash and a SimHash are both 64-bit integers and joining them would
 produce silent garbage — the same reason the MinHash index pins its
-signature-space params.
+signature-space params. Sidecar, build guard and format dispatch are
+operators/index_store.py's.
 
 Scale shape: identical to dedup_index — O(batch) signature computation
-on the caller's side (decode/hash the NEW media only), an 8-bytes-per-row
-banded equi-join against the index, bit_count verify. Media bytes never
-touch the gate. Maintenance, retraction, time travel, idempotent txn
-appends: ordinary table verbs (see tests/test_index_maintenance.py /
-test_index_retraction.py for the MinHash/IVF precedents).
+on the caller's side (decode/hash the NEW media only), one
+8-bytes-per-row banded equi-join against the index (scanned once), a
+bit_count verify. Media bytes never touch the gate. Maintenance,
+retraction, time travel, idempotent txn appends: ordinary table verbs
+(see tests/test_index_maintenance.py / test_index_retraction.py for the
+MinHash/IVF precedents).
 """
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .dedup import hamming64
+from . import index_store
+from .dedup import hamming64, hamming_bands, index_band_join
 
 _PARAMS_FILE = "_hamming_index_params.json"
 
 
-def _params_path(path: str) -> str:
-    return os.path.join(path, _PARAMS_FILE)
-
-
 def read_hamming_index_params(path: str) -> dict:
-    with open(_params_path(path), encoding="utf-8") as f:
-        return json.load(f)
+    return index_store.read_params(path, _PARAMS_FILE)
 
 
-def _write_table(df, path, fmt, txn=None):
-    if fmt == "delta":
-        from ..sources.delta import write_delta_append
-
-        return write_delta_append(df, path, txn=txn, sort_by=("sig",))
-    if fmt == "iceberg":
-        from ..sources.iceberg import write_iceberg_append
-
-        return write_iceberg_append(df, path, txn=txn, sort_by=("sig",))
-    raise ValueError(f"unknown table_format {fmt!r}")
-
-
-def _read_table(spark, path, fmt):
-    if fmt == "delta":
-        from ..sources.readers import read_delta_snapshot
-
-        return read_delta_snapshot(spark, path)
-    if fmt == "iceberg":
-        from ..sources.readers import read_iceberg_snapshot
-
-        return read_iceberg_snapshot(spark, path)
-    raise ValueError(f"unknown table_format {fmt!r}")
+def _pinned(path: str, family: str, verb: str) -> dict:
+    """The index's params, after checking ``family`` is the pinned one."""
+    p = read_hamming_index_params(path)
+    if family != p["family"]:
+        raise ValueError(
+            f"index at {path} holds {p['family']!r} signatures; "
+            f"refusing to {verb} {family!r}"
+        )
+    return p
 
 
-def _banded(sig_df: DataFrame) -> DataFrame:
-    """(doc, sig, band, bucket): the four-16-bit-band split of
-    dedup.hamming_band_pairs, kept expression-identical so index and
-    batch bucket the same way forever."""
+def _index_rows(sig_df: DataFrame) -> DataFrame:
+    """(doc, sig bigint) rows with a signature."""
     return sig_df.select(
-        "doc",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftright(F.col("sig"), 16 * b)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("bucket"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc", "sig", "bb.band", "bb.bucket")
+        F.col("doc"), F.col("sig").cast("bigint").alias("sig")
+    ).where(F.col("sig").isNotNull())
 
 
 def build_hamming_index(
@@ -105,22 +72,13 @@ def build_hamming_index(
     image_hashes / audio_hashes / video_hashes) and selects/aliases to
     (doc, sig). ``family`` is any label ('simhash', 'dhash', 'afp',
     'vhash', ...) — pinned and enforced thereafter."""
-    if os.path.exists(_params_path(path)):
-        raise ValueError(
-            f"index already exists at {path}; use append_to_hamming_index"
-        )
-    params = {"family": family, "table_format": table_format}
-    # sidecar FIRST (the dedup_index crash argument: a rerun after a
-    # mid-build crash must hit the exists-guard, not double-append)
-    os.makedirs(path, exist_ok=True)
-    tmp = _params_path(path) + ".tmp"
-    with open(tmp, "w", encoding="utf-8") as f:
-        json.dump(params, f)
-    os.replace(tmp, _params_path(path))
-    sigs = sig_df.select(
-        F.col("doc"), F.col("sig").cast("bigint").alias("sig")
-    ).where(F.col("sig").isNotNull())
-    return _write_table(sigs, path, table_format)
+    index_store.create(
+        path, _PARAMS_FILE, {"family": family, "table_format": table_format},
+        "; use append_to_hamming_index",
+    )
+    return index_store.append(
+        _index_rows(sig_df), path, table_format, sort_by=("sig",)
+    )
 
 
 def append_to_hamming_index(
@@ -131,17 +89,14 @@ def append_to_hamming_index(
 ) -> int:
     """Register a batch's signatures. ``family`` must equal the pinned
     one — appending image hashes to a SimHash index is silent garbage,
-    so it is an error instead."""
-    p = read_hamming_index_params(path)
-    if family != p["family"]:
-        raise ValueError(
-            f"index at {path} holds {p['family']!r} signatures; "
-            f"refusing to append {family!r}"
-        )
-    sigs = sig_df.select(
-        F.col("doc"), F.col("sig").cast("bigint").alias("sig")
-    ).where(F.col("sig").isNotNull())
-    return _write_table(sigs, path, p.get("table_format", "delta"), txn=txn)
+    so it is an error instead. A byte-small registration is written as
+    one file; a larger one is range-clustered on ``sig`` like the
+    build."""
+    p = _pinned(path, family, "append")
+    return index_store.register(
+        _index_rows(sig_df), path, p.get("table_format", "delta"), ("sig",),
+        txn=txn,
+    )
 
 
 def dedup_against_hamming_index(
@@ -153,74 +108,32 @@ def dedup_against_hamming_index(
 ) -> DataFrame:
     """Near-dup verdicts for a batch of (doc, sig) rows against the
     persisted index AND within the batch (keep-one rule: ``dup_of`` is a
-    strictly lower batch doc). Returns (doc, dup_of, hamming, source)
-    with source in ('index', 'batch'). ``max_hamming`` <= 3 for the
-    four-band pigeonhole guarantee. A batch doc whose id already exists
-    in the index self-matches at hamming 0 (same re-delivery rationale
-    as the MinHash index)."""
+    strictly lower batch doc). Returns one distinct (doc, dup_of,
+    hamming, source) row per relation, with source in ('index',
+    'batch'). ``max_hamming`` <= 3 for the four-band pigeonhole
+    guarantee. A batch doc whose id already exists in the index
+    self-matches at hamming 0 (same re-delivery rationale as the MinHash
+    index).
+
+    ``batch_sigs`` is read three times (its count and both sides of the
+    band join) and is not checkpointed here: pass a checkpointed proxy
+    when it is the output of an expensive pipeline (a media decode+hash),
+    as the media gate and q156 do, or that pipeline runs once per read.
+    The measured count gates an explicit broadcast of the banded batch
+    side — under the budget the INDEX side is never shuffled at all (the
+    100 TB posture: the historical index dwarfs any ingest batch)."""
     if max_hamming > 3:
         raise ValueError(
             "four 16-bit bands guarantee recall only for hamming <= 3"
         )
-    p = read_hamming_index_params(path)
-    if family != p["family"]:
-        raise ValueError(
-            f"index at {path} holds {p['family']!r} signatures; "
-            f"refusing to gate {family!r}"
-        )
-    # FINGERPRINT ONCE (r13, the q147/guide-§8 proxy pattern): the banded
-    # batch side feeds THREE join inputs (vs-index left, vs-batch both
-    # sides), and batch_sigs is typically the output of an expensive
-    # Arrow decode+hash pipeline over the new media — without truncation
-    # that whole pipeline executes once PER CONSUMER. localCheckpoint
-    # pins the 16 B/row (doc, sig) proxy so the media is decoded exactly
-    # once per gate call; the measured count then gates an explicit
-    # broadcast of the banded batch side — under the budget the INDEX
-    # side is never shuffled at all (the 100 TB posture: the historical
-    # index dwarfs any ingest batch), past it the shuffled equi-join
-    # stands. Lineage-truncation trade documented at
-    # dedup.hamming_band_pairs.
-    from .dedup import _fits_broadcast, _proxy_stats
-
-    sigs = batch_sigs.select(
-        F.col("doc"), F.col("sig").cast("bigint").alias("sig")
-    ).where(F.col("sig").isNotNull()).localCheckpoint(eager=False)
-    n_batch, id_bytes = _proxy_stats(sigs, "doc")
-    bcast = _fits_broadcast(n_batch, id_bytes, payload_bytes=24.0, fanout=4)
-    b = _banded(sigs)
-    i = _banded(_read_table(spark, path, p.get("table_format", "delta")))
-
-    def pairs(left, right, source, keep_one, bcast_left, bcast_right):
-        lhs = left.select(
-            F.col("doc"), F.col("sig").alias("__sa"), "band", "bucket"
-        )
-        rhs = right.select(
-            F.col("doc").alias("dup_of"),
-            F.col("sig").alias("__sb"),
-            "band",
-            "bucket",
-        )
-        if bcast_left:
-            lhs = F.broadcast(lhs)
-        if bcast_right:
-            rhs = F.broadcast(rhs)
-        cand = lhs.join(rhs, ["band", "bucket"])
-        if keep_one:
-            cand = cand.filter(F.col("dup_of") < F.col("doc"))
-        return (
-            cand.select(
-                "doc",
-                "dup_of",
-                hamming64("__sa", "__sb").alias("hamming"),
-                F.lit(source).alias("source"),
-            )
-            .filter(F.col("hamming") <= max_hamming)
-            .distinct()
-        )
-
-    return pairs(
-        b, i, "index", keep_one=False, bcast_left=bcast, bcast_right=False
-    ).unionByName(
-        pairs(b, b, "batch", keep_one=True, bcast_left=False,
-              bcast_right=bcast)
+    p = _pinned(path, family, "gate")
+    return index_band_join(
+        _index_rows(batch_sigs),
+        index_store.read(spark, path, p.get("table_format", "delta")),
+        hamming_bands,
+        hamming64("__sig_a", "__sig_b").alias("hamming"),
+        F.col("hamming") <= max_hamming,
+        # each build row: sig + band + bucket (3 longs)
+        payload_bytes=24.0,
+        fanout=4,
     )

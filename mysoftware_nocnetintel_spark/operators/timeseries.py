@@ -70,25 +70,6 @@ def with_rolling(
     return df
 
 
-def with_running(
-    df: DataFrame,
-    keys: str | Sequence[str],
-    order_col: str,
-    value_col: str,
-    agg: str = "sum",
-    tiebreak: str | None = None,
-) -> DataFrame:
-    """W6: cumulative aggregate from partition start (drift monitoring)."""
-    order = [F.col(order_col)] + ([F.col(tiebreak)] if tiebreak else [])
-    w = (
-        Window.partitionBy(*_cols(keys))
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    fn = {"sum": F.sum, "avg": F.avg, "count": F.count, "max": F.max, "min": F.min}[agg]
-    return df.withColumn(f"{value_col}_running_{agg}", fn(value_col).over(w))
-
-
 def sessionize(
     df: DataFrame,
     keys: str | Sequence[str],

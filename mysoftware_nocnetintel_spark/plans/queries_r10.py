@@ -567,10 +567,13 @@ def q156_media_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     planted = MM.perturb_png_media(resub_src, delta=8).select(
         (F.col("doc_id") + F.lit(10_000_000)).alias("doc_id"), "media"
     )
+    # the verdict reads its batch three times: checkpoint the decode+hash
+    # once (the truncation trade documented at dedup.hamming_band_pairs)
     batch_sigs = (
         MM.image_hashes(base.unionByName(planted), "media")
         .where(F.col("dhash").isNotNull())
         .select(F.col("doc_id").alias("doc"), F.col("dhash").alias("sig"))
+        .localCheckpoint(eager=False)
     )
 
     path = _scratch_index_path("hamming", sf_dir)

@@ -234,11 +234,6 @@ def _replay_state(log_dir: str, as_of: int | None = None) -> dict:
     return state
 
 
-def _table_meta(log_dir: str, versions: list[int]) -> dict | None:
-    """Latest metaData action (checkpoint-seeded log replay)."""
-    return _replay_state(log_dir)["meta"]
-
-
 def _schema_sig(schema_json: str) -> list[tuple[str, object]]:
     s = json.loads(schema_json)
     return sorted((f["name"], json.dumps(f["type"])) for f in s["fields"])

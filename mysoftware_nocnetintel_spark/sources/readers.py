@@ -18,15 +18,6 @@ from pyspark.sql import types as T
 from ..session import local_frame
 
 
-def read_jsonl(spark: SparkSession, path: str, schema: T.StructType | None = None) -> DataFrame:
-    """S2: newline-delimited JSON raw logs. Always pass a schema at scale —
-    inference is a full extra pass over the data."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
 def read_csv(
     spark: SparkSession, path: str, schema: T.StructType | None = None, header: bool = True
 ) -> DataFrame:
@@ -36,11 +27,6 @@ def read_csv(
     else:
         reader = reader.option("inferSchema", "true")
     return reader.csv(path)
-
-
-def read_raw_text(spark: SparkSession, path: str) -> DataFrame:
-    """S2: unparsed log lines (one row per line, column ``value``)."""
-    return spark.read.text(path)
 
 
 def parse_log_lines(raw: DataFrame, pattern: str, fields: list[str]) -> DataFrame:

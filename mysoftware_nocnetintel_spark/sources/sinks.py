@@ -173,19 +173,6 @@ def ticket_sink(alerts: DataFrame, path: str, checkpoint: str):
     )
 
 
-def alert_stream_sink(alerts: DataFrame, path: str, checkpoint: str):
-    """S6: streaming alert delivery to a parquet topic directory; swap the
-    format for kafka in deployment — the plan upstream is unchanged."""
-    return (
-        alerts.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def compact_partitions(
     spark,
     path: str,

@@ -1051,40 +1051,67 @@ def dedup_gate_batch(
     exact-dedup pass if short docs matter), or ``"drop"`` (they never
     ingest). Both are deterministic; neither can near-dup-gate them.
 
-    The batch is shingled and signed ONCE: the checkpointed ``(doc, sig)``
-    proxy feeds the verdicts, and ONE checkpointed proxy of the novel
-    rows, carrying their signatures, feeds both commits: the corpus
-    append writes its batch columns, the index registers its non-NULL
-    ``(doc, sig)`` pairs (a short doc has no signature). Lineage: both
-    proxies are local checkpoints (the truncation trade documented at
-    dedup.hamming_band_pairs); they live through both commits and are
-    released when the gate returns or raises."""
+    The batch is shingled and signed ONCE (:func:`_gate_batch`, the body
+    both gates share). Short docs have no signature, so they are never
+    registered."""
     if short_docs not in ("ingest", "drop"):
         raise ValueError(f"short_docs must be 'ingest' or 'drop': {short_docs!r}")
     from ..functions.text import word_shingles
     from ..operators import dedup_index as DI
     from ..operators.dedup import minhash_signatures
-    from ..sources.delta import write_delta_append
 
-    spark = batch_df.sparkSession
     p = DI.read_index_params(index_path)
     if short_docs == "drop":
         batch_df = batch_df.filter(
             F.size(word_shingles(F.col(text_col), p["shingle_k"])) > 0
         )
-    sigs = minhash_signatures(
-        batch_df, id_col, text_col, p["num_hashes"], p["shingle_k"]
-    ).localCheckpoint(eager=False)
+    _gate_batch(
+        batch_df, batch_id, corpus_path, app_id, id_col,
+        minhash_signatures(
+            batch_df, id_col, text_col, p["num_hashes"], p["shingle_k"]
+        ),
+        # module attributes, looked up per call: a wrapped verdict or
+        # registration (a tracer's) sees every gate
+        lambda sigs: DI.dedup_against_minhash_index(
+            batch_df.sparkSession, batch_df, index_path, id_col, text_col,
+            threshold, _sigs=sigs,
+        ),
+        lambda novel_sigs, txn: DI.append_to_minhash_index(
+            batch_df, index_path, id_col, text_col, txn=txn,
+            _sigs=novel_sigs,
+        ),
+    )
+
+
+def _gate_batch(
+    batch_df: DataFrame,
+    batch_id: int,
+    corpus_path: str,
+    app_id: str,
+    id_col: str,
+    sigs: DataFrame,
+    verdicts_of,
+    register,
+) -> None:
+    """The body of both index gates for one micro-batch. The batch's
+    ``(doc, sig)`` rows are checkpointed once; the proxy feeds
+    ``verdicts_of`` and the novel rows' signatures. ONE checkpointed
+    proxy of the novel rows (no verdict), carrying ``__sig``, feeds both
+    commits (else the band join runs once per commit): the corpus append
+    of their batch columns under ``txn(app_id+":corpus", batch_id)``,
+    then ``register`` of their non-NULL ``(doc, sig)`` pairs under
+    ``txn(app_id+":index", batch_id)``. Both proxies are local
+    checkpoints (the truncation trade documented at
+    dedup.hamming_band_pairs), released when the gate returns or
+    raises."""
+    from ..sources.delta import write_delta_append
+
+    sigs = sigs.localCheckpoint(eager=False)
     novel = None
     try:
-        verdicts = DI.dedup_against_minhash_index(
-            spark, batch_df, index_path, id_col, text_col, threshold,
-            _sigs=sigs,
+        dup_ids = (
+            verdicts_of(sigs).select(F.col("doc").alias(id_col)).distinct()
         )
-        dup_ids = verdicts.select(F.col("doc").alias(id_col)).distinct()
-        # localCheckpoint: `novel` feeds BOTH commits below — without it
-        # the index band join executes twice per micro-batch (the dedup.py
-        # shared-intermediate pattern)
         novel = (
             batch_df.join(dup_ids, id_col, "left_anti")
             .join(
@@ -1100,12 +1127,11 @@ def dedup_gate_batch(
             novel.drop("__sig"), corpus_path,
             txn=(f"{app_id}:corpus", int(batch_id)),
         )
-        DI.append_to_minhash_index(
-            novel, index_path, id_col, text_col,
-            txn=(f"{app_id}:index", int(batch_id)),
-            _sigs=novel.where(F.col("__sig").isNotNull()).select(
+        register(
+            novel.where(F.col("__sig").isNotNull()).select(
                 F.col(id_col).alias("doc"), F.col("__sig").alias("sig")
             ),
+            (f"{app_id}:index", int(batch_id)),
         )
     finally:
         _release(sigs, novel)
@@ -1116,9 +1142,7 @@ def _release(*dfs) -> None:
     not when ContextCleaner finds them unreferenced: the RDD of every
     ``LogicalRDD`` leaf of each frame's plan. A local checkpoint is not in
     the cache manager, so ``DataFrame.unpersist`` would miss it. Callers
-    pass only frames built from their own proxies and the index read (a
-    verdict plan reaches the checkpoint the Hamming gate takes of its
-    input)."""
+    pass only frames built from their own proxies."""
     for df in dfs:
         if df is None:
             continue
@@ -1155,39 +1179,21 @@ def media_gate_batch(
     corpus un-gated and un-registered — the media analogue of the text
     gate's ``short_docs="ingest"`` policy, documented there.
 
-    Lineage: the signature proxy, the verdicts' own checkpoint of it and
-    ``novel`` are local checkpoints (the truncation trade documented at
-    dedup.hamming_band_pairs); they live through both commits and are
-    released when the gate returns or raises."""
-    from ..operators.hamming_index import (
-        append_to_hamming_index,
-        dedup_against_hamming_index,
-    )
-    from ..sources.delta import write_delta_append
+    The media is decoded and hashed ONCE: the signer's output is the one
+    ``(doc, sig)`` proxy of :func:`_gate_batch`, the body both gates
+    share, and the novel rows' proxy carries the signatures it
+    registers."""
+    from ..operators import hamming_index as HI
 
-    spark = batch_df.sparkSession
-    sigs = signer(batch_df).localCheckpoint(eager=False)
-    verdicts = novel = None
-    try:
-        verdicts = dedup_against_hamming_index(
-            spark, sigs, index_path, family, max_hamming
-        )
-        dup_ids = verdicts.select(F.col("doc").alias(id_col)).distinct()
-        novel = batch_df.join(dup_ids, id_col, "left_anti").localCheckpoint(
-            eager=False
-        )
-        write_delta_append(
-            novel, corpus_path, txn=(f"{app_id}:corpus", int(batch_id))
-        )
-        novel_sigs = sigs.join(
-            novel.select(F.col(id_col).alias("doc")), "doc", "left_semi"
-        )
-        append_to_hamming_index(
-            novel_sigs, index_path, family,
-            txn=(f"{app_id}:index", int(batch_id)),
-        )
-    finally:
-        _release(sigs, verdicts, novel)
+    _gate_batch(
+        batch_df, batch_id, corpus_path, app_id, id_col, signer(batch_df),
+        lambda sigs: HI.dedup_against_hamming_index(
+            batch_df.sparkSession, sigs, index_path, family, max_hamming
+        ),
+        lambda novel_sigs, txn: HI.append_to_hamming_index(
+            novel_sigs, index_path, family, txn=txn
+        ),
+    )
 
 
 def media_gated_stream_append(

@@ -286,7 +286,7 @@ def test_concurrent_append_in_swap_window_is_rescued(
             fired["n"] = 1
             # the concurrent appender's commit, assigned under the OLD
             # sidecar (parent still live), landing just before the swap
-            AI._write_table(late, path, "delta")
+            AI.index_store.append(late, path, "delta")
         return real_replace(src, dst)
 
     monkeypatch.setattr(AI.os, "replace", racing_replace)
@@ -334,7 +334,7 @@ def test_crash_between_swap_and_rescue_is_rescued_by_sweep(
     def racing_replace(src, dst):
         if dst.endswith(AI._PARAMS_FILE) and state["swapped"] == 0:
             state["swapped"] = 1
-            AI._write_table(late, path, "delta")  # the in-window racer
+            AI.index_store.append(late, path, "delta")  # the in-window racer
         return real_replace(src, dst)
 
     def crashing_rescue(*a, **kw):
@@ -443,7 +443,7 @@ def test_append_racing_rescue_read_survives_pinned_gc(
         # materialized (pinned file list in hand), the drop has not run
         if files_by_cell and fired["n"] == 0 and hot in files_by_cell:
             fired["n"] = 1
-            AI._write_table(racer, path_, fmt_)
+            AI.index_store.append(racer, path_, fmt_)
         return real_delete(
             spark_, path_, fmt_, cells_, files_by_cell=files_by_cell
         )

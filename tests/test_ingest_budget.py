@@ -2,11 +2,13 @@
 a Spark-job budget").
 
 Each verb runs at the ingest benchmark's shape — 2,000-row event batches,
-a MERGE of 200 corrections and 50 new rows, a 20-document gate batch —
-and may run at most its budgeted number of Spark jobs (``job_budget``,
-AQE off). A change that adds a pass to a verb fails here. An Iceberg read
-runs as many jobs after three MERGEs as after one: its equality-delete
-files are one scan, not one schema inference each.
+a MERGE of 200 corrections and 50 new rows, a 20-document batch through
+each index gate (MinHash text, Hamming media) — and may run at most its
+budgeted number of Spark jobs (``job_budget``, AQE off). A change that
+adds a pass to a verb fails here. An Iceberg read runs as many jobs after
+three MERGEs as after one: its equality-delete files are one scan, not
+one schema inference each. Either gate registers a byte-small batch as
+one index file.
 """
 
 from __future__ import annotations
@@ -16,13 +18,21 @@ import random
 import pyarrow as pa
 import pytest
 
+from pyspark.sql import functions as F
+
 from mysoftware_nocnetintel_spark.operators.dedup_index import (
     build_minhash_index,
+)
+from mysoftware_nocnetintel_spark.operators.hamming_index import (
+    build_hamming_index,
 )
 from mysoftware_nocnetintel_spark.sources import delta as dl
 from mysoftware_nocnetintel_spark.sources import iceberg as ice
 from mysoftware_nocnetintel_spark.sources.readers import read_iceberg_snapshot
-from mysoftware_nocnetintel_spark.streaming.ops import dedup_gate_batch
+from mysoftware_nocnetintel_spark.streaming.ops import (
+    dedup_gate_batch,
+    media_gate_batch,
+)
 
 from .test_ingest_layout import _batch, _data_files
 
@@ -32,6 +42,7 @@ BUDGET = {
     "delta_cow_merge": 4,
     "iceberg_merge": 3,
     "gate": 5,
+    "media_gate": 6,
 }
 
 WORDS = [f"w{i}" for i in range(400)]
@@ -101,6 +112,41 @@ def _run_gate(spark, tmp_path):
     return lambda: dedup_gate_batch(batch, 1, corpus, index, "budget")
 
 
+def _sigs(spark, rows):
+    """A media batch whose signer output is precomputed: (doc_id, sig)."""
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "doc_id": pa.array([r[0] for r in rows], pa.int64()),
+                "sig": pa.array([r[1] for r in rows], pa.int64()),
+            }
+        )
+    )
+
+
+def _run_media_gate(spark, tmp_path):
+    rng = random.Random(8111)
+    corpus, index = str(tmp_path / "corpus"), str(tmp_path / "index")
+    known = [(i, rng.getrandbits(63)) for i in range(200)]
+    seed = _sigs(spark, known)
+    dl.write_delta_append(seed, corpus)
+    build_hamming_index(
+        seed.select(F.col("doc_id").alias("doc"), "sig"), index, "dhash"
+    )
+    rows = [(200 + i, rng.getrandbits(63)) for i in range(16)]
+    rows += known[:2]  # re-sent under their ids
+    rows += [(300 + i, s ^ 1) for i, (_, s) in enumerate(known[2:4])]
+    batch = _sigs(spark, rows)
+    return lambda: media_gate_batch(
+        batch, 1, corpus, index, "budget",
+        signer=lambda df: df.select(F.col("doc_id").alias("doc"), "sig"),
+        family="dhash",
+    )
+
+
+GATES = {"gate": _run_gate, "media_gate": _run_media_gate}
+
+
 @pytest.mark.parametrize("verb", sorted(BUDGET))
 def test_verb_runs_within_its_job_budget(aqe_off, job_budget, tmp_path, verb):
     spark = aqe_off
@@ -109,7 +155,7 @@ def test_verb_runs_within_its_job_budget(aqe_off, job_budget, tmp_path, verb):
     elif verb.endswith("_merge"):
         run = _run_merge(spark, tmp_path, verb.split("_")[0])
     else:
-        run = _run_gate(spark, tmp_path)
+        run = GATES[verb](spark, tmp_path)
     jobs, _tasks = job_budget(run)
     assert jobs <= BUDGET[verb]
 
@@ -134,8 +180,9 @@ def test_iceberg_read_jobs_do_not_grow_with_equality_delete_files(
     assert rows == [6050, 6150]
 
 
-def test_gate_registers_a_byte_small_batch_as_one_file(aqe_off, tmp_path):
-    run = _run_gate(aqe_off, tmp_path)
+@pytest.mark.parametrize("gate", sorted(GATES))
+def test_gate_registers_a_byte_small_batch_as_one_file(aqe_off, tmp_path, gate):
+    run = GATES[gate](aqe_off, tmp_path)
     index = str(tmp_path / "index")
     before = _data_files(index)
     run()
