@@ -34,8 +34,6 @@ FAISS heuristic. Delta persistence cited in sources/delta.py.
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -58,19 +56,10 @@ def read_ann_params(path: str) -> dict:
     return index_store.read_params(path, _PARAMS_FILE)
 
 
-def _cell_key(fmt: str, cell: int):
-    """A cell id as the format's partition filter takes it: Delta
-    add.partitionValues are strings; Iceberg manifests carry the typed
-    partition record."""
-    return str(cell) if fmt == "delta" else cell
-
-
 def _read_cell(spark, path, fmt, cell: int):
     """One probed cell's files — driver-side partition pruning in either
     format."""
-    return index_store.read(
-        spark, path, fmt, partition_filter={"cell": _cell_key(fmt, cell)}
-    )
+    return index_store.read(spark, path, fmt, partition_filter={"cell": cell})
 
 
 def build_ivf_index(
@@ -86,6 +75,7 @@ def build_ivf_index(
     driver collect — ivf_centroids' FAISS heuristic), zero-shuffle cell
     assignment (ivf_assign's Arrow argmin), one cell-partitioned commit in
     either open table format. Returns the committed version/snapshot."""
+    index_store.refuse_existing(path, _PARAMS_FILE)  # before the fit
     cents = ivf_centroids(df, vec_col, n_cells, seed, as_list=True)
     index_store.create(
         path,
@@ -252,9 +242,7 @@ def query_ivf_index(
                 spark,
                 path,
                 fmt,
-                partition_filter={
-                    "cell": frozenset(_cell_key(fmt, c) for c in cells)
-                },
+                partition_filter={"cell": frozenset(cells)},
             )
         except NoMatchingFilesError:
             # none of the probed cells has files — a legal empty slice.
@@ -352,19 +340,6 @@ def _delete_cells(
     files — correct only where no concurrent writer can target the
     cell (the ghost sweep: ghost ids lie beyond every published
     sidecar, so no appender assigns into them)."""
-    if fmt not in ("delta", "iceberg"):  # pragma: no cover
-        raise ValueError(f"unknown table_format {fmt!r}")
-
-    def drop(values, files=None):
-        if fmt == "delta":
-            from ..sources.delta import drop_delta_partition
-
-            drop_delta_partition(spark, path, values, files=files)
-        else:
-            from ..sources.iceberg import drop_iceberg_partition
-
-            drop_iceberg_partition(path, values, files=files)
-
     if not cells:
         return
     ids = sorted(int(c) for c in cells)
@@ -373,12 +348,12 @@ def _delete_cells(
         # a crashed run leaves split_factor ghosts per parent, and the
         # sweep must not pay one CAS + manifest rewrite per ghost
         # (round-10 review)
-        drop([{"cell": _cell_key(fmt, c)} for c in ids])
+        index_store.drop(spark, path, fmt, [{"cell": c} for c in ids])
         return
     for c in ids:
         fl = files_by_cell.get(c)
         if fl:  # pinned mode with nothing pinned: nothing to drop
-            drop({"cell": _cell_key(fmt, c)}, files=fl)
+            index_store.drop(spark, path, fmt, {"cell": c}, files=fl)
 
 
 def _read_cell_or_none(spark, path, fmt, cell: int):
@@ -411,11 +386,7 @@ def _metadata_cell_counts(path: str, fmt: str) -> "dict[int, int] | None":
     the zero-I/O count path the rebalance sizes its work by. None when
     the format can't guarantee exactness (missing stats, live delete
     files after a retraction); callers fall back to the scan."""
-    from ..sources import delta, iceberg
-
-    raw = (delta if fmt == "delta" else iceberg).partition_row_counts(
-        path, "cell"
-    )
+    raw = index_store.partition_counts(path, fmt, "cell")
     if raw is None:
         return None
     return {int(k): int(v) for k, v in raw.items()}
@@ -429,33 +400,12 @@ def _pin_cell(spark, path: str, fmt: str, cell: int):
     adds a file the pin never saw), closing the lost-append window a
     fresh-scan delete had between the rescue read and its own scan
     (round-10 advisor). Driver-side metadata walk only."""
-    key = _cell_key(fmt, int(cell))
-    if fmt == "delta":
-        from ..sources.delta import _replay_state
-
-        st = _replay_state(os.path.join(path, "_delta_log"))
-        files = sorted(
-            rel
-            for rel, add in st["live"].items()
-            if (add.get("partitionValues") or {}).get("cell") == key
-        )
-        pin = {"version": st["version"]}
-    else:
-        from ..sources.readers import _iceberg_snapshot_files
-
-        data_files, _, _, snap = _iceberg_snapshot_files(path)
-        files = sorted(
-            e.path
-            for e in data_files
-            if (e.partition or {}).get("cell") == key
-        )
-        pin = {"snapshot_id": snap["snapshot-id"]}
+    key = {"cell": int(cell)}
+    files, pin = index_store.partition_files(path, fmt, key)
     if not files:
         return None, []
     return (
-        index_store.read(
-            spark, path, fmt, partition_filter={"cell": key}, **pin
-        ),
+        index_store.read(spark, path, fmt, partition_filter=key, **pin),
         files,
     )
 

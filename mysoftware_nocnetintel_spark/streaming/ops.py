@@ -1094,47 +1094,39 @@ def _gate_batch(
     register,
 ) -> None:
     """The body of both index gates for one micro-batch. The batch's
-    ``(doc, sig)`` rows are checkpointed once; the proxy feeds
-    ``verdicts_of`` and the novel rows' signatures. ONE checkpointed
-    proxy of the novel rows (no verdict), carrying ``__sig``, feeds both
-    commits (else the band join runs once per commit): the corpus append
-    of their batch columns under ``txn(app_id+":corpus", batch_id)``,
-    then ``register`` of their non-NULL ``(doc, sig)`` pairs under
-    ``txn(app_id+":index", batch_id)``. Both proxies are local
-    checkpoints (the truncation trade documented at
-    dedup.hamming_band_pairs), released when the gate returns or
-    raises."""
+    ``(doc, sig)`` rows are checkpointed once and feed ``verdicts_of``;
+    the flagged ids are checkpointed once (else the band join runs once
+    per commit) and feed both commits as left-anti joins: the corpus
+    append of the batch rows under ``txn(app_id+":corpus", batch_id)``,
+    then ``register`` of the non-NULL ``(doc, sig)`` rows under
+    ``txn(app_id+":index", batch_id)``. Each commit keeps its own rows,
+    never a product of the two: a media batch carrying one id on k
+    signed rows appends k corpus rows and registers k signatures; the
+    MinHash signer yields one signature per id, so that id registers
+    once, as the build does. Both proxies are local checkpoints (the
+    truncation trade documented at dedup.hamming_band_pairs), released
+    when the gate returns or raises."""
     from ..sources.delta import write_delta_append
 
     sigs = sigs.localCheckpoint(eager=False)
-    novel = None
+    dup_ids = None
     try:
         dup_ids = (
-            verdicts_of(sigs).select(F.col("doc").alias(id_col)).distinct()
-        )
-        novel = (
-            batch_df.join(dup_ids, id_col, "left_anti")
-            .join(
-                sigs.select(
-                    F.col("doc").alias(id_col), F.col("sig").alias("__sig")
-                ),
-                id_col,
-                "left",
-            )
-            .localCheckpoint(eager=False)
+            verdicts_of(sigs).select("doc").distinct().localCheckpoint(eager=False)
         )
         write_delta_append(
-            novel.drop("__sig"), corpus_path,
+            batch_df.join(
+                dup_ids.withColumnRenamed("doc", id_col), id_col, "left_anti"
+            ),
+            corpus_path,
             txn=(f"{app_id}:corpus", int(batch_id)),
         )
         register(
-            novel.where(F.col("__sig").isNotNull()).select(
-                F.col(id_col).alias("doc"), F.col("__sig").alias("sig")
-            ),
+            sigs.where(F.col("sig").isNotNull()).join(dup_ids, "doc", "left_anti"),
             (f"{app_id}:index", int(batch_id)),
         )
     finally:
-        _release(sigs, novel)
+        _release(sigs, dup_ids)
 
 
 def _release(*dfs) -> None:
@@ -1181,8 +1173,8 @@ def media_gate_batch(
 
     The media is decoded and hashed ONCE: the signer's output is the one
     ``(doc, sig)`` proxy of :func:`_gate_batch`, the body both gates
-    share, and the novel rows' proxy carries the signatures it
-    registers."""
+    share: the verdicts read it, and its unflagged rows are the
+    signatures it registers."""
     from ..operators import hamming_index as HI
 
     _gate_batch(

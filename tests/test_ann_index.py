@@ -143,6 +143,18 @@ def test_rebuild_refused_and_oversized_batch_rejected(spark, tmp_path):
         AI._MAX_SERVING_QUERIES = orig
 
 
+def test_rebuild_is_refused_before_the_fit(spark, tmp_path, monkeypatch):
+    path = str(tmp_path / "ivf")
+    AI.build_ivf_index(_corpus(spark), path, n_cells=4)
+
+    def no_fit(*args, **kwargs):
+        raise AssertionError("k-means fit ran on an existing index")
+
+    monkeypatch.setattr(AI, "ivf_centroids", no_fit)
+    with pytest.raises(ValueError, match="already exists"):
+        AI.build_ivf_index(_corpus(spark), path, n_cells=4)
+
+
 def test_query_plan_has_no_cartesian(spark, tmp_path):
     path = str(tmp_path / "ivf")
     AI.build_ivf_index(_corpus(spark), path, n_cells=4)

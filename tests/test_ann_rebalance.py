@@ -148,17 +148,17 @@ def test_crash_before_sidecar_swap_is_invisible_then_converges(
     _df, path = _build(spark, tmp_path, "delta")
     before = _topk(spark, path)
 
-    real_replace = AI.os.replace
+    real_replace = AI.index_store.os.replace
 
     def exploding_replace(src, dst):
         if dst.endswith(AI._PARAMS_FILE):
             raise RuntimeError("injected crash before sidecar swap")
         return real_replace(src, dst)
 
-    monkeypatch.setattr(AI.os, "replace", exploding_replace)
+    monkeypatch.setattr(AI.index_store.os, "replace", exploding_replace)
     with pytest.raises(RuntimeError, match="injected crash"):
         AI.rebalance_ivf_index(spark, path)
-    monkeypatch.setattr(AI.os, "replace", real_replace)
+    monkeypatch.setattr(AI.index_store.os, "replace", real_replace)
 
     # duplicates exist ON DISK (parent + new cells)...
     hot_n = max(_cell_counts(spark, path, "delta").values())
@@ -278,7 +278,7 @@ def test_concurrent_append_in_swap_window_is_rescued(
         "cell", "vec_id", "embedding"
     )
 
-    real_replace = AI.os.replace
+    real_replace = AI.index_store.os.replace
     fired = {"n": 0}
 
     def racing_replace(src, dst):
@@ -289,9 +289,9 @@ def test_concurrent_append_in_swap_window_is_rescued(
             AI.index_store.append(late, path, "delta")
         return real_replace(src, dst)
 
-    monkeypatch.setattr(AI.os, "replace", racing_replace)
+    monkeypatch.setattr(AI.index_store.os, "replace", racing_replace)
     report = AI.rebalance_ivf_index(spark, path)
-    monkeypatch.setattr(AI.os, "replace", real_replace)
+    monkeypatch.setattr(AI.index_store.os, "replace", real_replace)
     assert fired["n"] == 1
     assert report["rescued"] == 4, report
 
@@ -327,7 +327,7 @@ def test_crash_between_swap_and_rescue_is_rescued_by_sweep(
         "cell", "vec_id", "embedding"
     )
 
-    real_replace = AI.os.replace
+    real_replace = AI.index_store.os.replace
     real_rescue = AI._rescue_then_gc
     state = {"swapped": 0}
 
@@ -340,11 +340,11 @@ def test_crash_between_swap_and_rescue_is_rescued_by_sweep(
     def crashing_rescue(*a, **kw):
         raise RuntimeError("injected crash before rescue")
 
-    monkeypatch.setattr(AI.os, "replace", racing_replace)
+    monkeypatch.setattr(AI.index_store.os, "replace", racing_replace)
     monkeypatch.setattr(AI, "_rescue_then_gc", crashing_rescue)
     with pytest.raises(RuntimeError, match="injected crash"):
         AI.rebalance_ivf_index(spark, path)
-    monkeypatch.setattr(AI.os, "replace", real_replace)
+    monkeypatch.setattr(AI.index_store.os, "replace", real_replace)
     monkeypatch.setattr(AI, "_rescue_then_gc", real_rescue)
 
     # sidecar swapped; parent retired with original + late rows on disk

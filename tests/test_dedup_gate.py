@@ -82,6 +82,25 @@ def test_gate_registers_exactly_the_novel_signatures(
     assert (_dir_state(corpus), _dir_state(index)) == before
 
 
+def test_gate_keeps_each_row_of_a_repeated_id(spark, tmp_path):
+    """One id on two rows: the corpus gets both rows; the id has one
+    signature (MinHash signs per id), registered once, as the build
+    registers it."""
+    corpus, index = _setup(spark, tmp_path)
+    rows = [(20, NOVEL_A), (20, NOVEL_A + " again")]
+    batch = spark.createDataFrame(rows, SCHEMA)
+    dedup_gate_batch(batch, 0, corpus, index, app_id="g", threshold=0.5)
+    corpus_rows = read_delta_snapshot(spark, corpus).where("doc_id = 20")
+    assert sorted(r.text for r in corpus_rows.collect()) == sorted(
+        t for _, t in rows
+    )
+    registered = read_delta_snapshot(spark, index).where("doc = 20")
+    assert _sig_rows(registered) == _sig_rows(
+        minhash_signatures(batch, "doc_id", "text")
+    )
+    assert registered.count() == 1
+
+
 def test_gate_shingles_the_batch_once(spark, tmp_path, monkeypatch):
     corpus, index = _setup(spark, tmp_path)
     calls = []

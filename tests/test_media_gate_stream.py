@@ -215,3 +215,28 @@ def test_two_media_gates_race_shared_index(spark, tmp_path):
         )
     assert _corpus_ids(spark, corpus_path) == want, "cross-gate dup leaked"
     assert index_ids() == want
+
+
+def test_media_gate_keeps_each_row_of_a_repeated_id(spark, tmp_path):
+    """One id on two signed rows (a re-delivery inside one batch): the
+    corpus gets both rows and the index both signatures, never their
+    product."""
+    corpus_path, index_path = _setup(spark, tmp_path)
+    batch = spark.createDataFrame(
+        [
+            (40, MM.png_encode(_img(960))),
+            (40, MM.png_encode(_img(961))),
+            (41, MM.png_encode(_img(962))),
+        ],
+        SCHEMA,
+    )
+    media_gate_batch(
+        batch, 0, corpus_path, index_path, app_id="mgk",
+        signer=_signer, family="dhash",
+    )
+    assert _corpus_ids(spark, corpus_path) == [0, 1, 2, 40, 40, 41]
+    idx = [(r.doc, r.sig) for r in read_delta_snapshot(spark, index_path).collect()]
+    assert sorted(d for d, _ in idx) == [0, 1, 2, 40, 40, 41]
+    assert sorted(s for d, s in idx if d == 40) == sorted(
+        r.sig for r in _signer(batch).where("doc = 40").collect()
+    )
