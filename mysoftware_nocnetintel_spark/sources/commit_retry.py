@@ -18,11 +18,12 @@ retries does so through :func:`retry`, which owns the whole policy:
   ``None`` (retry on the new head).
 
 Call sites pass only what differs: the attempt and its validation
-(Delta's layout/touched-file check, Iceberg's ``_retry_head``). The
-data-semantic verbs' ``on_conflict="rescan"`` is a plain :func:`retry`
-of the whole verb: each invocation re-derives every decision against
-the winner's head (the serial order "winner first, then this verb"), so
-the caller's source/predicate must be deterministic.
+(Delta's layout/touched-file check, Iceberg's ``_retry_head``). A
+data-semantic verb (DELETE / UPDATE / MERGE) surfaces a conflict its
+validation cannot absorb; ``recompute(verb)(...)`` re-runs the whole
+verb instead, so each invocation re-derives every decision against the
+winner's head (the serial order "winner first, then this verb") — the
+caller's source/predicate must be deterministic.
 """
 
 from __future__ import annotations

@@ -826,16 +826,7 @@ def _stage_append(
     schema_json = df.schema.json()
     evolved_schema_json: str | None = None
     if exists:
-        meta = state["meta"]
-        if not meta or (meta.get("configuration") or {}).get(
-            "writer"
-        ) != _WRITER_TAG:
-            raise NotImplementedError(
-                "refusing to append to a Delta table created by another "
-                "writer (unknown protocol features could be violated): use "
-                "the delta-spark connector"
-            )
-        _check_commit_coordinator(meta)
+        meta = _owned(state, path)["meta"]
         if partition_by:
             raise ValueError(
                 "partition_by is declared at table CREATE time; later "
@@ -1076,18 +1067,8 @@ def drop_delta_partition(
     compaction/rewrite of a matched file surfaces
     :class:`DeltaCommitConflict`)."""
     log_dir = os.path.join(path, "_delta_log")
-    state = _replay_state(log_dir)
-    if state["version"] is None:
-        raise FileNotFoundError(f"no Delta table at {path}")
+    state = _owned(_replay_state(log_dir), path)
     meta = state["meta"]
-    if not meta or (meta.get("configuration") or {}).get(
-        "writer"
-    ) != _WRITER_TAG:
-        raise NotImplementedError(
-            "refusing to modify a Delta table created by another writer: "
-            "use the delta-spark connector"
-        )
-    _check_commit_coordinator(meta)
     parts = (
         partition_values
         if isinstance(partition_values, list)
@@ -1204,181 +1185,50 @@ def partition_row_counts(path: str, col: str) -> "dict[str, int] | None":
 _MAX_DELETE_POSITIONS = 5_000_000  # driver-side DV build cap (see below)
 
 
-def delete_delta_rows(
-    spark, path: str, predicate: str, on_conflict: str = "surface"
-) -> int:
+def delete_delta_rows(spark, path: str, predicate: str) -> int:
     """MERGE-ON-READ DELETE: mark the rows matching ``predicate`` deleted
     via DELETION VECTORS (PROTOCOL.md "Deletion Vectors") — no data file
-    is rewritten. The commit re-adds each touched file with a
-    ``deletionVector`` descriptor (storageType ``u``: one UUID-named
-    ``deletion_vector_<uuid>.bin`` under the table root holds this
-    commit's bitmaps) plus the spec's remove tombstone for the old entry,
-    and upgrades the table protocol to reader 3 / writer 7 with the
-    ``deletionVectors`` feature on first use. Existing DVs are MERGED
-    (old positions ∪ new) so repeated deletes stack correctly.
+    is rewritten. It is the merge-on-read tail
+    (:func:`_commit_mor_mask_and_add`) with no rows to add: each touched
+    file is re-added with a merged deletion vector (old positions ∪ new,
+    so repeated deletes stack), the table protocol is upgraded to reader
+    3 / writer 7 with the ``deletionVectors`` feature on first use, and
+    everything lands as one version json.
 
     The matching row positions come from ONE distributed scan over the
     live files (hidden ``_metadata.file_path`` / ``row_index`` columns,
-    physical row order — unaffected by previously deleted rows, whose
-    re-deletion the union makes idempotent) followed by a driver-side
-    collect bounded by ``_MAX_DELETE_POSITIONS``: bitmaps are driver
-    KB/MB-scale objects by design, but an unbounded DELETE (e.g. WHERE
-    true at 100 TB) must fail fast toward the copy-on-write path
-    (``write_delta_overwrite`` with the inverted predicate) instead of
-    ballooning the driver. Returns the committed version.
+    physical row order). :func:`_masked_target` scans with the DECLARED
+    schema, projects physical→logical under column mapping and re-attaches
+    typed partition literals under their logical names, so the predicate
+    can reference partition columns (and renamed ones) exactly like
+    UPDATE/MERGE; already-deleted rows are masked out of the scan. The
+    driver-side collect is bounded by ``_MAX_DELETE_POSITIONS``: an
+    unbounded DELETE (e.g. WHERE true at 100 TB) fails fast toward the
+    copy-on-write path (``write_delta_overwrite`` with the inverted
+    predicate) instead of ballooning the driver. Returns the committed
+    version.
 
     VALIDATED-RETRY SCOPE: a lost commit race auto-retries only on
     tables whose metaData still carries THIS engine's writer tag
     (``_commit_data_version``) — if a foreign engine (e.g. delta-spark)
     races this verb and its winning commit rewrote the metaData, the
     conflict always surfaces as :class:`DeltaCommitConflict` for the
-    caller to re-run, because a foreign winner's semantics (protocol
-    features, action conventions) can't be validated file-by-file here.
-    Single-engine multi-writer races validate and retry as documented."""
-    import uuid as uuid_mod
-
+    caller to re-run (``commit_retry.recompute(delete_delta_rows)``
+    re-runs it against the winner's head), because a foreign winner's
+    semantics (protocol features, action conventions) can't be validated
+    file-by-file here. Single-engine multi-writer races validate and
+    retry as documented."""
     from pyspark.sql import functions as F
 
-    from .roaring import (
-        dv_positions_from_descriptor,
-        encode_rbm_array,
-        write_dv_file,
-        z85_encode,
-    )
-
-    if on_conflict not in ("surface", "rescan"):
-        raise ValueError("on_conflict must be 'surface' or 'rescan'")
-    if on_conflict == "rescan":
-        # snapshot-isolation serial re-execution (round 8): re-run the
-        # whole DELETE against the winner's head — fresh replay, fresh
-        # (file, pos) coordinates and DV merge targets
-        return retry(
-            lambda: delete_delta_rows(spark, path, predicate)
-        )
-    log_dir = os.path.join(path, "_delta_log")
-    state = _replay_state(log_dir)
-    if state["version"] is None:
-        raise FileNotFoundError(f"no Delta table at {path}")
-    meta = state["meta"]
-    if not meta or (meta.get("configuration") or {}).get(
-        "writer"
-    ) != _WRITER_TAG:
-        raise NotImplementedError(
-            "refusing to delete from a Delta table created by another "
-            "writer: use the delta-spark connector"
-        )
-    _check_commit_coordinator(meta)
-    # the live set INCLUDING current DV descriptors (merge target)
-    live = state["live"]
-    had_dv_protocol = state["dv_protocol"]
-    if not live:
-        raise ValueError("empty table")
-
-    # ONE distributed scan finds (file, physical position) per match.
-    # _masked_target scans with the DECLARED schema (pre-evolution files
-    # null-fill), projects physical→logical under column mapping, and
-    # re-attaches typed partition literals under their LOGICAL names —
-    # so the predicate can reference partition columns (and renamed
-    # ones) exactly like UPDATE/MERGE. Already-DV-deleted rows are
-    # masked out of the scan; the bitmap union below keeps them deleted.
-    matches = (
+    state = _writer_state(path)
+    coords = (
         _masked_target(spark, path, state)
         .filter(F.expr(predicate))
         .select("__fp", "__pos")
-        .limit(_MAX_DELETE_POSITIONS + 1)
-        .collect()
     )
-    if len(matches) > _MAX_DELETE_POSITIONS:
-        raise NotImplementedError(
-            f"DELETE matches more than {_MAX_DELETE_POSITIONS} rows: use "
-            "copy-on-write (write_delta_overwrite with the inverted "
-            "predicate) instead of a driver-built deletion vector"
-        )
-    by_file: dict[str, set] = {}
-    abs_to_rel = {
-        os.path.abspath(os.path.join(path, rel)): rel for rel in live
-    }
-    for r in matches:
-        # _masked_target already normalized __fp from the percent-encoded
-        # _metadata.file_path URI to a plain absolute path (readers.py
-        # _uri_to_path — the round-5 advisor seam), the same form the DV
-        # anti-join matches on
-        by_file.setdefault(abs_to_rel[os.path.abspath(r["__fp"])], set()).add(
-            r["__pos"]
-        )
-    if not by_file:
-        raise ValueError(f"DELETE predicate {predicate!r} matched no rows")
-
-    # merge with existing DVs, encode one bitmap per touched file
-    rels = sorted(by_file)
-    bitmaps: list[bytes] = []
-    cards: list[int] = []
-    for rel in rels:
-        positions = set(by_file[rel])
-        old_dv = live[rel].get("deletionVector")
-        if old_dv:
-            positions |= set(dv_positions_from_descriptor(path, old_dv))
-        positions = sorted(positions)
-        bitmaps.append(encode_rbm_array(positions))
-        cards.append(len(positions))
-    dv_uuid = uuid_mod.uuid4()
-    dv_name = f"deletion_vector_{dv_uuid}.bin"
-    spans = write_dv_file(os.path.join(path, dv_name), bitmaps)
-
-    now_ms = int(time.time() * 1000)
-    actions: list[dict] = []
-    if not had_dv_protocol:
-        prior_proto = state.get("protocol") or {}
-        actions.append(
-            {
-                "protocol": {
-                    "minReaderVersion": 3,
-                    "minWriterVersion": 7,
-                    "readerFeatures": sorted(
-                        _implied_reader_features(prior_proto)
-                        | {"deletionVectors"}
-                    ),
-                    "writerFeatures": sorted(
-                        _implied_writer_features(prior_proto)
-                        | {"deletionVectors"}
-                    ),
-                }
-            }
-        )
-    for rel, (offset, size), card in zip(rels, spans, cards):
-        old = live[rel]
-        actions.append(
-            {
-                "remove": {
-                    "path": rel,
-                    "deletionTimestamp": now_ms,
-                    "dataChange": True,
-                }
-            }
-        )
-        re_add = {
-            "path": rel,
-            "partitionValues": old.get("partitionValues") or {},
-            "size": old.get("size")
-            or os.path.getsize(os.path.join(path, rel)),
-            "modificationTime": now_ms,
-            "dataChange": True,
-            "deletionVector": {
-                "storageType": "u",
-                "pathOrInlineDv": z85_encode(dv_uuid.bytes),
-                "offset": offset,
-                "sizeInBytes": size,
-                "cardinality": card,
-            },
-        }
-        # carry the physical file's stats through the re-add: min/max
-        # still bound the surviving rows (possibly loosely), so data
-        # skipping keeps working on DV-masked tables
-        if old.get("stats"):
-            re_add["stats"] = old["stats"]
-        actions.append({"add": re_add})
-    version = state["version"] + 1
-    return _commit_data_version(log_dir, version, actions, state, rels)
+    return _commit_mor_mask_and_add(
+        spark, path, state, coords, None, f"DELETE predicate {predicate!r}"
+    )
 
 
 def _masked_target(
@@ -1487,11 +1337,13 @@ def _masked_target(
     return target
 
 
-def _writer_state(path: str) -> dict:
-    """Replayed state gated to tables THIS writer created (shared by the
-    copy-on-write MERGE/UPDATE verbs)."""
-    log_dir = os.path.join(path, "_delta_log")
-    state = _replay_state(log_dir)
+def _owned(state: dict, path: str, commits: bool = True) -> dict:
+    """``state``, a replay of ``path``'s log, once the table is one THIS
+    writer created — the ownership guard of every Delta verb. A missing
+    table raises FileNotFoundError; a table another engine created raises
+    NotImplementedError (its protocol features could be silently
+    violated). A verb that commits also passes the coordinated-commits
+    handshake; vacuum and checkpoint create no commit (``commits=False``)."""
     if state["version"] is None:
         raise FileNotFoundError(f"no Delta table at {path}")
     meta = state["meta"]
@@ -1499,10 +1351,18 @@ def _writer_state(path: str) -> dict:
         "writer"
     ) != _WRITER_TAG:
         raise NotImplementedError(
-            "refusing to rewrite a Delta table created by another writer: "
+            "refusing to modify a Delta table created by another writer: "
             "use the delta-spark connector"
         )
-    _check_commit_coordinator(meta)
+    if commits:
+        _check_commit_coordinator(meta)
+    return state
+
+
+def _writer_state(path: str) -> dict:
+    """The owned, non-empty head of the table at ``path`` (:func:`_owned`)
+    — the prologue of the row-level and layout verbs."""
+    state = _owned(_replay_state(os.path.join(path, "_delta_log")), path)
     if not state["live"]:
         raise ValueError("empty table")
     return state
@@ -1568,7 +1428,6 @@ def merge_delta_rows(
     when_matched: str = "update",
     when_not_matched: str = "insert",
     strategy: str = "cow",
-    on_conflict: str = "surface",
 ) -> int:
     """MERGE (upsert) into the Delta table at ``path`` —
     the standard ``MERGE INTO target USING source ON keys`` subset:
@@ -1611,8 +1470,9 @@ def merge_delta_rows(
     committed version; raises :class:`DeltaCommitConflict` if another
     writer commits first and file-overlap validation can't prove the
     winner disjoint (re-run — the touched set was computed against the
-    old state). Validated retry engages only against same-engine
-    winners — see the VALIDATED-RETRY SCOPE note on
+    old state; ``commit_retry.recompute(merge_delta_rows)`` re-runs it
+    against the winner's head). Validated retry engages only against
+    same-engine winners — see the VALIDATED-RETRY SCOPE note on
     :func:`delete_delta_rows`."""
     from pyspark.sql import functions as F
 
@@ -1622,18 +1482,6 @@ def merge_delta_rows(
         raise ValueError("when_not_matched must be 'insert' or 'ignore'")
     if strategy not in ("cow", "mor"):
         raise ValueError("strategy must be 'cow' or 'mor'")
-    if on_conflict not in ("surface", "rescan"):
-        raise ValueError("on_conflict must be 'surface' or 'rescan'")
-    if on_conflict == "rescan":
-        # snapshot-isolation serial re-execution (round 8): the whole
-        # merge re-runs against the winner's head — fresh key
-        # membership, fresh touched-file set, fresh ambiguity probe
-        return retry(
-            lambda: merge_delta_rows(
-                spark, path, source, on, when_matched,
-                when_not_matched, strategy,
-            )
-        )
     keys = list(on)
     if not keys:
         raise ValueError("merge needs at least one ON key column")
@@ -1692,7 +1540,6 @@ def merge_delta_rows(
             keys,
             target,
             src_keys,
-            abs_to_rel,
             when_matched,
             when_not_matched,
         )
@@ -1727,7 +1574,6 @@ def _commit_mor_merge(
     keys: list[str],
     target: DataFrame,
     src_keys: DataFrame,
-    abs_to_rel: dict,
     when_matched: str,
     when_not_matched: str,
 ) -> int:
@@ -1754,7 +1600,7 @@ def _commit_mor_merge(
     else:  # delete matched only
         new_df = None
     return _commit_mor_mask_and_add(
-        spark, path, state, matched, new_df, abs_to_rel, "merge"
+        spark, path, state, matched, new_df, "merge"
     )
 
 
@@ -1764,17 +1610,15 @@ def _commit_mor_mask_and_add(
     state: dict,
     coords: DataFrame,
     new_df,
-    abs_to_rel: dict,
     op: str,
 ) -> int:
-    """Shared merge-on-read commit tail (MoR MERGE and UPDATE): collect
-    the (file, physical position) coordinates to mask (driver-bounded),
-    build one merged deletion vector per touched file (existing DVs
-    unioned in, stats carried through the re-add), stage ``new_df`` as
-    ordinary adds, and commit protocol upgrade + removes + DV re-adds +
-    adds as ONE version json."""
-    import uuid as uuid_mod
-
+    """The one merge-on-read commit tail (DELETE, MoR MERGE and UPDATE):
+    collect the (``__fp``, ``__pos``) coordinates to mask
+    (driver-bounded), build one merged deletion vector per touched file
+    (existing DVs unioned in, stats carried through the re-add), stage
+    ``new_df`` (when not None) as ordinary adds, and commit protocol
+    upgrade + removes + DV re-adds + adds as ONE version json. ``op``
+    names the verb in errors."""
     from .roaring import (
         dv_positions_from_descriptor,
         encode_rbm_array,
@@ -1788,10 +1632,17 @@ def _commit_mor_mask_and_add(
     if len(matched) > _MAX_DELETE_POSITIONS:
         raise NotImplementedError(
             f"{op} matches more than {_MAX_DELETE_POSITIONS} rows: use "
-            "strategy='cow' (at that selectivity the rewrite is the "
-            "honest cost, and the deletion-vector bitmaps would balloon "
-            "the driver)"
+            "copy-on-write (strategy='cow'; for a DELETE, "
+            "write_delta_overwrite with the inverted predicate) — at that "
+            "selectivity the rewrite is the honest cost, and the "
+            "deletion-vector bitmaps would balloon the driver"
         )
+    # _masked_target normalized __fp from the percent-encoded
+    # _metadata.file_path URI to a plain absolute path (readers.py
+    # _uri_to_path), the form this map is keyed by
+    abs_to_rel = {
+        os.path.abspath(os.path.join(path, rel)): rel for rel in live
+    }
     by_file: dict[str, set] = {}
     for r in matched:
         by_file.setdefault(
@@ -1832,7 +1683,7 @@ def _commit_mor_mask_and_add(
             ordered = sorted(positions)
             bitmaps.append(encode_rbm_array(ordered))
             cards.append(len(ordered))
-        dv_uuid = uuid_mod.uuid4()
+        dv_uuid = uuid.uuid4()
         spans = write_dv_file(
             os.path.join(path, f"deletion_vector_{dv_uuid}.bin"), bitmaps
         )
@@ -1875,7 +1726,7 @@ def _commit_mor_mask_and_add(
     # decisions computed from `state` go through validation (r7 advisor).
     version = state["version"] + 1
     if not actions:
-        raise ValueError(f"{op} changed nothing")
+        raise ValueError(f"{op} matched no rows and added none")
     return _commit_data_version(log_dir, version, actions, state, rels)
 
 
@@ -1885,7 +1736,6 @@ def update_delta_rows(
     predicate: str,
     set_exprs: dict[str, str],
     strategy: str = "cow",
-    on_conflict: str = "surface",
 ) -> int:
     """UPDATE rows matching ``predicate``, applying ``set_exprs``
     (column → SQL expression, evaluated against the old row, cast back to
@@ -1901,23 +1751,15 @@ def update_delta_rows(
     new partition directory. Raises if the predicate matches nothing (a
     no-op commit would bump the version for no reason). Lost commit
     races validate-and-retry only against same-engine winners — see the
-    VALIDATED-RETRY SCOPE note on :func:`delete_delta_rows`."""
+    VALIDATED-RETRY SCOPE note on :func:`delete_delta_rows`; a conflict
+    that surfaces is re-run against the winner's head by
+    ``commit_retry.recompute(update_delta_rows)``."""
     from pyspark.sql import functions as F
 
     if strategy not in ("cow", "mor"):
         raise ValueError("strategy must be 'cow' or 'mor'")
     state = _writer_state(path)
     meta = state["meta"]
-    if on_conflict not in ("surface", "rescan"):
-        raise ValueError("on_conflict must be 'surface' or 'rescan'")
-    if on_conflict == "rescan":
-        # snapshot-isolation serial re-execution (round 8): fresh scan,
-        # fresh touched files / DV coordinates / rewritten images
-        return retry(
-            lambda: update_delta_rows(
-                spark, path, predicate, set_exprs, strategy
-            )
-        )
     fields = json.loads(meta["schemaString"])["fields"]
     table_cols = [f["name"] for f in fields]
     bad = [c for c in set_exprs if c not in table_cols]
@@ -1958,7 +1800,6 @@ def update_delta_rows(
             state,
             updated.select("__fp", "__pos"),
             updated.select(*table_cols),
-            abs_to_rel,
             "update",
         )
     new_df = target.filter(F.col("__fp").isin(touched_abs)).select(
@@ -2020,18 +1861,8 @@ def rename_delta_column(path: str, old: str, new: str) -> int:
     Refused: a ``new`` name already in the schema, and foreign tables.
     Returns the committed version."""
     log_dir = os.path.join(path, "_delta_log")
-    state = _replay_state(log_dir)
-    if state["version"] is None:
-        raise FileNotFoundError(f"no Delta table at {path}")
+    state = _owned(_replay_state(log_dir), path)
     meta = state["meta"]
-    if not meta or (meta.get("configuration") or {}).get(
-        "writer"
-    ) != _WRITER_TAG:
-        raise NotImplementedError(
-            "refusing to rename a column on a Delta table created by "
-            "another writer: use the delta-spark connector"
-        )
-    _check_commit_coordinator(meta)
     schema = json.loads(meta["schemaString"])
     names = [f["name"] for f in schema["fields"]]
     if old not in names:
@@ -2098,18 +1929,8 @@ def drop_delta_column(path: str, name: str) -> int:
     Refused: partition columns, the last remaining column. Returns the
     committed version."""
     log_dir = os.path.join(path, "_delta_log")
-    state = _replay_state(log_dir)
-    if state["version"] is None:
-        raise FileNotFoundError(f"no Delta table at {path}")
+    state = _owned(_replay_state(log_dir), path)
     meta = state["meta"]
-    if not meta or (meta.get("configuration") or {}).get(
-        "writer"
-    ) != _WRITER_TAG:
-        raise NotImplementedError(
-            "refusing to drop a column on a Delta table created by "
-            "another writer: use the delta-spark connector"
-        )
-    _check_commit_coordinator(meta)
     schema = json.loads(meta["schemaString"])
     names = [f["name"] for f in schema["fields"]]
     if name not in names:
@@ -2394,17 +2215,7 @@ def vacuum_delta(
     from .roaring import z85_decode
 
     log_dir = os.path.join(path, "_delta_log")
-    state = _replay_state(log_dir)
-    if state["version"] is None:
-        raise FileNotFoundError(f"no Delta table at {path}")
-    meta = state["meta"]
-    if not meta or (meta.get("configuration") or {}).get(
-        "writer"
-    ) != _WRITER_TAG:
-        raise NotImplementedError(
-            "refusing to vacuum a Delta table created by another writer: "
-            "use the delta-spark connector"
-        )
+    state = _owned(_replay_state(log_dir), path, commits=False)
     now = int(time.time() * 1000) if now_ms is None else now_ms
     cutoff = now - retention_ms
 
@@ -2652,17 +2463,8 @@ def checkpoint_delta_table(path: str) -> int:
     import pyarrow.parquet as _pq
 
     log_dir = os.path.join(path, "_delta_log")
-    state = _replay_state(log_dir)
-    if state["version"] is None:
-        raise FileNotFoundError(f"no Delta table at {path}")
+    state = _owned(_replay_state(log_dir), path, commits=False)
     meta = state["meta"]
-    if not meta or (meta.get("configuration") or {}).get(
-        "writer"
-    ) != _WRITER_TAG:
-        raise NotImplementedError(
-            "refusing to checkpoint a Delta table created by another "
-            "writer: use the delta-spark connector"
-        )
     version = state["version"]
 
     dv_t = pa.struct(

@@ -485,6 +485,23 @@ def _load_meta(
     return meta, v
 
 
+def _owned_meta(path: str, allow_v3: bool = False) -> tuple[dict, int]:
+    """``(meta, version)`` of the head of ``path`` once the table is one
+    THIS writer created — the ownership guard of every Iceberg verb. A
+    missing table raises FileNotFoundError; a table another engine created
+    raises NotImplementedError (its features could be silently dropped).
+    ``allow_v3`` as in :func:`_load_meta`."""
+    meta, ver = _load_meta(os.path.join(path, "metadata"), allow_v3)
+    if meta is None:
+        raise FileNotFoundError(f"no Iceberg table at {path}")
+    if meta.get("properties", {}).get("writer") != _WRITER_TAG:
+        raise NotImplementedError(
+            "refusing to modify an Iceberg table created by another "
+            "writer: use the iceberg-spark-runtime connector"
+        )
+    return meta, ver
+
+
 # identity partitioning: avro encoding for partition-record values by
 # iceberg type; partition columns outside this map are refused
 _PARTITION_AVRO_TYPES = {
@@ -1114,22 +1131,11 @@ def write_iceberg_append(
         PartField,
         parse_partition_by,
         resolve_part_field,
-        spec_field_to_part_field,
     )
 
     pfs: list[PartField] = []
     if meta is not None:
-        spec_fields = (meta.get("partition-specs") or [{}])[
-            meta.get("default-spec-id", 0)
-        ].get("fields", [])
-        if spec_fields:
-            schema_fields = (meta.get("schemas") or [{}])[0].get(
-                "fields", []
-            )
-            pfs = [
-                spec_field_to_part_field(f, schema_fields)
-                for f in spec_fields
-            ]
+        pfs = _table_part_fields(meta)
     elif partition_by:
         sch = _iceberg_schema(df.schema)
         if sch is None:
@@ -1413,157 +1419,226 @@ def write_iceberg_append(
 _MAX_DELETE_ROWS = 1_000_000
 
 
-def write_iceberg_position_deletes(
-    spark, path: str, condition, on_conflict: str = "surface"
+def _table_part_fields(meta: dict) -> list:
+    """The default partition spec of ``meta`` as
+    :class:`~.iceberg_transforms.PartField` s (empty when unpartitioned)."""
+    from .iceberg_transforms import spec_field_to_part_field
+
+    spec_fields = (meta.get("partition-specs") or [{}])[
+        meta.get("default-spec-id", 0)
+    ].get("fields", [])
+    schema_fields = (meta.get("schemas") or [{}])[0].get("fields", [])
+    return [spec_field_to_part_field(f, schema_fields) for f in spec_fields]
+
+
+def _delete_coords(rows: DataFrame, what: str) -> "list[tuple[str, int]]":
+    """The (data file, position) coordinates of ``rows`` — a live scan
+    kept with its ``__fp``/``__pos`` columns, filtered to the rows to
+    delete — collected to the driver, sorted as the spec recommends for
+    position-delete files, and capped at ``_MAX_DELETE_ROWS``."""
+    hits = rows.select("__fp", "__pos").limit(_MAX_DELETE_ROWS + 1).collect()
+    if len(hits) > _MAX_DELETE_ROWS:
+        raise NotImplementedError(
+            f"{what} touches more than {_MAX_DELETE_ROWS} rows: use the "
+            "iceberg-spark-runtime connector (distributed delete writes)"
+        )
+    return sorted((r["__fp"], r["__pos"]) for r in hits)
+
+
+def _position_deletes(coords: "list[tuple[str, int]]"):
+    """The rows of a position-delete file for ``coords``."""
+    import pyarrow as pa
+
+    return pa.table(
+        {
+            "file_path": pa.array([fp for fp, _ in coords], pa.string()),
+            "pos": pa.array([pos for _, pos in coords], pa.int64()),
+        }
+    )
+
+
+def _equality_deletes(keys: DataFrame, what: str):
+    """The rows of an equality-delete file: the distinct key tuples of
+    ``keys`` (its columns are the equality columns), sorted so the file
+    contents are deterministic, capped at ``_MAX_DELETE_ROWS``."""
+    tbl = keys.distinct().limit(_MAX_DELETE_ROWS + 1).toArrow()
+    if tbl.num_rows > _MAX_DELETE_ROWS:
+        raise NotImplementedError(
+            f"{what} with more than {_MAX_DELETE_ROWS} distinct keys: use "
+            "the iceberg-spark-runtime connector (distributed delete writes)"
+        )
+    return tbl.sort_by([(c, "ascending") for c in keys.columns])
+
+
+def _commit_row_delta(
+    path: str,
+    meta: dict,
+    ver: int,
+    summary: dict,
+    basis: "set[str] | None",
+    new_files: list = (),
+    delete: "tuple | None" = None,
+    manifests=None,
+    txn: "tuple[str, int] | None" = None,
+    updates: "dict | None" = None,
 ) -> int:
+    """The one commit tail of the row-level verbs (position and equality
+    DELETE, MERGE, UPDATE, and the v3 deletion-vector writers): ONE
+    snapshot on top of ``meta`` (version ``ver``) whose added files all
+    commit under one sequence number. Returns the new snapshot id.
+
+    The snapshot lists the head's manifests, one manifest of
+    ``new_files`` (:func:`_stage_data_files` tuples, staged by the verb)
+    and one delete manifest for ``delete`` — ``(content, rows, equality
+    ids)``, written here as one driver-side parquet file (content 1 =
+    position deletes, 2 = equality deletes). The deletion-vector writers
+    pass ``manifests(snap_id, seq, staged)`` instead: it returns the
+    whole list (:func:`_commit_snapshot` rows) and adds each file it
+    writes to ``staged``. ``summary`` takes ``txn``'s idempotence marker;
+    ``updates`` merges into the new metadata.
+
+    ``basis`` decides a lost CAS. None surfaces every conflict. A set
+    retries on the winner's head after :func:`_retry_head` validation:
+    a non-empty set names the data files the verb's coordinates
+    reference (still live, and no delete content added over them); an
+    empty set marks a DECLARATIVE commit, which re-applies at the new
+    head's sequence — the serial order "winner first, then this verb".
+    When the reloaded head already records ``txn``, the winner was this
+    very transaction and its snapshot id returns.
+
+    One discard rule: every file this commit wrote is removed when
+    staging fails before the first swap, or when a conflict leaves the
+    tail; each lost attempt removes its own manifests. When the swap
+    raises anything else its outcome is unknown — the head may reference
+    the files — so they stay."""
+    import pyarrow.parquet as pq
+
+    meta_dir = os.path.join(path, "metadata")
+    staged = [f[0] for f in new_files]
+    if delete is not None:
+        kind = "delete" if delete[0] == 1 else "eq-delete"
+        del_file = os.path.join(
+            path, "data", f"{kind}-{uuid.uuid4().hex[:16]}.parquet"
+        )
+        staged.append(del_file)
+    pre = len(staged)  # files before this point outlive a lost attempt
+    swapping = False  # True while an attempt's swap may have landed
+    if txn is not None:
+        summary = {
+            **summary,
+            "txn-app": txn[0],
+            "txn-version": str(int(txn[1])),
+        }
+
+    def rows(snap_id: int, seq: int) -> list:
+        nonlocal swapping
+        if manifests is not None:
+            out = manifests(snap_id, seq, staged)
+        else:
+            spec_id = _default_spec_id(meta)
+            out = _base_manifests(meta)
+            if new_files:
+                part_fields = [
+                    (pf.name, pf.value_type) for pf in _table_part_fields(meta)
+                ]
+                data_manifest = _write_data_manifest(
+                    os.path.join(meta_dir, f"m-{snap_id}.avro"),
+                    snap_id,
+                    new_files,
+                    part_fields,
+                    meta["schemas"][0],
+                )
+                out.append((data_manifest, 0, spec_id))
+            if delete is not None:
+                content, tbl, equality_ids = delete
+                delete_manifest = _write_delete_manifest(
+                    meta_dir,
+                    snap_id,
+                    del_file,
+                    content,
+                    tbl.num_rows,
+                    equality_ids,
+                )
+                out.append((delete_manifest, 1, spec_id))
+        swapping = True
+        return out
+
+    def attempt() -> int:
+        return _commit_snapshot(
+            meta_dir, meta, ver, rows, summary, staged, updates=updates
+        )
+
+    def revalidate(conflict: CommitConflict) -> "int | None":
+        nonlocal meta, ver, swapping
+        # the attempt lost: its manifests + list embed the lost snap id
+        swapping = False
+        discard(staged[pre:])
+        del staged[pre:]
+        head = None
+        if basis is not None:
+            head = _retry_head(
+                path,
+                meta,
+                touched=basis or None,
+                forbid_new_deletes=bool(basis),
+            )
+        if head is None:
+            raise conflict
+        meta, ver = head
+        if _txn_already_committed(meta, txn):
+            discard(staged)
+            return meta["current-snapshot-id"]
+        return None
+
+    try:
+        if delete is not None:
+            pq.write_table(delete[1], del_file)
+        return retry(attempt, revalidate)
+    except CommitConflict:
+        discard(staged)
+        raise
+    except BaseException:
+        if not swapping:
+            discard(staged)
+        raise
+
+
+def write_iceberg_position_deletes(spark, path: str, condition) -> int:
     """Merge-on-read DELETE: commit a v2 POSITION delete file marking every
     currently-live row matching ``condition`` (a Column predicate over the
     table's columns). Returns the new snapshot id.
 
-    ``on_conflict="rescan"`` (round 8, default ``"surface"``): when a
-    lost CAS fails validated retry (the winner rewrote/masked the
-    touched files, so the staged (file,pos) coordinates are stale),
-    re-run the whole delete against the winner's head instead of
-    raising — the fresh scan re-derives coordinates, i.e.
-    snapshot-isolation serial re-execution (``commit_retry.retry``).
-
     The matching rows' (file_path, pos) coordinates come from the hidden
-    ``_metadata`` columns of a distributed scan (existing position deletes
-    are applied first, so re-deleting already-dead rows is a no-op); the
-    delete file itself is KB-scale driver-written parquet, sorted by
-    (file_path, pos) as the spec recommends. Same single-writer /
-    fail-fast scope as :func:`write_iceberg_append`.
-    """
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
+    ``_metadata`` columns of a distributed scan (existing position and
+    equality deletes are applied first, so re-deleting already-dead rows
+    is a no-op); the delete file itself is KB-scale driver-written
+    parquet, sorted by (file_path, pos) as the spec recommends. Same
+    single-writer / fail-fast scope as :func:`write_iceberg_append`.
 
+    A lost CAS retries after ``_retry_head`` validation iff every
+    referenced data file is still live at the head AND the head gained no
+    delete content over those files (a concurrent UPDATE keeps the files
+    live while rewriting row images the coordinates can't reach). When
+    validation fails the conflict surfaces;
+    ``commit_retry.recompute(write_iceberg_position_deletes)`` re-runs
+    the whole delete against the winner's head instead — a fresh scan
+    re-derives the coordinates (snapshot-isolation serial
+    re-execution)."""
     from .readers import _iceberg_live_scan
 
-    if on_conflict not in ("surface", "rescan"):
-        raise ValueError("on_conflict must be 'surface' or 'rescan'")
-    if on_conflict == "rescan":
-        return retry(
-            lambda: write_iceberg_position_deletes(spark, path, condition)
-        )
-    meta_dir = os.path.join(path, "metadata")
-    meta, ver = _load_meta(meta_dir)
-    if meta is None:
-        raise FileNotFoundError(f"no Iceberg table at {path}")
-    if meta.get("properties", {}).get("writer") != _WRITER_TAG:
-        raise NotImplementedError(
-            "refusing to modify an Iceberg table created by another writer: "
-            "use the iceberg-spark-runtime connector"
-        )
-    # the shared live scan keeps the (file, pos) coordinates resolvable and
-    # applies every existing position AND equality delete first, so deleting
-    # already-dead rows is a no-op
-    data = _iceberg_live_scan(spark, path, keep_coords=True)
-    hits = (
-        data.filter(condition)
-        .select(F.col("__fp").alias("file_path"), F.col("__pos").alias("pos"))
-        .limit(_MAX_DELETE_ROWS + 1)
-        .collect()
+    meta, ver = _owned_meta(path)
+    coords = _delete_coords(
+        _iceberg_live_scan(spark, path, keep_coords=True).filter(condition),
+        "delete",
     )
-    if len(hits) > _MAX_DELETE_ROWS:
-        raise NotImplementedError(
-            f"delete touches more than {_MAX_DELETE_ROWS} rows: use the "
-            "iceberg-spark-runtime connector (distributed delete writes)"
-        )
-    rows = sorted((r.file_path, r.pos) for r in hits)
-
-    del_file = os.path.join(
-        os.path.join(path, "data"), f"delete-{uuid.uuid4().hex[:16]}.parquet"
-    )
-    pq.write_table(
-        pa.table(
-            {
-                "file_path": pa.array([r[0] for r in rows], pa.string()),
-                "pos": pa.array([r[1] for r in rows], pa.int64()),
-            }
-        ),
-        del_file,
-    )
-
-    return _commit_delete_file(
+    return _commit_row_delta(
+        path,
         meta,
         ver,
-        meta_dir,
-        del_file,
-        n_rows=len(rows),
-        file_content=1,
-        path=path,
-        touched={r[0] for r in rows},
+        {"operation": "delete"},
+        {fp for fp, _ in coords},
+        delete=(1, _position_deletes(coords), None),
     )
-
-
-def _commit_delete_file(
-    meta: dict,
-    ver: int,
-    meta_dir: str,
-    del_file: str,
-    n_rows: int,
-    file_content: int,
-    equality_ids: list[int] | None = None,
-    path: str | None = None,
-    touched: "set[str] | None" = None,
-) -> int:
-    """Shared delete-commit tail of the position- and equality-delete
-    writers: one manifest Avro, one manifest-list Avro, one metadata.json
-    bump — all driver-side KB-scale. ``file_content`` is the spec's
-    data_file content code (1=position deletes, 2=equality deletes).
-
-    A lost CAS auto-retries after ``_retry_head`` validation (round 7):
-    position deletes retry iff every referenced data file (``touched``)
-    is still live at the head AND the head gained no delete content over
-    those files (``forbid_new_deletes`` — a concurrent UPDATE keeps the
-    files live while rewriting row images our coordinates can't reach;
-    round-7 advisor); equality deletes are declarative (``touched=None``)
-    and re-apply at the new head's sequence — the serial order "winner
-    first, then this delete". A failed validation deletes the staged
-    delete file and surfaces the conflict."""
-    staged: list[str] = []
-
-    def manifests(snap_id: int, _seq: int) -> list:
-        manifest = _write_delete_manifest(
-            meta_dir, snap_id, del_file, file_content, n_rows, equality_ids
-        )
-        return _base_manifests(meta) + [
-            (manifest, 1, _default_spec_id(meta))  # delete manifest
-        ]
-
-    def attempt() -> int:
-        return _commit_snapshot(
-            meta_dir, meta, ver, manifests, {"operation": "delete"}, staged
-        )
-
-    def revalidate(conflict: CommitConflict) -> None:
-        nonlocal meta, ver
-        # this attempt's manifest + list embed the lost snap id
-        discard(staged)
-        # Position deletes (touched set) must ALSO reject heads that
-        # gained delete content over the touched files: a concurrent
-        # UPDATE keeps those files live (it masks rows via new position
-        # deletes and adds rewritten image files), so the live-file
-        # check alone would pass while rows whose rewritten images still
-        # match our predicate silently escape the retried (file,pos)
-        # coordinates (round-7 advisor).
-        reloaded = (
-            _retry_head(
-                path, meta, touched=touched, forbid_new_deletes=bool(touched)
-            )
-            if path is not None
-            else None
-        )
-        if reloaded is None:
-            raise conflict
-        meta, ver = reloaded
-
-    try:
-        return retry(attempt, revalidate)
-    except IcebergCommitConflict:
-        discard([del_file])
-        raise
 
 
 def write_iceberg_equality_deletes(spark, path: str, keys: DataFrame) -> int:
@@ -1583,19 +1658,10 @@ def write_iceberg_equality_deletes(spark, path: str, keys: DataFrame) -> int:
     (present unless the table was created with complex-typed columns).
     Same single-writer / fail-fast / KB-scale-commit scope as the other
     writers; the delete parquet is driver-written (capped at
-    ``_MAX_DELETE_ROWS`` distinct keys).
+    ``_MAX_DELETE_ROWS`` distinct keys). The commit is declarative: a lost
+    CAS re-applies it at the winner's sequence.
     """
-    import pyarrow.parquet as pq
-
-    meta_dir = os.path.join(path, "metadata")
-    meta, ver = _load_meta(meta_dir)
-    if meta is None:
-        raise FileNotFoundError(f"no Iceberg table at {path}")
-    if meta.get("properties", {}).get("writer") != _WRITER_TAG:
-        raise NotImplementedError(
-            "refusing to modify an Iceberg table created by another writer: "
-            "use the iceberg-spark-runtime connector"
-        )
+    meta, ver = _owned_meta(path)
     schemas = meta.get("schemas") or []
     if not schemas:
         raise NotImplementedError(
@@ -1612,31 +1678,17 @@ def write_iceberg_equality_deletes(spark, path: str, keys: DataFrame) -> int:
         )
     if not keys.columns:
         raise ValueError("keys DataFrame has no columns")
-    equality_ids = [name_to_id[c] for c in keys.columns]
-
-    tbl = keys.distinct().limit(_MAX_DELETE_ROWS + 1).toArrow()
-    if tbl.num_rows > _MAX_DELETE_ROWS:
-        raise NotImplementedError(
-            f"equality delete with more than {_MAX_DELETE_ROWS} distinct "
-            "keys: use the iceberg-spark-runtime connector (distributed "
-            "delete writes)"
-        )
-    # deterministic file contents: sort the key tuples
-    tbl = tbl.sort_by([(c, "ascending") for c in keys.columns])
-    del_file = os.path.join(
-        os.path.join(path, "data"), f"eq-delete-{uuid.uuid4().hex[:16]}.parquet"
-    )
-    pq.write_table(tbl, del_file)
-    return _commit_delete_file(
+    return _commit_row_delta(
+        path,
         meta,
         ver,
-        meta_dir,
-        del_file,
-        n_rows=tbl.num_rows,
-        file_content=2,
-        equality_ids=equality_ids,
-        path=path,
-        touched=None,  # declarative: re-applies at the new head's seq
+        {"operation": "delete"},
+        set(),
+        delete=(
+            2,
+            _equality_deletes(keys, "equality delete"),
+            [name_to_id[c] for c in keys.columns],
+        ),
     )
 
 
@@ -1649,7 +1701,6 @@ def merge_iceberg_rows(
     when_not_matched: str = "insert",
     file_format: str = "parquet",
     txn: "tuple[str, int] | None" = None,
-    on_conflict: str = "surface",
 ) -> int:
     """Merge-on-read MERGE (upsert) into the Iceberg v2 table at ``path``
     as ONE ATOMIC ROW-DELTA SNAPSHOT: the equality-delete file naming the
@@ -1694,7 +1745,9 @@ def merge_iceberg_rows(
     head-independent. Every OTHER mode's write set was computed against
     key membership (it does not commute): staged files are removed and
     :class:`IcebergCommitConflict` propagates — re-run the merge against
-    the winner's state. Scope: source schema == table schema (merge
+    the winner's state (``commit_retry.recompute(merge_iceberg_rows)``;
+    ``txn`` still short-circuits a redelivered batch on each attempt).
+    Scope: source schema == table schema (merge
     never evolves it), parquet or avro (``file_format``) data files
     (avro partitioned or not, like appends since round 6), delete file capped at
     ``_MAX_DELETE_ROWS`` distinct keys. Partitioned targets fan the
@@ -1704,7 +1757,6 @@ def merge_iceberg_rows(
     Returns the committed snapshot id."""
     import functools
 
-    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     if when_matched not in ("update", "delete"):
@@ -1715,37 +1767,11 @@ def merge_iceberg_rows(
         raise ValueError(
             f"file_format must be parquet or avro: {file_format!r}"
         )
-    if on_conflict not in ("surface", "rescan"):
-        raise ValueError("on_conflict must be 'surface' or 'rescan'")
-    if on_conflict == "rescan":
-        # snapshot-isolation serial re-execution (round 8) for the
-        # decision-dependent modes validated retry can't absorb: the
-        # whole merge re-runs against the winner's head (fresh key
-        # membership, fresh ambiguity probe); txn idempotency still
-        # short-circuits redelivered batches on each attempt
-        return retry(
-            lambda: merge_iceberg_rows(
-                spark, path, source, on, when_matched,
-                when_not_matched, file_format, txn,
-            )
-        )
     keys = list(on)
     if not keys:
         raise ValueError("merge needs at least one ON key column")
 
-    meta_dir = os.path.join(path, "metadata")
-    data_dir = os.path.join(path, "data")
-    meta, ver = _load_meta(meta_dir)
-    if meta is None:
-        raise FileNotFoundError(
-            f"no Iceberg table at {path} (merge needs an existing table; "
-            "create it with write_iceberg_append)"
-        )
-    if meta.get("properties", {}).get("writer") != _WRITER_TAG:
-        raise NotImplementedError(
-            "refusing to merge into an Iceberg table created by another "
-            "writer: use the iceberg-spark-runtime connector"
-        )
+    meta, ver = _owned_meta(path)
     if _txn_already_committed(meta, txn):
         # redelivered batch (same semantics as write_iceberg_append's
         # txn): the summary marker proves this (app, version) landed
@@ -1785,20 +1811,6 @@ def merge_iceberg_rows(
                 "avro merge data files support primitive "
                 "int/long/float/double/string/boolean columns only"
             )
-    # partitioned targets: resolve the spec so the inserted rows fan out
-    # with partition records (the equality-delete side is partition-
-    # independent — the reader applies it globally by key)
-    from .iceberg_transforms import spec_field_to_part_field
-
-    pfs = []
-    spec_fields = (meta.get("partition-specs") or [{}])[
-        meta.get("default-spec-id", 0)
-    ].get("fields", [])
-    if spec_fields:
-        pfs = [
-            spec_field_to_part_field(f, table_fields) for f in spec_fields
-        ]
-    part_fields = [(pf.name, pf.value_type) for pf in pfs]
     table_cols = [f["name"] for f in table_fields]
     src = source.select(*table_cols)
 
@@ -1850,107 +1862,38 @@ def merge_iceberg_rows(
     nonnull = functools.reduce(
         lambda a, b: a & b, [F.col(k).isNotNull() for k in keys]
     )
-    del_tbl = (
-        del_src.filter(nonnull)
-        .select(*keys)
-        .distinct()
-        .limit(_MAX_DELETE_ROWS + 1)
-        .toArrow()
+    del_tbl = _equality_deletes(
+        del_src.filter(nonnull).select(*keys), "merge"
     )
-    if del_tbl.num_rows > _MAX_DELETE_ROWS:
-        raise NotImplementedError(
-            f"merge touches more than {_MAX_DELETE_ROWS} distinct keys: "
-            "use the iceberg-spark-runtime connector (distributed delete "
-            "writes)"
+    # stage the data files (distributed write; zero-row shards dropped,
+    # partitioned targets fan out with partition records)
+    new_files = []
+    if rows is not None:
+        new_files = _stage_data_files(
+            cluster(rows, ()),
+            path,
+            os.path.join(path, "data"),
+            _table_part_fields(meta),
+            file_format,
+            drop_empty=True,
         )
-    del_tbl = del_tbl.sort_by([(c, "ascending") for c in keys])
-
-    # stage the data files (distributed write; zero-row shards dropped)
-    new_files: list[tuple[str, dict | None, str, int | None]] = []
-    del_file: str | None = None
-    staged_ok = False
-    try:
-        if rows is not None:
-            new_files = _stage_data_files(
-                cluster(rows, ()),
-                path,
-                data_dir,
-                pfs,
-                file_format,
-                drop_empty=True,
-            )
-        if del_tbl.num_rows:
-            del_file = os.path.join(
-                data_dir, f"eq-delete-{uuid.uuid4().hex[:16]}.parquet"
-            )
-            pq.write_table(del_tbl, del_file)
-        if not new_files and del_file is None:
-            raise ValueError(
-                "merge changed nothing (empty source, or no matching "
-                "keys with inserts ignored)"
-            )
-
-        staged: list[str] = []
-
-        def manifests(snap_id: int, _seq: int) -> list:
-            rows_ = _base_manifests(meta)
-            if new_files:
-                manifest = os.path.join(meta_dir, f"m-{snap_id}.avro")
-                _write_data_manifest(
-                    manifest, snap_id, new_files, part_fields, schemas[0]
-                )
-                rows_.append((manifest, 0, _default_spec_id(meta)))
-            if del_file is not None:
-                dmanifest = _write_delete_manifest(
-                    meta_dir,
-                    snap_id,
-                    del_file,
-                    2,
-                    del_tbl.num_rows,
-                    [name_to_id[c] for c in keys],
-                )
-                rows_.append((dmanifest, 1, _default_spec_id(meta)))
-            return rows_
-
-        def attempt() -> int:
-            nonlocal staged_ok
-            summary = {"operation": "overwrite"}
-            if txn is not None:
-                summary["txn-app"] = txn[0]
-                summary["txn-version"] = str(int(txn[1]))
-            snap_id = _commit_snapshot(
-                meta_dir, meta, ver, manifests, summary, staged
-            )
-            staged_ok = True
-            return snap_id
-
-        def revalidate(conflict: CommitConflict) -> int | None:
-            nonlocal meta, ver
-            # drop this attempt's manifests/list (they embed the lost
-            # snap id); the staged data/delete files are head-independent
-            # and reusable on retry
-            discard(staged)
-            reloaded = _retry_head(path, meta) if retryable else None
-            if reloaded is None:
-                raise conflict
-            meta, ver = reloaded
-            if _txn_already_committed(meta, txn):
-                # the CAS winner carried this very txn (redelivered batch
-                # racing itself): nothing to commit; the finally block
-                # cleans the staged files
-                return meta["current-snapshot-id"]
-
-        return retry(attempt, revalidate)
-    finally:
-        if not staged_ok:
-            # lost CAS or staging failure: remove everything this merge
-            # moved into the table directory (none of it is referenced;
-            # manifest/manifest-list debris in metadata/ is what
-            # remove_iceberg_orphan_files sweeps)
-            discard(
-                [p for p, _pv, _fmt, _n in new_files]
-                + ([del_file] if del_file else [])
-            )
+    if not new_files and not del_tbl.num_rows:
+        raise ValueError(
+            "merge changed nothing (empty source, or no matching "
+            "keys with inserts ignored)"
+        )
+    return _commit_row_delta(
+        path,
+        meta,
+        ver,
+        {"operation": "overwrite"},
+        set() if retryable else None,
+        new_files,
+        (2, del_tbl, [name_to_id[c] for c in keys])
+        if del_tbl.num_rows
+        else None,
+        txn=txn,
+    )
 
 
 def update_iceberg_rows(
@@ -1958,7 +1901,6 @@ def update_iceberg_rows(
     path: str,
     predicate,
     set_exprs: dict[str, str],
-    on_conflict: str = "surface",
 ) -> int:
     """Merge-on-read UPDATE by predicate — the verb-matrix completion
     next to :func:`merge_iceberg_rows` (keyed upsert) and
@@ -1975,53 +1917,28 @@ def update_iceberg_rows(
     construction). Same bounded-collect posture as the delete writer
     (``_MAX_DELETE_ROWS``); unpartitioned + partitioned parquet tables
     (updated rows fan out to their — possibly new — partitions).
-    Raises if nothing matches. Returns the new snapshot id."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    Raises if nothing matches. Returns the new snapshot id.
+
+    A lost CAS retries only when the winner provably didn't touch the
+    basis: every file whose rows were re-written is still live AND the
+    winner added no delete content that could mask rows in them (the
+    rewritten images would resurrect an interleaved delete). Otherwise
+    the conflict surfaces; ``commit_retry.recompute(update_iceberg_rows)``
+    re-runs the whole UPDATE against the winner's head."""
     from pyspark.sql import functions as F
 
     from .readers import _iceberg_live_scan
 
-    if on_conflict not in ("surface", "rescan"):
-        raise ValueError("on_conflict must be 'surface' or 'rescan'")
-    if on_conflict == "rescan":
-        # snapshot-isolation serial re-execution (round 8): re-run the
-        # whole UPDATE against the winner's head — fresh scan, fresh
-        # coordinates, fresh rewritten images
-        return retry(
-            lambda: update_iceberg_rows(spark, path, predicate, set_exprs)
-        )
-    meta_dir = os.path.join(path, "metadata")
-    data_dir = os.path.join(path, "data")
-    meta, ver = _load_meta(meta_dir)
-    if meta is None:
-        raise FileNotFoundError(f"no Iceberg table at {path}")
-    if meta.get("properties", {}).get("writer") != _WRITER_TAG:
-        raise NotImplementedError(
-            "refusing to update an Iceberg table created by another "
-            "writer: use the iceberg-spark-runtime connector"
-        )
+    meta, ver = _owned_meta(path)
     schemas = meta.get("schemas") or []
     if not schemas:
         raise NotImplementedError(
             "update needs a field-id schema (complex-typed columns)"
         )
-    table_fields = schemas[0]["fields"]
-    table_cols = [f["name"] for f in table_fields]
+    table_cols = [f["name"] for f in schemas[0]["fields"]]
     bad = [c for c in set_exprs if c not in table_cols]
     if bad:
         raise ValueError(f"SET columns {bad} not in the table schema")
-    from .iceberg_transforms import spec_field_to_part_field
-
-    pfs = []
-    spec_fields = (meta.get("partition-specs") or [{}])[
-        meta.get("default-spec-id", 0)
-    ].get("fields", [])
-    if spec_fields:
-        pfs = [
-            spec_field_to_part_field(f, table_fields) for f in spec_fields
-        ]
-    part_fields = [(pf.name, pf.value_type) for pf in pfs]
 
     pred = F.expr(predicate) if isinstance(predicate, str) else predicate
     live = _iceberg_live_scan(spark, path, keep_coords=True)
@@ -2036,100 +1953,25 @@ def update_iceberg_rows(
             for c in table_cols
         ],
     )
-    coords = (
-        matched.select(
-            F.col("__fp").alias("file_path"),
-            F.col("__pos").alias("pos"),
-        )
-        .limit(_MAX_DELETE_ROWS + 1)
-        .collect()
-    )
+    coords = _delete_coords(matched, "update")
     if not coords:
         raise ValueError(f"UPDATE predicate {predicate!r} matched no rows")
-    if len(coords) > _MAX_DELETE_ROWS:
-        raise NotImplementedError(
-            f"update touches more than {_MAX_DELETE_ROWS} rows: rewrite "
-            "the table (rewrite_iceberg_table) or use the connector"
-        )
-    rows = sorted((r.file_path, r.pos) for r in coords)
-
-    staged_ok = False
-    new_files: list[tuple[str, dict | None, str, int | None]] = []
-    del_file: str | None = None
-    try:
-        new_files = _stage_data_files(
-            cluster(matched.select(*table_cols), ()),
-            path,
-            data_dir,
-            pfs,
-            drop_empty=True,
-        )
-        del_file = os.path.join(
-            data_dir, f"delete-{uuid.uuid4().hex[:16]}.parquet"
-        )
-        pq.write_table(
-            pa.table(
-                {
-                    "file_path": pa.array(
-                        [r[0] for r in rows], pa.string()
-                    ),
-                    "pos": pa.array([r[1] for r in rows], pa.int64()),
-                }
-            ),
-            del_file,
-        )
-
-        staged: list[str] = []
-
-        def manifests(snap_id: int, _seq: int) -> list:
-            rows_ = _base_manifests(meta)
-            if new_files:
-                manifest = os.path.join(meta_dir, f"m-{snap_id}.avro")
-                _write_data_manifest(
-                    manifest, snap_id, new_files, part_fields, schemas[0]
-                )
-                rows_.append((manifest, 0, _default_spec_id(meta)))
-            dmanifest = _write_delete_manifest(
-                meta_dir, snap_id, del_file, 1, len(rows)
-            )
-            return rows_ + [(dmanifest, 1, _default_spec_id(meta))]
-
-        def attempt() -> int:
-            nonlocal staged_ok
-            snap_id = _commit_snapshot(
-                meta_dir,
-                meta,
-                ver,
-                manifests,
-                {"operation": "overwrite"},
-                staged,
-            )
-            staged_ok = True
-            return snap_id
-
-        def revalidate(conflict: CommitConflict) -> None:
-            nonlocal meta, ver
-            discard(staged)
-            # retry only when the winner provably didn't touch our basis:
-            # every file whose rows we re-wrote is still live AND the
-            # winner added no delete content that could mask rows in them
-            # (our rewritten images would resurrect an interleaved delete)
-            reloaded = _retry_head(
-                path,
-                meta,
-                touched={r[0] for r in rows},
-                forbid_new_deletes=True,
-            )
-            if reloaded is None:
-                raise conflict
-            meta, ver = reloaded
-
-        return retry(attempt, revalidate)
-    finally:
-        if not staged_ok:
-            discard(
-                [f[0] for f in new_files] + ([del_file] if del_file else [])
-            )
+    new_files = _stage_data_files(
+        cluster(matched.select(*table_cols), ()),
+        path,
+        os.path.join(path, "data"),
+        _table_part_fields(meta),
+        drop_empty=True,
+    )
+    return _commit_row_delta(
+        path,
+        meta,
+        ver,
+        {"operation": "overwrite"},
+        {fp for fp, _ in coords},
+        new_files,
+        (1, _position_deletes(coords), None),
+    )
 
 
 @recompute
@@ -2193,14 +2035,7 @@ def rewrite_iceberg_table(
 
     meta_dir = os.path.join(path, "metadata")
     data_dir = os.path.join(path, "data")
-    meta, ver = _load_meta(meta_dir)
-    if meta is None:
-        raise FileNotFoundError(f"no Iceberg table at {path}")
-    if meta.get("properties", {}).get("writer") != _WRITER_TAG:
-        raise NotImplementedError(
-            "refusing to rewrite an Iceberg table created by another "
-            "writer: use the iceberg-spark-runtime connector"
-        )
+    meta, ver = _owned_meta(path)
     bounds_schema = (meta.get("schemas") or [None])[0]
     kept_by_spec: dict[int, list] = {}
     frag_by_spec: dict[int, list] = {}
@@ -2471,14 +2306,7 @@ def rewrite_iceberg_manifests(path: str, min_manifests: int = 3) -> int:
     from .avro_lite import read_avro_file
 
     meta_dir = os.path.join(path, "metadata")
-    meta, ver = _load_meta(meta_dir)
-    if meta is None:
-        raise FileNotFoundError(f"no Iceberg table at {path}")
-    if meta.get("properties", {}).get("writer") != _WRITER_TAG:
-        raise NotImplementedError(
-            "refusing to rewrite manifests of an Iceberg table created "
-            "by another writer: use the iceberg-spark-runtime connector"
-        )
+    meta, ver = _owned_meta(path)
 
     staged: list[str] = []
 
@@ -2697,14 +2525,7 @@ def drop_iceberg_partition(
     if not parts:
         return None  # nothing requested: idempotent no-op
     meta_dir = os.path.join(path, "metadata")
-    meta, ver = _load_meta(meta_dir)
-    if meta is None:
-        raise FileNotFoundError(f"no Iceberg table at {path}")
-    if meta.get("properties", {}).get("writer") != _WRITER_TAG:
-        raise NotImplementedError(
-            "refusing to modify an Iceberg table created by another "
-            "writer: use the iceberg-spark-runtime connector"
-        )
+    meta, ver = _owned_meta(path)
     spec_keys: set = set()
     for s in meta.get("partition-specs") or []:
         for f in s.get("fields", []):
@@ -2835,14 +2656,7 @@ def expire_iceberg_snapshots(path: str, keep_last: int = 3) -> int:
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     meta_dir = os.path.join(path, "metadata")
-    meta, ver = _load_meta(meta_dir)
-    if meta is None:
-        raise FileNotFoundError(f"no Iceberg table at {path}")
-    if meta.get("properties", {}).get("writer") != _WRITER_TAG:
-        raise NotImplementedError(
-            "refusing to expire snapshots of an Iceberg table created by "
-            "another writer: use the iceberg-spark-runtime connector"
-        )
+    meta, ver = _owned_meta(path)
     snaps = sorted(meta["snapshots"], key=lambda s: s["sequence-number"])
     if len(snaps) <= keep_last:
         return 0
@@ -2950,14 +2764,7 @@ def remove_iceberg_orphan_files(
 
     meta_dir = os.path.join(path, "metadata")
     data_dir = os.path.join(path, "data")
-    meta, _ver = _load_meta(meta_dir)
-    if meta is None:
-        raise FileNotFoundError(f"no Iceberg table at {path}")
-    if meta.get("properties", {}).get("writer") != _WRITER_TAG:
-        raise NotImplementedError(
-            "refusing to clean an Iceberg table created by another "
-            "writer: use the iceberg-spark-runtime connector"
-        )
+    meta, _ver = _owned_meta(path)
     referenced: set[str] = set()
     for s in meta.get("snapshots") or []:
         ml = _local(s["manifest-list"])
@@ -3005,14 +2812,7 @@ def rollback_iceberg_table(path: str, snapshot_id: int) -> int:
     commit; raises if the snapshot does not exist (e.g. already
     expired) or is already current."""
     meta_dir = os.path.join(path, "metadata")
-    meta, ver = _load_meta(meta_dir, allow_v3=True)  # pointer-only verb
-    if meta is None:
-        raise FileNotFoundError(f"no Iceberg table at {path}")
-    if meta.get("properties", {}).get("writer") != _WRITER_TAG:
-        raise NotImplementedError(
-            "refusing to roll back an Iceberg table created by another "
-            "writer: use the iceberg-spark-runtime connector"
-        )
+    meta, ver = _owned_meta(path, allow_v3=True)  # pointer-only verb
     if not any(
         s["snapshot-id"] == snapshot_id for s in meta.get("snapshots", [])
     ):
@@ -3048,14 +2848,7 @@ def tag_iceberg_snapshot(
     would un-pin someone else's dataset), as does tagging a snapshot
     that does not exist. Returns the pinned snapshot id."""
     meta_dir = os.path.join(path, "metadata")
-    meta, ver = _load_meta(meta_dir, allow_v3=True)  # pointer-only verb
-    if meta is None:
-        raise FileNotFoundError(f"no Iceberg table at {path}")
-    if meta.get("properties", {}).get("writer") != _WRITER_TAG:
-        raise NotImplementedError(
-            "refusing to tag an Iceberg table created by another writer: "
-            "use the iceberg-spark-runtime connector"
-        )
+    meta, ver = _owned_meta(path, allow_v3=True)  # pointer-only verb
     if snapshot_id is None:
         snapshot_id = meta.get("current-snapshot-id")
     if not any(
@@ -3119,14 +2912,7 @@ def rename_iceberg_column(path: str, old: str, new: str) -> int:
     mapping (without file-level field ids a reused name would make old
     files ambiguous). Returns the new schema-id."""
     meta_dir = os.path.join(path, "metadata")
-    meta, ver = _load_meta(meta_dir)
-    if meta is None:
-        raise FileNotFoundError(f"no Iceberg table at {path}")
-    if meta.get("properties", {}).get("writer") != _WRITER_TAG:
-        raise NotImplementedError(
-            "refusing to rename a column on an Iceberg table created by "
-            "another writer: use the iceberg-spark-runtime connector"
-        )
+    meta, ver = _owned_meta(path)
     schemas = meta.get("schemas") or []
     if not schemas:
         raise ValueError("table has no field-id schema")
@@ -3201,14 +2987,7 @@ def drop_iceberg_column(path: str, name: str) -> int:
     names. Refused: partition-spec sources, the last remaining column.
     Returns the new schema-id."""
     meta_dir = os.path.join(path, "metadata")
-    meta, ver = _load_meta(meta_dir)
-    if meta is None:
-        raise FileNotFoundError(f"no Iceberg table at {path}")
-    if meta.get("properties", {}).get("writer") != _WRITER_TAG:
-        raise NotImplementedError(
-            "refusing to drop a column on an Iceberg table created by "
-            "another writer: use the iceberg-spark-runtime connector"
-        )
+    meta, ver = _owned_meta(path)
     schemas = meta.get("schemas") or []
     if not schemas:
         raise ValueError("table has no field-id schema")
@@ -3315,15 +3094,7 @@ def update_iceberg_partition_spec(
     from .iceberg_transforms import parse_partition_by, resolve_part_field
 
     meta_dir = os.path.join(path, "metadata")
-    meta, ver = _load_meta(meta_dir)
-    if meta is None:
-        raise FileNotFoundError(f"no Iceberg table at {path}")
-    if meta.get("properties", {}).get("writer") != _WRITER_TAG:
-        raise NotImplementedError(
-            "refusing to evolve the partition spec of an Iceberg table "
-            "created by another writer: use the iceberg-spark-runtime "
-            "connector"
-        )
+    meta, ver = _owned_meta(path)
     schemas = meta.get("schemas") or []
     if not schemas:
         raise NotImplementedError(
@@ -3428,14 +3199,7 @@ def move_iceberg_ref(path: str, name: str, snapshot_id: int) -> int:
     BRANCH ref (that is :func:`publish_iceberg_branch`'s job, with its
     fast-forward ancestry check). Returns ``snapshot_id``."""
     meta_dir = os.path.join(path, "metadata")
-    meta, ver = _load_meta(meta_dir, allow_v3=True)  # pointer-only verb
-    if meta is None:
-        raise FileNotFoundError(f"no Iceberg table at {path}")
-    if meta.get("properties", {}).get("writer") != _WRITER_TAG:
-        raise NotImplementedError(
-            "refusing to move a ref on an Iceberg table created by "
-            "another writer: use the iceberg-spark-runtime connector"
-        )
+    meta, ver = _owned_meta(path, allow_v3=True)  # pointer-only verb
     if not any(
         s["snapshot-id"] == snapshot_id for s in meta.get("snapshots", [])
     ):

@@ -215,18 +215,11 @@ def convert_iceberg_position_deletes_to_dvs(path: str) -> int:
     import pyarrow.parquet as pq
 
     from .avro_lite import read_avro_file
-    from .iceberg import _commit_metadata, _load_meta, _WRITER_TAG
+    from .iceberg import _commit_metadata, _commit_row_delta, _owned_meta
     from .readers import _iceberg_local_path
 
     meta_dir = os.path.join(path, "metadata")
-    meta, ver = _load_meta(meta_dir)  # _load_meta refuses v3+ already
-    if meta is None:
-        raise FileNotFoundError(f"no Iceberg table at {path}")
-    if meta.get("properties", {}).get("writer") != _WRITER_TAG:
-        raise NotImplementedError(
-            "refusing to convert an Iceberg table created by another "
-            "writer: use the iceberg-spark-runtime connector"
-        )
+    meta, ver = _owned_meta(path)  # refuses v3+ already
     cur_id = meta.get("current-snapshot-id")
     cur = next(
         (
@@ -290,14 +283,13 @@ def convert_iceberg_position_deletes_to_dvs(path: str) -> int:
             t.column("file_path").to_pylist(), t.column("pos").to_pylist()
         ):
             by_data_file.setdefault(fp, set()).add(int(p))
-    return _commit_dvs(
+    return _commit_row_delta(
         path,
-        meta_dir,
         meta,
         ver,
-        by_data_file,
-        keep_rows,
-        "replace",
+        {"operation": "replace"},
+        None,
+        manifests=_dv_manifests(path, meta, by_data_file, keep_rows),
         updates={"format-version": 3},
     )
 
@@ -337,32 +329,21 @@ def _dv_entry_schema() -> dict:
 MANIFEST_ENTRY_SCHEMA_V3_DV = _dv_entry_schema()
 
 
-def _commit_dvs(
-    path: str,
-    meta_dir: str,
-    meta: dict,
-    ver: int,
-    by_data_file: "dict[str, object]",
-    plan: list,
-    operation: str,
-    updates: "dict | None" = None,
-) -> int:
-    """Shared commit tail of the two DV writers (convert + DV delete):
-    one snapshot through ``iceberg._commit_snapshot`` whose manifest
-    list is ``plan`` — carried list rows, and ``(spec id, entries)``
-    pairs of surviving delete entries re-homed into a fresh manifest —
-    plus one new delete manifest pointing into ONE Puffin file with one
-    ``deletion-vector-v1`` blob per referenced data file.
-    ``updates`` merges into the new metadata (the convert path's
-    format-version bump). On any failure every file written for this
-    commit is removed before the error surfaces."""
+def _dv_manifests(
+    path: str, meta: dict, by_data_file: "dict[str, object]", plan: list
+):
+    """The per-attempt manifest list of the two DV writers (convert + DV
+    delete), for ``iceberg._commit_row_delta``: ``plan`` — carried list
+    rows, and ``(spec id, entries)`` pairs of surviving delete entries
+    re-homed into a fresh manifest — plus one new delete manifest
+    pointing into ONE Puffin file with one ``deletion-vector-v1`` blob
+    per referenced data file (``by_data_file``: data file → positions)."""
     from . import iceberg
     from .avro_lite import write_avro_file
-    from .commit_retry import discard
 
-    staged: list[str] = []
+    meta_dir = os.path.join(path, "metadata")
 
-    def written(snap_id: int, seq: int) -> list:
+    def written(snap_id: int, seq: int, staged: list) -> list:
         rows = []
         for i, item in enumerate(plan):
             if isinstance(item, dict):
@@ -419,19 +400,7 @@ def _commit_dvs(
         )
         return rows + [(dv_manifest, 1, iceberg._default_spec_id(meta))]
 
-    try:
-        return iceberg._commit_snapshot(
-            meta_dir,
-            meta,
-            ver,
-            written,
-            {"operation": operation},
-            staged,
-            updates=updates,
-        )
-    except Exception:
-        discard(staged)
-        raise
+    return written
 
 
 # --------------------------------------------------- v3 DV MOR delete
@@ -463,22 +432,10 @@ def write_iceberg_dv_deletes(spark, path: str, condition) -> "int | None":
     when a concurrent-writer deployment needs it). v2 position-delete
     FILES on a v3 table are a spec violation and refuse loudly."""
     from .avro_lite import read_avro_file
-    from .iceberg import (
-        _load_meta,
-        _MAX_DELETE_ROWS,
-        _WRITER_TAG,
-    )
+    from .iceberg import _commit_row_delta, _delete_coords, _owned_meta
     from .readers import _iceberg_live_scan, _iceberg_local_path
 
-    meta_dir = os.path.join(path, "metadata")
-    meta, ver = _load_meta(meta_dir, allow_v3=True)
-    if meta is None:
-        raise FileNotFoundError(f"no Iceberg table at {path}")
-    if meta.get("properties", {}).get("writer") != _WRITER_TAG:
-        raise NotImplementedError(
-            "refusing to modify an Iceberg table created by another "
-            "writer: use the iceberg-spark-runtime connector"
-        )
+    meta, ver = _owned_meta(path, allow_v3=True)
     if meta.get("format-version", 1) != 3:
         raise ValueError(
             "write_iceberg_dv_deletes needs a format-version-3 table: "
@@ -497,25 +454,15 @@ def write_iceberg_dv_deletes(spark, path: str, condition) -> "int | None":
     if cur is None:
         raise ValueError(f"Iceberg table at {path} has no current snapshot")
 
-    data = _iceberg_live_scan(spark, path, keep_coords=True)
-    hits = (
-        data.filter(condition)
-        .select("__fp", "__pos")
-        .limit(_MAX_DELETE_ROWS + 1)
-        .collect()
+    coords = _delete_coords(
+        _iceberg_live_scan(spark, path, keep_coords=True).filter(condition),
+        "delete",
     )
-    if len(hits) > _MAX_DELETE_ROWS:
-        raise NotImplementedError(
-            f"delete touches more than {_MAX_DELETE_ROWS} rows: use the "
-            "iceberg-spark-runtime connector (distributed delete writes)"
-        )
-    if not hits:
+    if not coords:
         return None
     new_by_file: dict[str, set] = {}
-    for r in hits:
-        new_by_file.setdefault(os.path.abspath(r["__fp"]), set()).add(
-            int(r["__pos"])
-        )
+    for fp, pos in coords:
+        new_by_file.setdefault(os.path.abspath(fp), set()).add(int(pos))
 
     # walk the delete manifests: find superseded DV entries for touched
     # files (their positions merge into the replacement), keep the rest
@@ -586,4 +533,11 @@ def write_iceberg_dv_deletes(spark, path: str, condition) -> "int | None":
             plan.append((m_spec, recs))
         # else: every entry superseded — the manifest leaves the list
 
-    return _commit_dvs(path, meta_dir, meta, ver, new_by_file, plan, "delete")
+    return _commit_row_delta(
+        path,
+        meta,
+        ver,
+        {"operation": "delete"},
+        None,
+        manifests=_dv_manifests(path, meta, new_by_file, plan),
+    )

@@ -14,6 +14,7 @@ import pytest
 
 from mysoftware_nocnetintel_spark.sources.catalog import (
     CatalogCommitConflict,
+    CatalogCommitter,
     FaultInjectingCommitter,
     FilesystemCommitter,
     get_committer,
@@ -304,3 +305,155 @@ def test_threaded_delta_appends_under_latency_double(spark, tmp_path):
     want = [0, 1] + [lo + j for lo in (10, 20, 30) for j in range(3)]
     got = sorted(r.id for r in read_delta_snapshot(spark, root).collect())
     assert got == sorted(want)
+
+
+# -------------------------------- a swap that lands, then reports failure
+
+
+class _LandsThenRaises(CatalogCommitter):
+    """A swap that lands and then raises — what
+    ``HttpCommitServiceCommitter`` reports for any reply other than
+    409/412: the commit's fate is unknown to the writer. Armed for one
+    commit."""
+
+    def __init__(self) -> None:
+        self.inner = FilesystemCommitter()
+        self.armed = False
+
+    def put_if_absent(self, final_path: str, payload: bytes) -> None:
+        self.inner.put_if_absent(final_path, payload)
+        if self.armed:
+            self.armed = False
+            raise RuntimeError("commit fate unknown")
+
+    def publish_hint(self, hint_path: str, value: str) -> None:
+        self.inner.publish_hint(hint_path, value)
+
+
+def _iceberg_head_files(root: str) -> list[str]:
+    """Every file the current Iceberg snapshot references: its manifest
+    list, the manifests, and their live data/delete files."""
+    from mysoftware_nocnetintel_spark.sources.avro_lite import read_avro_file
+    from mysoftware_nocnetintel_spark.sources.iceberg import _load_meta
+    from mysoftware_nocnetintel_spark.sources.readers import (
+        _iceberg_local_path,
+    )
+
+    meta, _ = _load_meta(os.path.join(root, "metadata"), allow_v3=True)
+    snap = next(
+        s
+        for s in meta["snapshots"]
+        if s["snapshot-id"] == meta["current-snapshot-id"]
+    )
+    files = [_iceberg_local_path(snap["manifest-list"])]
+    for m in read_avro_file(files[0])[1]:
+        files.append(_iceberg_local_path(m["manifest_path"]))
+        files += [
+            _iceberg_local_path(e["data_file"]["file_path"])
+            for e in read_avro_file(files[-1])[1]
+            if e.get("status") != 2
+        ]
+    return files
+
+
+def _delta_head_files(root: str) -> list[str]:
+    """Every live data file of the Delta head and its deletion-vector
+    file."""
+    from mysoftware_nocnetintel_spark.sources.delta import (
+        _dv_rel_path,
+        _replay_state,
+    )
+
+    live = _replay_state(os.path.join(root, "_delta_log"))["live"]
+    rels = list(live) + [
+        p for a in live.values() if (p := _dv_rel_path(a.get("deletionVector")))
+    ]
+    return [os.path.join(root, r) for r in rels]
+
+
+def _unknown_fate_case(spark, root: str, verb: str):
+    """Build the table for ``verb``; return (run the verb, expected
+    (id, val) rows afterwards)."""
+    from pyspark.sql import functions as F
+
+    from mysoftware_nocnetintel_spark.sources import delta as dl
+    from mysoftware_nocnetintel_spark.sources import iceberg as ice
+    from mysoftware_nocnetintel_spark.sources import puffin
+
+    base = [(i, f"v{i}") for i in range(6)]
+    upsert = [(0, "U"), (1, "U"), (100, "v100")]
+    src = spark.createDataFrame(upsert, "id bigint, val string")
+    merged = sorted(dict(base + upsert).items())
+    kept = base[3:]
+    if verb.startswith("delta"):
+        write_delta_append(_df(spark, 0, 6).coalesce(1), root)
+        if verb == "delta_delete":
+            return lambda: dl.delete_delta_rows(spark, root, "id < 3"), kept
+        strategy = "mor" if verb == "delta_mor_merge" else "cow"
+        return (
+            lambda: dl.merge_delta_rows(
+                spark, root, src, on=["id"], strategy=strategy
+            ),
+            merged,
+        )
+    write_iceberg_append(_df(spark, 0, 6).coalesce(1), root)
+    runs = {
+        "iceberg_position_delete": lambda: ice.write_iceberg_position_deletes(
+            spark, root, F.col("id") < 3
+        ),
+        "iceberg_equality_delete": lambda: ice.write_iceberg_equality_deletes(
+            spark, root, _df(spark, 0, 3).select("id")
+        ),
+        "iceberg_merge": lambda: ice.merge_iceberg_rows(
+            spark, root, src, on=["id"]
+        ),
+        "iceberg_update": lambda: ice.update_iceberg_rows(
+            spark, root, "id < 2", {"val": "'U'"}
+        ),
+        "iceberg_dv_delete": lambda: puffin.write_iceberg_dv_deletes(
+            spark, root, F.col("id") < 3
+        ),
+    }
+    if verb == "iceberg_dv_delete":
+        puffin.convert_iceberg_position_deletes_to_dvs(root)  # v3 bump
+    want = {
+        "iceberg_merge": merged,
+        "iceberg_update": [(0, "U"), (1, "U")] + base[2:],
+    }.get(verb, kept)
+    return runs[verb], want
+
+
+@pytest.mark.parametrize(
+    "verb",
+    [
+        "delta_delete",
+        "delta_merge",
+        "delta_mor_merge",
+        "iceberg_dv_delete",
+        "iceberg_equality_delete",
+        "iceberg_merge",
+        "iceberg_position_delete",
+        "iceberg_update",
+    ],
+)
+def test_unknown_fate_commit_keeps_its_files(spark, tmp_path, verb):
+    """A row-level verb whose swap landed but raised must not remove a
+    file the committed head references: the table reads back with the
+    change applied."""
+    root = str(tmp_path / verb)
+    run, want = _unknown_fate_case(spark, root, verb)
+    double = _LandsThenRaises()
+    with use_committer(double):
+        double.armed = True
+        with pytest.raises(RuntimeError, match="fate unknown"):
+            run()
+    if verb.startswith("delta"):
+        missing = [f for f in _delta_head_files(root) if not os.path.exists(f)]
+        got = read_delta_snapshot(spark, root)
+    else:
+        missing = [
+            f for f in _iceberg_head_files(root) if not os.path.exists(f)
+        ]
+        got = read_iceberg_snapshot(spark, root)
+    assert missing == []
+    assert sorted((r.id, r.val) for r in got.collect()) == want

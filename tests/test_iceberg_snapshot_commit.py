@@ -235,6 +235,12 @@ def _kernel_only_violations(tree: ast.AST) -> list[tuple[str, str]]:
         "snapshot id": "_commit_snapshot",
         "staged-file move": "_stage_data_files",
         "range clustering": "cluster",
+        "delete manifest write": "_commit_row_delta",
+        "deletion-vector file write": "_commit_mor_mask_and_add",
+    }
+    writers = {
+        "_write_delete_manifest": "delete manifest write",
+        "write_dv_file": "deletion-vector file write",
     }
     bad = []
     for fn in tree.body:
@@ -262,6 +268,10 @@ def _kernel_only_violations(tree: ast.AST) -> list[tuple[str, str]]:
             ):
                 found = "snapshot id"
             elif isinstance(node, ast.Call) and isinstance(
+                node.func, ast.Name
+            ):
+                found = writers.get(node.func.id)
+            elif isinstance(node, ast.Call) and isinstance(
                 node.func, ast.Attribute
             ):
                 if node.func.attr == "repartitionByRange":
@@ -272,6 +282,8 @@ def _kernel_only_violations(tree: ast.AST) -> list[tuple[str, str]]:
                     and node.func.value.id == "shutil"
                 ):
                     found = "staged-file move"
+                else:
+                    found = writers.get(node.func.attr)
             if found and fn.name != owners[found]:
                 bad.append((fn.name, found))
     return bad
@@ -301,10 +313,14 @@ def test_the_walk_flags_a_hand_built_snapshot():
         "    write_avro_file(mlist, MANIFEST_FILE_SCHEMA, rows)\n"
         "    snap = {'snapshot-id': snap_id, 'manifest-list': mlist}\n"
         "    shutil.move(staged, dest)\n"
+        "    _write_delete_manifest(meta_dir, snap_id, staged, 1, 0)\n"
+        "    roaring.write_dv_file(dest, [])\n"
         "    return df.repartitionByRange(8, 'x')\n"
     )
     assert sorted(w for _fn, w in _kernel_only_violations(tree)) == [
         "MANIFEST_FILE_SCHEMA write",
+        "delete manifest write",
+        "deletion-vector file write",
         "manifest-list record",
         "range clustering",
         "snapshot id",

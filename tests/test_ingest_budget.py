@@ -3,9 +3,10 @@ a Spark-job budget").
 
 Each verb runs at the ingest benchmark's shape — 2,000-row event batches,
 a MERGE of 200 corrections and 50 new rows, a 20-document batch through
-each index gate (MinHash text, Hamming media) — and may run at most its
-budgeted number of Spark jobs (``job_budget``, AQE off). A change that
-adds a pass to a verb fails here. An Iceberg read runs as many jobs after
+each index gate (MinHash text, Hamming media), and a row-level DELETE or
+UPDATE of the same 200 rows — and may run at most its budgeted number of
+Spark jobs (``job_budget``, AQE off). A change that adds a pass to a verb
+fails here. An Iceberg read runs as many jobs after
 three MERGEs as after one: its equality-delete files are one scan, not
 one schema inference each. Either gate registers a byte-small batch as
 one index file.
@@ -43,7 +44,14 @@ BUDGET = {
     "iceberg_merge": 3,
     "gate": 5,
     "media_gate": 6,
+    "delta_delete": 2,
+    "delta_mor_merge": 6,
+    "iceberg_delete": 2,
+    "iceberg_update": 3,
 }
+
+# the 200 rows a row-level verb deletes or updates, spread over the files
+FIXED = "event_id % 30 = 0"
 
 WORDS = [f"w{i}" for i in range(400)]
 
@@ -61,12 +69,16 @@ def _events_table(spark, root: str, fmt: str) -> None:
         append(_batch(spark, lo), root)
 
 
-def _merge(spark, root: str, fmt: str, step: int = 0) -> None:
+def _merge(
+    spark, root: str, fmt: str, step: int = 0, strategy: str = "cow"
+) -> None:
     """200 corrections spread over the table's files, 50 new rows."""
     fixes = _batch(spark, 0, n=6000).filter(f"event_id % 30 = {step}")
     source = fixes.unionByName(_batch(spark, 6000 + 50 * step, n=50))
     if fmt == "delta":
-        dl.merge_delta_rows(spark, root, source, on=["event_id"])
+        dl.merge_delta_rows(
+            spark, root, source, on=["event_id"], strategy=strategy
+        )
     else:
         ice.merge_iceberg_rows(spark, root, source, on=["event_id"])
 
@@ -79,10 +91,30 @@ def _run_append(spark, tmp_path, fmt):
     return lambda: append(batch, root)
 
 
-def _run_merge(spark, tmp_path, fmt):
+def _run_merge(spark, tmp_path, fmt, strategy="cow"):
     root = str(tmp_path / fmt)
     _events_table(spark, root, fmt)
-    return lambda: _merge(spark, root, fmt)
+    return lambda: _merge(spark, root, fmt, strategy=strategy)
+
+
+ROW_VERBS = {
+    "delta_delete": lambda spark, root: dl.delete_delta_rows(
+        spark, root, FIXED
+    ),
+    "iceberg_delete": lambda spark, root: ice.write_iceberg_position_deletes(
+        spark, root, F.expr(FIXED)
+    ),
+    "iceberg_update": lambda spark, root: ice.update_iceberg_rows(
+        spark, root, FIXED, {"value": "value + 1"}
+    ),
+}
+
+
+def _run_row_verb(spark, tmp_path, verb):
+    fmt = verb.split("_")[0]
+    root = str(tmp_path / fmt)
+    _events_table(spark, root, fmt)
+    return lambda: ROW_VERBS[verb](spark, root)
 
 
 def _docs(spark, rows):
@@ -152,6 +184,10 @@ def test_verb_runs_within_its_job_budget(aqe_off, job_budget, tmp_path, verb):
     spark = aqe_off
     if verb.endswith("_append"):
         run = _run_append(spark, tmp_path, verb.split("_")[0])
+    elif verb in ROW_VERBS:
+        run = _run_row_verb(spark, tmp_path, verb)
+    elif verb == "delta_mor_merge":
+        run = _run_merge(spark, tmp_path, "delta", strategy="mor")
     elif verb.endswith("_merge"):
         run = _run_merge(spark, tmp_path, verb.split("_")[0])
     else:
